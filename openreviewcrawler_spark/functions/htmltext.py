@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .urls import canonicalize_series
+
 _TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title>", re.IGNORECASE | re.DOTALL)
 _PARA_RE = re.compile(r"<p[^>]*>(.*?)</p>", re.IGNORECASE | re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]+>")
@@ -103,6 +105,19 @@ def with_outlinks(
     return df.withColumn(out_col, _links(F.col(html_col)))
 
 
+def _canonical_outlinks(decoded: pd.Series) -> pd.Series:
+    """Per-page lists of canonical hrefs: every link of the batch goes
+    through ONE :func:`canonicalize_series` call, then is split back per page."""
+    raw = decoded.map(extract_outlinks)
+    flat = pd.Series([u for links in raw for u in links], dtype=object)
+    canon = canonicalize_series(flat).tolist()
+    out, i = [], 0
+    for links in raw:
+        out.append(canon[i : i + len(links)])
+        i += len(links)
+    return pd.Series(out, index=decoded.index, dtype=object)
+
+
 def extract_batch(
     df: DataFrame,
     schema: str,
@@ -112,7 +127,10 @@ def extract_batch(
     """One-pass ``mapInPandas`` variant: text + outlinks from a single decode.
 
     Used by the round pipeline so the fat ``html`` binary column is
-    materialized in Python exactly once per fetched row.
+    materialized in Python exactly once per fetched row. Outlinks come out
+    *canonical* (``canonicalize_url`` of each ``extract_outlinks`` href, via
+    the engine's :func:`canonicalize_series` once per Arrow batch), so the
+    frontier expansion downstream needs no Python step of its own.
     """
 
     passthrough = [f for f in df.columns if f != html_col]
@@ -125,7 +143,7 @@ def extract_batch(
             out = pdf[passthrough].copy()
             out["extracted_text"] = decoded.map(extract_text)
             if want_outlinks:
-                out["outlinks"] = decoded.map(extract_outlinks)
+                out["outlinks"] = _canonical_outlinks(decoded)
             yield out
 
     return df.mapInPandas(_run, schema=schema)

@@ -78,9 +78,6 @@ def canonicalize_url(url: str) -> str:
     return f"{scheme}://{hostport}{path}{query}"
 
 
-_CANON_UDF = None
-
-
 def canonicalize_series(s: "pd.Series") -> "pd.Series":
     """Vectorized canonicalization of a pandas string Series — the engine's
     hot-path implementation (wrapped in an Arrow UDF by
@@ -134,13 +131,11 @@ def canonicalize_col(url: Column) -> Column:
     dedup shuffles, hashing) then reference the *materialized* column instead
     of re-inlining a giant expression tree.
 
-    Built lazily: the pandas_udf decorator needs an active SparkSession, and
-    this module is also imported by the Spark-free single-node oracle.
+    Built per call, never cached: a UDF object pins the SparkContext it was
+    first evaluated under (its accumulator), so a module-level cache breaks
+    every task after a session restart. Building one is cheap.
     """
-    global _CANON_UDF
-    if _CANON_UDF is None:
-        _CANON_UDF = pandas_udf(canonicalize_series, "string")
-    return _CANON_UDF(url)
+    return pandas_udf(canonicalize_series, "string")(url)
 
 
 def host_col(canon_url: Column) -> Column:

@@ -14,6 +14,14 @@ Two tiers (north rule):
   the "maybe seen" minority is confirmed exactly. At 10^10-URL scale the
   Bloom removes the dominant shuffle; false positives cost a redundant exact
   check, never a wrongly dropped URL.
+
+When the fast tier runs: the crawl (``plans.crawl.run_crawl``) builds a
+filter only once ``seen`` has keys — round 1 of a fresh crawl neither builds
+nor probes one. It is sized ``BloomFilter.sized_for(max(n_seen, 1024),
+bloom_fpp)``, where ``n_seen`` is the driver's running count of URLs the
+crawl has processed (kept in the snapshot manifest, so a resume needs no
+count job). Each round's bitset broadcast is destroyed with the round's
+cached frames.
 """
 
 from __future__ import annotations
@@ -22,6 +30,7 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -137,19 +146,30 @@ def anti_join_seen(
     url_col: str = "url",
     hash_col: str = "url_hash",
     bloom: BloomFilter | None = None,
+    broadcasts: list[Broadcast] | None = None,
 ) -> DataFrame:
-    """Remove already-seen URLs; exact semantics, optional Bloom fast path."""
+    """Remove already-seen URLs; exact semantics, optional Bloom fast path.
+
+    The Bloom path broadcasts the bitset. Pass ``broadcasts`` to receive
+    that broadcast and ``destroy()`` it once the result has been consumed;
+    without it the broadcast lives as long as the SparkContext.
+    """
     seen_urls = seen.select(url_col)
     if bloom is None:
         return candidates.join(seen_urls, url_col, "left_anti")
 
     spark = candidates.sparkSession
     b_blob = spark.sparkContext.broadcast(bloom.to_bytes())
+    if broadcasts is not None:
+        broadcasts.append(b_blob)
     k = bloom.k
 
     @F.pandas_udf("boolean")
     def _maybe_seen(hashes: pd.Series) -> pd.Series:
-        flt = BloomFilter.from_bytes(b_blob.value, k)
+        # a read-only view of the worker's broadcast value: probing never
+        # writes, so no per-batch copy of the bitset
+        bits = np.frombuffer(b_blob.value, dtype=np.uint64)
+        flt = BloomFilter(len(bits) * 64, k, bits)
         return pd.Series(flt.might_contain_many(hashes.to_numpy()))
 
     flagged = candidates.withColumn("__maybe_seen", _maybe_seen(F.col(hash_col)))

@@ -5,8 +5,15 @@ One round (the Spark lifecycle replacing /root/reference/crawler.py:15-111):
   frontier scan -> [Bloom probe +] exact anti-join vs seen -> robots filter
   (broadcast host->rule map) -> per-host priority top-k admit (politeness)
   -> deterministic fetch_seq -> fetch = join pages on url -> parse (Arrow
-  batch: text + outlinks) -> frontier expansion (min-merge priorities)
-  -> snapshot commit (seen/fetched/metrics append, frontier replace).
+  batch: text + canonical outlinks) -> frontier expansion (one min-merge,
+  one anti-join) -> snapshot commit (seen/fetched/metrics append, frontier
+  replace).
+
+The Bloom tier exists only once ``seen`` has keys, sized from the driver's
+running count of processed URLs (``n_seen`` in the manifest's ``extra``).
+The per-bucket ``metrics`` rows come from one aggregation over the round's
+persisted frames. Each round releases its cached frames and its Bloom
+broadcast after the commit.
 
 Rounds are driver-side Python iterations; within a round everything is one
 declarative DataFrame plan optimized by Catalyst. Batch rounds (not
@@ -18,6 +25,7 @@ from __future__ import annotations
 
 import tempfile
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -118,7 +126,8 @@ def run_round(
     bloom: BloomFilter | None = None,
 ) -> dict:
     """Execute one scheduling round; returns the round's result DataFrames
-    and counts. Caller materializes/commits."""
+    and counts. Caller materializes/commits, then unpersists ``_cached`` and
+    destroys ``_broadcasts`` (the Bloom bitset, when ``bloom`` is given)."""
     # One driver barrier for all stage counts — and no duplicated pipeline
     # work. The previous shape union-tagged cand/denied/admitted into one
     # aggregation job; that was one barrier, but the three union branches each
@@ -137,8 +146,9 @@ def run_round(
     obs_cand = Observation()
     obs_allowed = Observation()
     obs_adm = Observation()
+    broadcasts: list = []
     cand = (
-        anti_join_seen(frontier, seen, bloom=bloom)
+        anti_join_seen(frontier, seen, bloom=bloom, broadcasts=broadcasts)
         .observe(obs_cand, F.count(F.lit(1)).alias("n"))
         .persist()
     )
@@ -173,6 +183,8 @@ def run_round(
         cand.unpersist()
         denied.unpersist()
         admitted.unpersist()
+        for b in broadcasts:
+            b.destroy()
         return {"n_candidates": 0}
 
     lead_bounds = (
@@ -239,36 +251,32 @@ def run_round(
         "warc_ts",
     )
 
-    # frontier expansion: outlinks -> canonical candidates at depth+1,
-    # min-merged by priority (seed_index, depth); drop anything already seen.
+    # frontier expansion. Outlinks are already canonical (extract_batch), so
+    # this is JVM-only: one min-merge by priority (seed_index, depth) of the
+    # stored frontier and the new links, then ONE anti-join against every URL
+    # that is seen or was processed this round. Stored rows already in seen
+    # are dropped here for good; the live frontier (frontier - seen) is the
+    # same as keeping them. The anti-join sits above the aggregate on
+    # purpose: F.first is nondeterministic, so Catalyst cannot push it down
+    # into the union branches and duplicate it.
     links = (
         parsed.filter(F.col("depth") < F.lit(cfg.max_depth))
-        .select("seed_index", (F.col("depth") + 1).alias("depth"), F.explode("outlinks").alias("raw"))
-        .select("seed_index", "depth", canonicalize_col(F.col("raw")).alias("url"))
+        .select("seed_index", (F.col("depth") + 1).alias("depth"), F.explode("outlinks").alias("url"))
         .withColumn("host", host_col(F.col("url")))
         .filter(F.col("host") != "")
-    )
-
-    scheduled_urls = stamped.select("url")
-    denied_urls = denied.select("url")
-    processed = scheduled_urls.unionByName(denied_urls)
-
-    survivors = frontier.join(processed, "url", "left_anti").select(
-        "url", "host", "seed_index", "depth", "round_added"
-    )
-    new_cand = (
-        links.join(seen.select("url"), "url", "left_anti")
-        .join(processed, "url", "left_anti")
         .select("url", "host", "seed_index", "depth", F.lit(round_no).cast("int").alias("round_added"))
     )
+    done = seen.select("url").unionByName(stamped.select("url")).unionByName(denied.select("url"))
     frontier_next = (
-        survivors.unionByName(new_cand)
+        frontier.select("url", "host", "seed_index", "depth", "round_added")
+        .unionByName(links)
         .groupBy("url")
         .agg(
             F.min(F.struct("seed_index", "depth")).alias("p"),
             F.first("host").alias("host"),
             F.min("round_added").alias("round_added"),
         )
+        .join(done, "url", "left_anti")
         .select(
             "url",
             F.hash("url").alias("url_hash"),
@@ -285,29 +293,33 @@ def run_round(
         denied.select("url", "url_hash", F.lit(round_no).cast("int").alias("round"))
     )
 
-    bucket = F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    m_sched = stamped.groupBy(bucket).agg(F.count("*").alias("n_scheduled"))
-    m_fetch = parsed.groupBy(
-        F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    ).agg(F.count("*").alias("n_fetched"))
-    m_cand = cand.groupBy(
-        F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    ).agg(F.count("*").alias("n_candidates"))
-    m_denied = denied.groupBy(
-        F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket")
-    ).agg(F.count("*").alias("n_denied"))
+    # per-host-bucket counts in one aggregation: each persisted frame
+    # contributes a 1 to its own indicator column
+    counted = (
+        (cand, "n_candidates"),
+        (denied, "n_denied"),
+        (stamped, "n_scheduled"),
+        (parsed, "n_fetched"),
+    )
+    tagged = [
+        df.select(
+            F.pmod(F.hash("host"), F.lit(cfg.n_buckets)).alias("host_bucket"),
+            *(F.lit(int(c == name)).cast("long").alias(c) for _, c in counted),
+        )
+        for df, name in counted
+    ]
     metrics = (
-        m_cand.join(m_denied, "host_bucket", "full")
-        .join(m_sched, "host_bucket", "full")
-        .join(m_fetch, "host_bucket", "full")
+        reduce(DataFrame.unionByName, tagged)
+        .groupBy("host_bucket")
+        .agg(*(F.sum(c).alias(c) for _, c in counted))
         .select(
             F.lit(round_no).cast("int").alias("round"),
             "host_bucket",
-            F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-            F.coalesce("n_denied", F.lit(0)).alias("n_denied"),
-            F.coalesce("n_scheduled", F.lit(0)).alias("n_scheduled"),
-            F.coalesce("n_fetched", F.lit(0)).alias("n_fetched"),
-            F.coalesce("n_fetched", F.lit(0)).alias("n_parsed"),
+            "n_candidates",
+            "n_denied",
+            "n_scheduled",
+            "n_fetched",
+            F.col("n_fetched").alias("n_parsed"),
         )
     )
 
@@ -320,6 +332,7 @@ def run_round(
         "seen_new": seen_new,
         "metrics": metrics,
         "_cached": [cand, denied, admitted, stamped, parsed],
+        "_broadcasts": broadcasts,
     }
 
 
@@ -332,7 +345,14 @@ def run_crawl(
     store: SnapshotStore | None = None,
     resume: bool = False,
 ) -> CrawlState:
-    """Multi-round crawl with snapshot checkpoints; resumable mid-crawl."""
+    """Multi-round crawl with snapshot checkpoints; resumable mid-crawl.
+
+    Each commit's ``extra`` holds ``seq_offset`` and ``n_seen`` (rows in
+    ``seen``: the running sum of every round's admitted + denied URLs), so a
+    resume needs neither a recount nor a scan to size the Bloom filter. A
+    manifest without ``n_seen`` falls back to counting ``seen`` when the
+    Bloom tier needs it.
+    """
     if store is None:
         store = SnapshotStore(tempfile.mkdtemp(prefix="crawl_store_"))
     state = CrawlState(store=store)
@@ -340,23 +360,28 @@ def run_crawl(
     start_round = 1
     if resume and store.latest_round() is not None:
         start_round = store.latest_round() + 1
-        state.seq_offset = int(store.extra().get("seq_offset", 0))
+        extra = store.extra()
+        state.seq_offset = int(extra.get("seq_offset", 0))
+        n_seen = extra.get("n_seen")
         frontier = store.read(spark, "frontier")
         seen = store.read(spark, "seen") or _empty(spark, SEEN_SCHEMA)
         state.rounds_run = store.latest_round()
     else:
         frontier = seeds_to_frontier(seeds)
         seen = _empty(spark, SEEN_SCHEMA)
+        n_seen = 0
         store.stage_replace(frontier, "frontier", 0)
-        store.commit(0, extra={"seq_offset": 0})
+        store.commit(0, extra={"seq_offset": 0, "n_seen": 0})
         frontier = store.read(spark, "frontier")
 
     for rnd in range(start_round, cfg.max_rounds + 1):
         bloom = None
         if cfg.use_bloom:
-            n_seen = seen.count()
-            flt = BloomFilter.sized_for(max(n_seen, 1024), cfg.bloom_fpp)
-            bloom = build_bloom(seen, "url_hash", flt.n_bits, flt.k)
+            if n_seen is None:
+                n_seen = seen.count()
+            if n_seen > 0:
+                flt = BloomFilter.sized_for(max(n_seen, 1024), cfg.bloom_fpp)
+                bloom = build_bloom(seen, "url_hash", flt.n_bits, flt.k)
 
         r = run_round(spark, pages, frontier, seen, robots, cfg, rnd, state.seq_offset, bloom)
         if r["n_candidates"] == 0:
@@ -368,7 +393,9 @@ def run_crawl(
         store.stage_append(r["metrics"], "metrics", rnd)
         store.stage_replace(r["frontier_next"], "frontier", rnd)
         state.seq_offset += r["n_admitted"]
-        store.commit(rnd, extra={"seq_offset": state.seq_offset})
+        if n_seen is not None:
+            n_seen += r["n_admitted"] + r["n_denied"]
+        store.commit(rnd, extra={"seq_offset": state.seq_offset, "n_seen": n_seen})
         state.round_counts.append(
             {
                 "round": rnd,
@@ -380,6 +407,8 @@ def run_crawl(
 
         for df in r["_cached"]:
             df.unpersist()
+        for b in r["_broadcasts"]:
+            b.destroy()
         frontier = store.read(spark, "frontier")
         seen = store.read(spark, "seen")
 

@@ -8,8 +8,43 @@ UTC timestamps for oracle comparison).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: share of physical memory the default driver heap may take (local mode
+#: runs the whole engine in the driver JVM; Python workers and the OS need
+#: the rest)
+DRIVER_MEM_FRACTION = 0.25
+
+
+def default_cores(env: dict[str, str] | None = None, affinity: set[int] | None = None) -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` if set, else the CPUs this
+    process may run on (``os.sched_getaffinity``)."""
+    env = os.environ if env is None else env
+    if env.get("SPARK_GRAFT_CPUS"):
+        return int(env["SPARK_GRAFT_CPUS"])
+    if affinity is None:
+        affinity = os.sched_getaffinity(0)
+    return len(affinity)
+
+
+def default_driver_mem(env: dict[str, str] | None = None, meminfo: str | None = None) -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    ``DRIVER_MEM_FRACTION`` of ``MemTotal`` from ``/proc/meminfo`` in whole
+    MiB, at least 512m (Spark refuses a driver heap under ~450 MiB).
+    ``meminfo`` is that file's text."""
+    env = os.environ if env is None else env
+    if env.get("SPARK_GRAFT_DRIVER_MEM"):
+        return env["SPARK_GRAFT_DRIVER_MEM"]
+    if meminfo is None:
+        with open("/proc/meminfo") as fh:
+            meminfo = fh.read()
+    m = re.search(r"^MemTotal:\s+(\d+)\s+kB", meminfo, re.MULTILINE)
+    if m is None:
+        raise ValueError("no MemTotal line in /proc/meminfo")
+    total_mib = int(m.group(1)) // 1024
+    return f"{max(512, int(total_mib * DRIVER_MEM_FRACTION))}m"
 
 
 def get_spark(
@@ -20,11 +55,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Parameters are env-overridable so the driver/bench can pin parallelism:
-    ``SPARK_GRAFT_CPUS`` sets local core count, ``SPARK_GRAFT_SHUFFLE`` the
-    shuffle partition count.
+    Defaults fit the machine (:func:`default_cores`,
+    :func:`default_driver_mem`). Parameters are env-overridable so the
+    driver/bench can pin parallelism: ``SPARK_GRAFT_CPUS`` sets local core
+    count, ``SPARK_GRAFT_SHUFFLE`` the shuffle partition count,
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cores()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -54,7 +91,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

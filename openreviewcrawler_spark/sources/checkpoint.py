@@ -6,9 +6,10 @@ lineage + metrics. The Iceberg runtime jar is not fetchable in this sandbox
 preserves the semantics the engine depends on:
 
 * **atomic commit** — data files for a round are fully written before the
-  manifest is swapped via write-tmp + ``os.replace`` (atomic on POSIX); a
-  crash mid-round leaves the previous manifest intact and the orphan files
-  unreferenced, exactly like an uncommitted Iceberg snapshot.
+  manifest is swapped; every manifest file (live and history) is written by
+  :func:`_write_json_atomic` (temp file, fsync, ``os.replace``, directory
+  fsync). A crash mid-round leaves the previous manifest intact and the
+  orphan files unreferenced, exactly like an uncommitted Iceberg snapshot.
 * **append tables** (``seen``, ``fetched``, ``metrics``) accumulate one
   directory per round — reading unions the committed increments, so no
   O(total-state) rewrite per round (Iceberg fast-append analog).
@@ -35,6 +36,33 @@ REPLACE_TABLES = ("frontier",)
 _MANIFEST = "_manifest.json"
 
 
+def _write_json_atomic(path: str, obj: Any) -> None:
+    """Replace ``path`` with ``obj`` as JSON, all or nothing, durably.
+
+    The bytes go to a temp file in the same directory, which is flushed and
+    fsynced before ``os.replace`` swaps it in; the directory is fsynced after
+    so the rename itself survives a power loss. On failure the temp file is
+    removed and ``path`` is untouched.
+    """
+    dirname, name = os.path.split(path)
+    tmp = os.path.join(dirname, f".{name}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps(obj, indent=1))
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    fd = os.open(dirname, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
@@ -56,7 +84,12 @@ class SnapshotStore:
         return rel
 
     def commit(self, round_no: int, extra: dict[str, Any] | None = None) -> None:
-        """Atomically publish every staged table as snapshot ``round_no``."""
+        """Atomically publish every staged table as snapshot ``round_no``.
+
+        The history manifest (kept for time-travel reads and lineage audits)
+        is written first, the live manifest last: a failure anywhere leaves
+        the live snapshot as it was.
+        """
         manifest = self.manifest() or {"round": -1, "tables": {}}
         tables = dict(manifest["tables"])
         for t, paths in self._pending.items():
@@ -64,13 +97,10 @@ class SnapshotStore:
         new_manifest = {"round": round_no, "tables": tables}
         if extra:
             new_manifest["extra"] = {**manifest.get("extra", {}), **extra}
-        tmp = os.path.join(self.root, f".{_MANIFEST}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(new_manifest, fh, indent=1)
-        os.replace(tmp, os.path.join(self.root, _MANIFEST))
-        # keep snapshot history for time-travel reads / lineage audits
-        with open(os.path.join(self.root, f"_manifest_r{round_no:05d}.json"), "w") as fh:
-            json.dump(new_manifest, fh, indent=1)
+        _write_json_atomic(
+            os.path.join(self.root, f"_manifest_r{round_no:05d}.json"), new_manifest
+        )
+        _write_json_atomic(os.path.join(self.root, _MANIFEST), new_manifest)
         self._pending = {}
 
     # -- read side --------------------------------------------------------
@@ -158,11 +188,7 @@ class SnapshotStore:
         writer.parquet(os.path.join(self.root, rel))
         tables = dict(m["tables"])
         tables[table] = [rel]
-        new_manifest = {**m, "tables": tables}
-        tmp = os.path.join(self.root, f".{_MANIFEST}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(new_manifest, fh, indent=1)
-        os.replace(tmp, os.path.join(self.root, _MANIFEST))
+        _write_json_atomic(os.path.join(self.root, _MANIFEST), {**m, "tables": tables})
         return True
 
 
