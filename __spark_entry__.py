@@ -1,11 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship crawl-scheduling-round query; ``queries`` /
-``oracle_sql`` expose the full operator catalog (one entry per implemented
-operator from SURVEY.md §2 plus the training-data-pipeline operators), built
-in ``openreviewcrawler_spark/catalog.py``. Non-SQL-expressible entries
-(multimodal byte plumbing would be, but even those have arithmetic oracles)
-simply have no ``oracle_sql`` key.
+``oracle_sql`` expose the operator catalog (one entry per crawl, web, WARC,
+graph, text, dedup or core operator), built in the
+``openreviewcrawler_spark/catalog/`` package and returned in CATALOG
+insertion order. Entries whose output has no SQL formulation simply have no
+``oracle_sql`` key.
 """
 
 from __future__ import annotations

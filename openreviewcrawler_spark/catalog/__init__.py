@@ -1,12 +1,14 @@
-"""Query catalog — every operator surface, as (Spark builder, DuckDB oracle) pairs.
+"""Query catalog — the crawl engine's operators, as (Spark builder, DuckDB oracle) pairs.
 
 This backs ``__spark_entry__.py``: each entry is one operator from SURVEY.md §2
-(or a training-data-pipeline operator) exercised over the driver's test tables
-(region nation customer supplier part orders lineitem events documents
-embeddings). The Spark side uses the real engine operators
-(``operators/*``, ``functions/*``) through the DataFrame API; the SQL side is
-an independent ANSI formulation DuckDB runs on the same parquet — agreement is
-the correctness gate.
+exercised over the driver's test tables (mostly ``documents``; a few entries
+also read ``events``, ``orders``, ``lineitem``, ``customer``, ``part`` and
+``embeddings``). The families are ``crawl``, ``web``, ``warc``, ``graph``,
+``text``, ``dedup`` and ``core``, plus ``_shared`` snippets and the
+``registry`` that holds the CATALOG dict. The Spark side uses the real engine
+operators (``operators/*``, ``functions/*``) through the DataFrame API; the
+SQL side is an independent ANSI formulation DuckDB runs on the same parquet —
+agreement is the correctness gate.
 
 Cross-engine determinism rules (see operators/textstats.py): md5-derived
 hashes only, floats rounded before output, identical left-fold summation
@@ -20,16 +22,12 @@ operators need actual duplicates; both are derived *deterministically* from
 
 from . import _shared as _mod__shared
 from . import core as _mod_core
-from . import tpch as _mod_tpch
 from . import crawl as _mod_crawl
 from . import web as _mod_web
 from . import warc as _mod_warc
 from . import graph as _mod_graph
 from . import text as _mod_text
 from . import dedup as _mod_dedup
-from . import ann as _mod_ann
-from . import traindata as _mod_traindata
-from . import events as _mod_events
 from . import registry as _mod_registry
 
 # The catalog was a single 20k-line module through round 4; it is
@@ -37,6 +35,6 @@ from . import registry as _mod_registry
 # rebinding reproduces the monolith's namespace exactly, so every
 # existing `from openreviewcrawler_spark.catalog import X` --
 # including tests importing private helpers -- keeps working.
-for _m in (_mod__shared, _mod_core, _mod_tpch, _mod_crawl, _mod_web, _mod_warc, _mod_graph, _mod_text, _mod_dedup, _mod_ann, _mod_traindata, _mod_events, _mod_registry):
+for _m in (_mod__shared, _mod_core, _mod_crawl, _mod_web, _mod_warc, _mod_graph, _mod_text, _mod_dedup, _mod_registry):
     globals().update({_k: getattr(_m, _k) for _k in dir(_m)
                       if not _k.startswith('__')})

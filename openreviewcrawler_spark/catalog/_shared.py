@@ -146,7 +146,6 @@ _BINPACK_HOST_EXPR = "'h' || cast(doc_id % ((doc_id % 37) + 1) as varchar(10))"
 # ---------------------------------------------------------------------------
 
 
-
 def _sw_sql(words: tuple[str, ...]) -> str:
     quoted = ", ".join(f"'{w}'" for w in words)
     return f"len(list_filter({_SQL_TOKENS}, t -> t in ({quoted})))"
@@ -417,43 +416,6 @@ select floor(abs(est_j - true_j) * 20)::INT as err_bucket,
 from jj group by 1
 """
 
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-#: Ordering policy (pinned in r4, per the r3 verdict): the driver records
-#: CORRECTNESS rows for only the FIRST 50 registry entries, so the registry
-#: CYCLES — an entry green in the driver's round-N file is eligible for the
-#: tail (slots 51-65) in round N+1, and every entry untested in round N
-#: (tail slots or red rows) moves into the head for round N+1. Every entry
-#: therefore gets a hard driver row at least every other round. r4 head:
-#: the 15 entries without an r3 driver row (incl. the four never-driver-run
-#: r3 operators), the fifteen NEW r4 operators (dedup_paragraph,
-#: text_bigram_fluency, traindata_domain_mix, crawl_bandwidth_admit,
-#: crawl_trap_detect, mime_sniff, text_pii_scrub, warc_cdx_index,
-#: text_boilerplate_strip, traindata_shard_manifest, url_cardinality_hll,
-#: host_heavy_hitters_cm, dedup_substring, vocab_induct_topk,
-#: quality_classifier_hashgram) plus the late-r4 batches:
-#: dedup_cluster_stats, traindata_epoch_schedule, crawl_dust_rules,
-#: crawl_adaptive_delay, crawl_quota_allocate, warc_revisit_dedup,
-#: url_blocklist_filter, corpus_snapshot_diff, text_word_diversity,
-#: robots_sitemap_urls, dedup_minhash_error_profile,
-#: crawl_rate_timeseries, traindata_token_budget_trim and
-#: traindata_interleave (new operators
-#: always enter inside the window; their insertion pushes the r3-green
-#: global_totals, type_share, flatten_authors_pivot, props_extract,
-#: merge_invitations, venue_id_assign, forum_ascii_render,
-#: orphan_note_metrics, venue_listing, median_by_group, revision_latest,
-#: reply_forest, comment_histogram and frontier_link_rank past slot 50 —
-#: policy-eligible; window edge is now slot 50 = graph_hits_rank), and
-#: this round's fixed entries; r4 tail
-#: (slots 51-82): entries green in CORRECTNESS_r03.json and untouched by
-#: the r4 diff (q1_pricing, q3_shipping, q5_region_revenue,
-#: top_orders_per_customer, sessionization, lang_id, text_quality,
-#: token_count, text_repetition, host_quality_rollup, doc_fingerprint,
-#: mm_decode_meta, mm_frame_sample, dedup_exact and dedup_minhash_lsh
-#: rotate out to make room — all r3-green, policy-eligible).
 
 # ---------------------------------------------------------------------------
 # session-2 r4 batch: graph traversal, global priority pop, consistent-hash

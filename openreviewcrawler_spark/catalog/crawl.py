@@ -3446,7 +3446,7 @@ def q_crawl_amdahl_speedup_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost proxy), serial floor S from the measured per-round driver
     cost, T(c) = S + W/c over the {2, 8, 32}-core grid with speedup
     and strong-scaling efficiency vs the 2-core base — the closed-form
-    twin of bench.py's measured N→4N criterion (BASELINE.json ≥0.8):
+    twin of the measured N→4N strong-scaling criterion (BASELINE.json ≥0.8):
     the model says WHERE the serial floor caps efficiency before a
     single run burns. Integer arithmetic; one byte rollup + a 3-row
     grid."""

@@ -271,6 +271,11 @@ def bfs_depth(edges: DataFrame, seeds: DataFrame, max_depth: int = 8) -> DataFra
     materialization (swap ``checkpoint()`` to reliable storage if
     executor loss must be survivable mid-traversal). Bounded diameter =>
     bounded rounds regardless of graph size.
+
+    Cleanup: the per-level ``localCheckpoint`` blocks are NOT tracked by the
+    ``track_persist`` registry, so ``release_persisted`` does not free them.
+    Spark's ContextCleaner removes them once the returned DataFrame and its
+    levels are garbage-collected on the driver.
     """
     from ..caching import track_persist
 

@@ -105,8 +105,3 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    """Stop the active session (needed to rebuild at a different master)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

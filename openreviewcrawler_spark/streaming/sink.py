@@ -56,8 +56,10 @@ def merge_upsert(
     DETERMINISTIC total order, so a crash-replayed batch durably commits
     the same winner the original attempt would have (row_number over a
     partial order picks a partitioning-dependent winner; r4 ADVICE).
-    Rows tied on the hash are byte-identical, so any winner is the same
-    row. Pure batch logic, reused by tests directly."""
+    The result is deterministic up to a 64-bit hash collision: two distinct
+    rows tied on both ``order_col`` and the hash (probability ~2^-64 per
+    pair) would leave a partitioning-dependent winner. Pure batch logic,
+    reused by tests directly."""
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(order_col).desc(), F.xxhash64(*batch.columns).desc()
     )

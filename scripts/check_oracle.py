@@ -90,10 +90,21 @@ def type_mismatches(spark_dtypes, duck_desc):
     column whose normalized types differ. This is the local stand-in for
     the driver's TYPED value hash (r1 float repr, r3 arrays, r4 integer
     width were all classes the value-only compare could not see).
+
+    A name that occurs twice in either output is itself reported: a
+    by-name compare would see only one of the copies, so a dtype mismatch
+    on the other would pass unseen.
     """
-    s = {n.lower(): norm_spark_type(t) for n, t in spark_dtypes}
-    d = {r[0].lower(): norm_duck_type(r[1]) for r in duck_desc}
+    s = [(n.lower(), norm_spark_type(t)) for n, t in spark_dtypes]
+    d = [(r[0].lower(), norm_duck_type(r[1])) for r in duck_desc]
     out = []
+    for engine, cols in (("spark", s), ("duckdb", d)):
+        names = [n for n, _ in cols]
+        for col in sorted({n for n in names if names.count(n) > 1}):
+            out.append(f"{col}: duplicate output column in {engine}")
+    if out:
+        return out
+    s, d = dict(s), dict(d)
     for col in sorted(set(s) & set(d)):
         if s[col] != d[col]:
             out.append(f"{col}: spark={s[col]} duckdb={d[col]}")

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from openreviewcrawler_spark.operators import dedup
 from openreviewcrawler_spark.operators.lm import bigrams_df, fluency_scores
-from openreviewcrawler_spark.operators.mixing import domain_mix
 from openreviewcrawler_spark.operators.scheduler import bandwidth_admit
 
 
@@ -105,18 +104,6 @@ def test_fluency_orders_like_true_nll(lm_corpus):
 # --- domain mixing ---------------------------------------------------------
 
 
-def test_domain_mix_sqrt_temperature(spark):
-    rows = [(i, f"s{s}") for s, n in [(0, 1), (1, 4), (2, 16)] for i in range(n)]
-    docs = spark.createDataFrame(rows, "doc_id long, source string")
-    out = {r.source: r for r in domain_mix(docs, budget=7000).collect()}
-    # sqrt counts 1, 2, 4 -> weights 1/7, 2/7, 4/7 -> targets 1000, 2000, 4000
-    assert out["s0"].target_docs == 1000 - 1 or out["s0"].target_docs == 1000
-    assert abs(out["s0"].weight - 1 / 7) < 1e-6
-    assert abs(out["s1"].weight - 2 / 7) < 1e-6
-    assert abs(out["s2"].weight - 4 / 7) < 1e-6
-    assert sum(r.target_docs for r in out.values()) <= 7000  # floor never overshoots
-
-
 # --- byte-budget admission -------------------------------------------------
 
 
@@ -135,32 +122,3 @@ def test_bandwidth_admit_prefix_by_priority(spark):
     adm = bandwidth_admit(df, byte_budget=1000)
     got = {(r.host, r.url): r.cum_bytes for r in adm.collect()}
     assert got == {("h1", "u1"): 500, ("h1", "u2"): 900, ("h2", "u5"): 999}
-
-
-def test_interleave_block_cycle_and_unique_slots(spark):
-    from openreviewcrawler_spark.operators.mixing import interleave_datasets
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(i, "a") for i in range(6)]
-        + [(100 + i, "b") for i in range(3)]
-        + [(200 + i, "c") for i in range(2)],
-        "doc_id long, source string",
-    )
-    weights = spark.createDataFrame(
-        [("a", 2), ("b", 1), ("c", 1)], "source string, weight long"
-    )
-    rows = interleave_datasets(docs, weights).collect()
-    slots = [r["slot"] for r in rows]
-    assert len(slots) == len(set(slots))  # unique by construction
-    by_slot = {r["slot"]: (r["source"], r["doc_id"]) for r in rows}
-    # block W=4: [a a b c] repeating; doc order within source follows id
-    assert [by_slot.get(s) for s in range(8)] == [
-        ("a", 0), ("a", 1), ("b", 100), ("c", 200),
-        ("a", 2), ("a", 3), ("b", 101), ("c", 201),
-    ]
-    # block 2: a's last two docs, b's third, and a GAP where c (exhausted
-    # after 2 docs) would sit — slot is a priority key, not a dense index
-    assert by_slot.get(8) == ("a", 4) and by_slot.get(9) == ("a", 5)
-    assert by_slot.get(10) == ("b", 102)
-    assert 11 not in by_slot and max(by_slot) == 10

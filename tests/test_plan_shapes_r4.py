@@ -52,32 +52,6 @@ def test_word_diversity_and_rate_rollup_plans(spark, sf_dir):
     _assert_clean(_plan(q_crawl_rate_timeseries(spark, sf_dir)), "Window", "Join")
 
 
-def test_snapshot_diff_shuffles_digests_not_payloads(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_corpus_snapshot_diff
-
-    plan = _plan(q_corpus_snapshot_diff(spark, sf_dir))
-    _assert_clean(plan)
-    # the md5 projection must land below the join: no Exchange row carries
-    # the text column (only 32-byte digests shuffle)
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "text" not in line, line
-
-
-def test_interleave_has_no_corpus_side_window(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_traindata_interleave
-
-    plan = _plan(q_traindata_interleave(spark, sf_dir))
-    _assert_clean(plan)
-    # the only Window allowed is the one over the O(sources) weight dim —
-    # it must sit above an aggregate of the sources, never above the
-    # row-level documents scan. Every corpus-side consumer is the scalable
-    # stamp (mapInPandas), so a window whose subtree contains ArrowEvalPython
-    # or the raw scan would mean the per-source rank regressed to a funnel.
-    segments = plan.split("Window")
-    assert len(segments) <= 3, f"unexpected extra windows:\n{plan}"
-
-
 def test_revisit_window_is_partitioned_by_digest(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_warc_revisit_dedup
 
@@ -128,14 +102,6 @@ def test_sitemap_index_parse_is_shuffle_free(spark, sf_dir):
     assert plan.count("Exchange") == 0, plan  # map-side explode only
 
 
-def test_embedding_qa_is_single_aggregate(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_embedding_qa
-
-    plan = _plan(q_embedding_qa(spark, sf_dir))
-    _assert_clean(plan, "Window", "Join")
-    assert plan.count("Exchange") <= 2, plan  # one shuffle (+AQE read)
-
-
 def test_retry_backoff_joins_are_equi_only(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_crawl_retry_backoff
 
@@ -174,34 +140,6 @@ def test_session3_graph_ops_plans_are_equi_join_only(spark, sf_dir):
     # alive/degree tables is the 100x scale killer (r3 ngram lesson)
     for q in (q_graph_kcore, q_graph_assortativity, q_graph_clustering_coeff):
         _assert_clean(_plan(q(spark, sf_dir)))
-
-
-def test_oov_rate_broadcast_is_the_bounded_topk_only(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_traindata_oov_rate
-
-    plan = _plan(q_traindata_oov_rate(spark, sf_dir))
-    _assert_clean(plan)
-    # the vocab side is a constant-K top-K: distributed partial top-K,
-    # never a global Sort feeding the limit
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "GlobalLimit" not in plan, plan
-
-
-def test_embedding_profile_plans_are_single_pass(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import (
-        q_embedding_centroid_drift,
-        q_embedding_dim_stats,
-    )
-
-    # dim_stats: one generate + one aggregate, no join at all
-    dplan = _plan(q_embedding_dim_stats(spark, sf_dir))
-    _assert_clean(dplan, "Join", "Window")
-    # centroid_drift: the global centroid must derive from the per-label
-    # sums — BOTH consumers of lm read the persisted relation (one
-    # physical corpus scan), never re-embed the scan+aggregate per branch
-    cplan = _plan(q_embedding_centroid_drift(spark, sf_dir))
-    _assert_clean(cplan, "Window")
-    assert cplan.count("InMemoryTableScan") == 2, cplan
 
 
 def test_unicode_profile_and_host_collapse_are_shuffle_minimal(spark, sf_dir):

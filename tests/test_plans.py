@@ -66,13 +66,6 @@ def test_seen_anti_join_shape(spark, sf_dir):
     assert "LeftAnti" in plan
 
 
-def test_q5_broadcasts_dims(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_q5_region_revenue
-
-    plan = plan_of(q_q5_region_revenue(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 2  # nation + region (+supplier)
-
-
 def test_agg_has_map_side_partial(spark, sf_dir, lineitem):
     df = lineitem.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("s"))
     plan = plan_of(df)
@@ -115,18 +108,6 @@ def test_embedding_cosine_plan_is_equi_join_only(spark, sf_dir):
     plan = plan_of(q_dedup_embedding_cosine(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_ann_lsh_topk_retrieval_is_bucket_join(spark, sf_dir):
-    """The ANN answer path must retrieve candidates through the signature
-    bucket join — broadcast/shuffled EQUI joins only, and no join may
-    degrade to a nested-loop scan of the corpus."""
-    from openreviewcrawler_spark.catalog import q_ann_lsh_topk
-
-    plan = plan_of(q_ann_lsh_topk(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan  # tiny query side broadcast
 
 
 def _fetched_plan_for(spark, max_bytes: int) -> str:
@@ -225,31 +206,14 @@ def test_ngram_sizes_attach_without_forced_broadcast(spark, sf_dir):
         assert "__df" in sub and "n_sh" not in sub, sub
 
 
-def test_no_forced_broadcast_of_scaling_relations(spark, sf_dir):
+def test_no_forced_broadcast_of_scaling_relations(spark):
     """r4 audit extending r3 verdict #2 beyond ngram_jaccard: no catalog
     query may carry a literal F.broadcast() hint on a relation whose row
-    count scales with the corpus/SF (customer, supplier, per-note content).
+    count scales with the corpus/SF (here: per-note content).
     Hints on FIXED-cardinality dims (nation=25, region=5) and provably
     capped lists (hot buckets, query sets, centroids) are fine; so is AQE
     choosing broadcast from its own estimates at small SF — that logic
     backs off at scale, a hint cannot."""
-    from openreviewcrawler_spark.catalog import q_q3_shipping, q_q5_region_revenue
-
-    # q3: zero hints — the filtered customer side still scales with SF
-    q3 = q_q3_shipping(spark, sf_dir)
-    assert "ResolvedHint" not in q3._jdf.queryExecution().analyzed().toString()
-
-    # q5: exactly the two fixed-cardinality dims are hinted
-    q5 = q_q5_region_revenue(spark, sf_dir)
-    lines = q5._jdf.queryExecution().analyzed().toString().splitlines()
-    hint_idx = [i for i, ln in enumerate(lines) if "ResolvedHint" in ln]
-    assert len(hint_idx) == 2
-    for i in hint_idx:
-        sub = "\n".join(lines[i : i + 3])
-        assert ("nation" in sub) or ("region" in sub) or ("n_nationkey" in sub) or (
-            "r_regionkey" in sub
-        ), sub
-
     # flatten_note_revisions: the per-note parent-content attach (wide
     # content_json, one row per note) joins without a hint
     from openreviewcrawler_spark.operators.flatten import flatten_note_revisions

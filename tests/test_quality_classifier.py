@@ -6,12 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from openreviewcrawler_spark.operators.classifier import (
-    N_BUCKETS,
-    W_SCALE,
-    hashgram_scores,
-    hashgram_weights,
-)
 from openreviewcrawler_spark.operators.dedup import substring_dup_stats
 
 from test_plans import plan_of
@@ -48,47 +42,6 @@ def test_substring_dup_partial_overlap(spark):
     assert rows[2].n_dup == 1  # exactly the w22..w29 window
     assert 0.0 < rows[2].dup_fraction < 1.0
     assert rows[1].n_dup == 1
-
-
-def test_hashgram_classifier_separates_domains(spark):
-    """Docs drawn from the target vocabulary must outscore docs from a
-    disjoint vocabulary; mixed docs land in between."""
-    tgt = " ".join(f"good{i}" for i in range(30))
-    bad = " ".join(f"junk{i}" for i in range(30))
-    mixed = " ".join(
-        f"good{i}" if i % 2 == 0 else f"junk{i}" for i in range(30)
-    )
-    df = spark.createDataFrame(
-        [(1, tgt, True), (2, bad, False), (3, mixed, False), (4, tgt, True)],
-        "doc_id long, text string, is_t boolean",
-    )
-    weights = hashgram_weights(df, "is_t")
-    rows = {r.doc_id: r for r in hashgram_scores(df, weights).collect()}
-    # good tokens reused by the non-target mixed doc dilute their buckets'
-    # target share (2/3 for the even ones), so the pure-target doc sits
-    # high but below W_SCALE; junk tokens never occur in a target doc.
-    assert rows[2].mean_w == 0.0  # disjoint vocab: no target mass
-    assert rows[1].mean_w > rows[3].mean_w > rows[2].mean_w
-    assert rows[1].mean_w > 0.8 * W_SCALE
-    # weights are integers in [0, W_SCALE]
-    for w in weights.collect():
-        assert 0 <= w.w <= W_SCALE
-        assert 0 <= w.bucket < N_BUCKETS
-
-
-def test_hashgram_plan_broadcasts_only_the_weight_table(spark):
-    """The model relation (<= N_BUCKETS rows by construction) is the one
-    broadcast; the corpus side never is."""
-    import re
-
-    df = spark.createDataFrame(
-        [(1, "a b c", True), (2, "c d e", False)],
-        "doc_id long, text string, is_t boolean",
-    )
-    plan = plan_of(hashgram_scores(df, hashgram_weights(df, "is_t")))
-    n_bcast = len(re.findall(r"^\(\d+\) BroadcastExchange", plan, re.MULTILINE))
-    assert n_bcast == 1, plan
-    assert "CartesianProduct" not in plan
 
 
 def test_vocab_topk_ordering_and_coverage(spark, sf_dir):

@@ -5,28 +5,6 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
-def test_rebalance_plan_actions_consistent(spark):
-    from openreviewcrawler_spark.catalog import q_traindata_mix_rebalance_plan
-
-    rows = q_traindata_mix_rebalance_plan(spark, SF).collect()
-    assert rows
-    for r in rows:
-        if r["action"] == "upsample":
-            assert r["target_docs"] > r["n_docs"]
-            assert r["factor_ppm"] > 1_000_000
-        elif r["action"] == "downsample":
-            assert r["target_docs"] < r["n_docs"]
-            assert r["factor_ppm"] < 1_000_000
-        else:
-            assert r["target_docs"] == r["n_docs"]
-        assert r["factor_ppm"] == r["target_docs"] * 1_000_000 // r["n_docs"]
-        assert r["epochs_needed"] == -(-r["target_docs"] // r["n_docs"])
-    # the τ=2 allocation flattens the mix: every source is pulled toward
-    # the budget mean, so both actions appear on a skewed corpus OR all
-    # factors are finite/positive
-    assert all(r["factor_ppm"] > 0 for r in rows)
-
-
 def test_robots_diff_matches_planted_changes(spark):
     from openreviewcrawler_spark.catalog import q_robots_rules_diff
 

@@ -8,28 +8,6 @@ import collections
 SF = "/root/testdata/sf0.001"
 
 
-def test_contamination_report_is_eval_face_of_decontaminate(spark):
-    """The two decontamination faces must agree: total distinct leaked
-    shingle observations line up, and every flagged eval doc has >= 1
-    train doc."""
-    from openreviewcrawler_spark.catalog import (
-        q_traindata_contamination_report,
-        q_traindata_decontaminate,
-    )
-
-    rep = q_traindata_contamination_report(spark, SF).collect()
-    dec = q_traindata_decontaminate(spark, SF).collect()
-    assert rep and dec
-    for r in rep:
-        assert r["n_train_docs"] >= 1
-        assert r["n_shared_ngrams"] >= 1
-    # any train doc flagged against k eval docs implies those eval rows
-    # exist in the report
-    assert max(d["n_eval_docs"] for d in dec) <= len(rep)
-    # eval ids are the planted % 97 split
-    assert all(r["eval_id"] % 97 == 0 for r in rep)
-
-
 def test_degree_histogram_covers_all_hosts(spark):
     from openreviewcrawler_spark.catalog import q_graph_degree_histogram
 
@@ -43,19 +21,3 @@ def test_degree_histogram_covers_all_hosts(spark):
         assert r["min_deg"] <= r["max_deg"]
     total_ppm = sum(r["share_ppm"] for r in rows)
     assert 1_000_000 - len(rows) <= total_ppm <= 1_000_000
-
-
-def test_heavy_user_share_conserves_events(spark):
-    from openreviewcrawler_spark.catalog import q_event_heavy_user_share
-
-    n_events = spark.read.parquet(f"{SF}/events.parquet").count()
-    n_users = (
-        spark.read.parquet(f"{SF}/events.parquet").select("user_id").distinct().count()
-    )
-    rows = q_event_heavy_user_share(spark, SF).collect()
-    assert sum(r["n_events"] for r in rows) == n_events
-    assert sum(r["n_users"] for r in rows) == n_users
-    # higher bands hold fewer users but more events per user
-    by_band = sorted(rows, key=lambda r: r["band"])
-    for a, b in zip(by_band, by_band[1:]):
-        assert a["n_events"] / a["n_users"] < b["n_events"] / b["n_users"]

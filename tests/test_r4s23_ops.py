@@ -5,37 +5,6 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
-def test_threshold_sweep_is_cumulative_of_audit(spark):
-    """The sweep's rows must be exactly the cumulative-from-above of
-    quality_vs_dup_audit's per-bin rollup."""
-    from openreviewcrawler_spark.catalog import (
-        q_quality_threshold_sweep,
-        q_quality_vs_dup_audit,
-    )
-
-    bins = sorted(
-        q_quality_vs_dup_audit(spark, SF).collect(),
-        key=lambda r: -r["quality_score"],
-    )
-    sweep = sorted(
-        q_quality_threshold_sweep(spark, SF).collect(),
-        key=lambda r: -r["threshold"],
-    )
-    assert len(sweep) == len(bins)
-    run_docs = run_dups = 0
-    for b, s in zip(bins, sweep):
-        run_docs += b["n_docs"]
-        run_dups += b["n_dup_copies"]
-        assert s["threshold"] == b["quality_score"]
-        assert s["n_kept"] == run_docs
-        assert s["dups_kept"] == run_dups
-        assert s["dup_ppm_kept"] == run_dups * 1_000_000 // run_docs
-    # monotone: lowering the threshold never sheds docs or bytes
-    for a, b in zip(sweep, sweep[1:]):
-        assert b["n_kept"] >= a["n_kept"]
-        assert b["bytes_kept"] >= a["bytes_kept"]
-
-
 def test_soft404_flags_planted_pages_only(spark):
     from openreviewcrawler_spark.catalog import q_url_soft404_detect
 

@@ -3,39 +3,8 @@ profile, event value pareto."""
 
 from __future__ import annotations
 
-import math
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_temperature_sweep_flattens_with_tau(spark):
-    from openreviewcrawler_spark.catalog import (
-        _TAU_BUDGET,
-        q_traindata_temperature_sweep,
-    )
-
-    rows = q_traindata_temperature_sweep(spark, SF).collect()
-    taus = sorted({r["tau"] for r in rows})
-    assert taus == [1, 2, 4]
-    by_tau = {t: [r for r in rows if r["tau"] == t] for t in taus}
-    # same domain set at every temperature
-    doms = {t: {r["domain"] for r in by_tau[t]} for t in taus}
-    assert doms[1] == doms[2] == doms[4]
-    assert len(doms[1]) > 3  # the Zipf host synthesis is actually skewed
-    for t in taus:
-        # floor projection never overshoots the budget / the ppm whole
-        assert sum(r["target_docs"] for r in by_tau[t]) <= _TAU_BUDGET
-        assert sum(r["weight_ppm"] for r in by_tau[t]) <= 1_000_000
-        # weights follow n^(1/tau): recompute one normalizer in python
-        z = sum(r["n_docs"] ** (1.0 / t) for r in by_tau[t])
-        for r in by_tau[t]:
-            ideal = r["n_docs"] ** (1.0 / t) / z * 1_000_000
-            assert abs(r["weight_ppm"] - ideal) <= 2  # floor + fp assoc slack
-    # higher temperature flattens: the head's share shrinks monotonically
-    head = {t: max(r["weight_ppm"] for r in by_tau[t]) for t in taus}
-    tail = {t: min(r["weight_ppm"] for r in by_tau[t]) for t in taus}
-    assert head[1] > head[2] > head[4]
-    assert tail[1] < tail[2] < tail[4]
 
 
 def test_numeric_density_matches_python_recount(spark):
@@ -84,31 +53,3 @@ def test_shingle_df_profile_accounts_every_posting(spark):
     assert sum(r["posting_share_ppm"] for r in rows) <= 1_000_000
     for r in rows:
         assert r["n_shingles"] <= r["n_postings"]
-
-
-def test_value_pareto_bands_are_exact_log10(spark):
-    from openreviewcrawler_spark.catalog import q_event_value_pareto
-
-    rows = q_event_value_pareto(spark, SF).collect()
-    assert len(rows) > 2  # the value distribution spans magnitudes
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def cents(v: float) -> int:
-        d = Decimal(v).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
-        return int(math.floor(d * 100))
-
-    total = sum(cents(e["value"]) for e in ev)
-    assert sum(r["value_cents"] for r in rows) == total
-    assert sum(r["n_events"] for r in rows) == len(ev)
-    for r in rows:
-        # band k holds cents in [10^(k-1), 10^k)
-        lo, hi = 10 ** (r["band"] - 1), 10 ** r["band"]
-        assert r["value_cents"] >= r["n_events"] * (lo if r["band"] > 1 else 0)
-        assert r["value_cents"] < r["n_events"] * hi
-        assert r["n_users"] <= r["n_events"]
-    # bigger-ticket bands carry more revenue per event by construction
-    per_ev = sorted(
-        (r["band"], r["value_cents"] / r["n_events"]) for r in rows
-    )
-    assert all(a[1] < b[1] for a, b in zip(per_ev, per_ev[1:]))

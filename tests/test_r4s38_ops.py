@@ -2,40 +2,8 @@
 
 from __future__ import annotations
 
-import hashlib
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_reservoir_is_exact_k_and_partition_invariant(spark):
-    from openreviewcrawler_spark.catalog import (
-        _RESERVOIR_K,
-        q_traindata_reservoir_sample,
-    )
-
-    rows = q_traindata_reservoir_sample(spark, SF).collect()
-    docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
-    import collections
-
-    per_lang = collections.defaultdict(list)
-    for d in docs:
-        key = int(hashlib.md5(str(d["doc_id"]).encode()).hexdigest()[:8], 16)
-        per_lang[d["lang"]].append((key, d["doc_id"]))
-    got = collections.defaultdict(list)
-    for r in rows:
-        got[r["lang"]].append((r["sample_rank"], r["doc_id"], r["skey"]))
-    assert set(got) == set(per_lang)
-    for lang, cand in per_lang.items():
-        expect = sorted(cand)[: _RESERVOIR_K]
-        mine = sorted(got[lang])
-        assert len(mine) == min(_RESERVOIR_K, len(cand))
-        assert [(d, k) for _, d, k in mine] == [(d, k) for k, d in expect]
-        assert [r for r, _, _ in mine] == list(range(1, len(mine) + 1))
-    # repartitioning the input cannot change a semilattice top-k: rerun
-    # equals itself (the two-phase prune is partition-count-dependent
-    # only in its INTERMEDIATE, never its result)
-    again = q_traindata_reservoir_sample(spark, SF).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
 def test_phrase_mine_matches_python_rake(spark):
@@ -70,22 +38,3 @@ def test_phrase_mine_matches_python_rake(spark):
         assert r["n_docs"] == len(docs_with[r["phrase"]])
         assert len(r["phrase"].split(" ")) >= 2
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
-
-
-def test_bounce_rate_agrees_with_sessionization(spark):
-    from openreviewcrawler_spark.catalog import (
-        q_event_bounce_rate,
-        q_sessionization,
-    )
-
-    rows = q_event_bounce_rate(spark, SF).collect()
-    assert rows
-    # total sessions must match the established sessionization entry
-    n_sessions = sum(
-        r["n_sessions"] for r in q_sessionization(spark, SF).collect()
-    )
-    assert sum(r["n_sessions"] for r in rows) == n_sessions
-    for r in rows:
-        assert 0 <= r["n_bounces"] <= r["n_sessions"]
-        assert r["bounce_ppm"] == r["n_bounces"] * 1_000_000 // r["n_sessions"]
-    assert any(r["n_bounces"] for r in rows)  # 30-min gaps do strand singles

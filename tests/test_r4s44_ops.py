@@ -34,62 +34,3 @@ def test_mad_outliers_match_python(spark):
     # heavy-tail hosts yield outliers; clean hosts mostly don't
     assert any(r["n_outliers"] > 0 for r in rows.values())
     assert any(r["n_outliers"] == 0 for r in rows.values())
-
-
-def test_srm_check_chi2_and_flag(spark):
-    from openreviewcrawler_spark.catalog import q_event_ab_srm_check
-
-    rows = q_event_ab_srm_check(spark, SF).collect()
-    assert rows
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
-    import collections
-    import re
-
-    cnt = collections.defaultdict(lambda: [0, 0])
-    for e in ev:
-        v = int(re.search(r"([0-9]+)", e["props"]).group(1)) % 2
-        cnt[e["event_type"]][v] += 1
-    for r in rows:
-        a, b = cnt[r["event_type"]]
-        assert (r["n_a"], r["n_b"]) == (a, b)
-        chi2 = (a - b) * (a - b) * 1000 // (a + b)
-        assert r["chi2_milli"] == chi2
-        assert r["srm_flag"] == (1 if chi2 > 3841 else 0)
-    # the fixture's parity split is imperfect enough to trip at least
-    # one type (signup runs ~85/114) while most types stay clean —
-    # both flag states are exercised
-    assert any(r["srm_flag"] == 1 for r in rows)
-    assert any(r["srm_flag"] == 0 for r in rows)
-
-
-def test_device_batch_plan_conserves_tokens(spark):
-    from openreviewcrawler_spark.catalog import (
-        _BATCH_DEVICES,
-        q_traindata_device_batch_plan,
-        q_traindata_pack_sequences,
-    )
-
-    rows = {r["device"]: r for r in q_traindata_device_batch_plan(spark, SF).collect()}
-    packed = q_traindata_pack_sequences(spark, SF).collect()
-    import collections
-
-    per_seq = collections.Counter()
-    for p in packed:
-        per_seq[p["seq_id"]] += p["n_tokens"]
-    per_dev = collections.defaultdict(lambda: [0, 0])
-    for seq, toks in per_seq.items():
-        d = per_dev[seq % _BATCH_DEVICES]
-        d[0] += 1
-        d[1] += toks
-    assert set(rows) == set(per_dev)
-    total = sum(v[1] for v in per_dev.values())
-    for dev, (slots, toks) in per_dev.items():
-        r = rows[dev]
-        assert (r["n_slots"], r["n_tokens"]) == (slots, toks)
-        assert r["load_vs_uniform_ppm"] == toks * _BATCH_DEVICES * 1_000_000 // total
-    # round-robin slot counts over a contiguous seq-id range differ by
-    # at most one across the devices that received anything (token
-    # uniformity needs far more sequences than sf0.001's ~11)
-    slot_counts = [r["n_slots"] for r in rows.values()]
-    assert max(slot_counts) - min(slot_counts) <= 1
-    assert sum(r["load_vs_uniform_ppm"] for r in rows.values()) <= _BATCH_DEVICES * 1_000_000

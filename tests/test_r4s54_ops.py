@@ -32,74 +32,3 @@ def test_community_cut_consistent_with_lpa(spark):
     assert row["cut_ppm"] == n_cut * 1_000_000 // len(edges)
     # the planted cells keep most edges internal; the noise graph cuts
     assert 0 < row["n_cut"] < row["n_edges"]
-
-
-def test_error_cascades_are_islands_of_hot_minutes(spark):
-    from openreviewcrawler_spark.catalog import (
-        _CASCADE_MIN_ERRORS,
-        q_event_error_cascade_windows,
-    )
-
-    rows = sorted(
-        q_event_error_cascade_windows(spark, SF).collect(),
-        key=lambda r: r["start_minute"],
-    )
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
-    import collections
-
-    mins = collections.Counter(
-        int(e["ts"].timestamp() * 1000) // 60000
-        for e in ev
-        if e["event_type"] == "error"
-    )
-    hot = sorted(m for m, n in mins.items() if n >= _CASCADE_MIN_ERRORS)
-    episodes = []
-    for m in hot:
-        if episodes and m - episodes[-1][-1] == 1:
-            episodes[-1].append(m)
-        else:
-            episodes.append([m])
-    assert len(rows) == len(episodes)
-    for r, ep in zip(rows, episodes):
-        assert r["start_minute"] == ep[0]
-        assert r["end_minute"] == ep[-1]
-        assert r["n_minutes"] == len(ep)
-        assert r["n_errors"] == sum(mins[m] for m in ep)
-    if rows:
-        assert all(r["n_errors"] >= _CASCADE_MIN_ERRORS * r["n_minutes"] for r in rows)
-
-
-def test_ship_delay_rollup(spark):
-    from openreviewcrawler_spark.catalog import q_orders_ship_delay_by_priority
-
-    rows = {r["o_orderpriority"]: r for r in q_orders_ship_delay_by_priority(spark, SF).collect()}
-    assert rows
-    orders = {
-        o["o_orderkey"]: (o["o_orderpriority"], o["o_orderdate"])
-        for o in spark.read.parquet(f"{SF}/orders.parquet").collect()
-    }
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
-    import collections
-
-    agg = collections.defaultdict(lambda: [0, 0, -(10**9)])
-    n_join = 0
-    for l_ in li:
-        if l_["l_orderkey"] not in orders:
-            continue
-        n_join += 1
-        pr, od = orders[l_["l_orderkey"]]
-        days = (
-            int(l_["l_shipdate"].timestamp() * 1000)
-            - int(od.timestamp() * 1000)
-        ) // 86400000
-        a = agg[pr]
-        a[0] += 1
-        a[1] += days
-        a[2] = max(a[2], days)
-    assert set(rows) == set(agg)
-    assert sum(r["n_lineitems"] for r in rows.values()) == n_join
-    for pr, (n, tot, mx) in agg.items():
-        r = rows[pr]
-        assert (r["n_lineitems"], r["delay_days_total"], r["max_delay_days"]) == (n, tot, mx)
-        assert r["mean_delay_days"] == tot // n
-        assert r["mean_delay_days"] >= 0

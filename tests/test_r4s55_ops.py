@@ -5,47 +5,6 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
-def test_supplier_nation_revenue_conserves(spark):
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from openreviewcrawler_spark.catalog import q_supplier_nation_revenue
-
-    rows = {r["n_name"]: r for r in q_supplier_nation_revenue(spark, SF).collect()}
-    assert rows
-    sup = {
-        s["s_suppkey"]: s["s_nationkey"]
-        for s in spark.read.parquet(f"{SF}/supplier.parquet").collect()
-    }
-    nat = {
-        n["n_nationkey"]: n["n_name"]
-        for n in spark.read.parquet(f"{SF}/nation.parquet").collect()
-    }
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
-    import collections
-
-    agg = collections.defaultdict(lambda: [0, Decimal(0)])
-    q4 = Decimal("0.0001")
-    for l_ in li:
-        nk = sup.get(l_["l_suppkey"])
-        if nk is None:
-            continue
-        rev = Decimal(l_["l_extendedprice"]).quantize(q4, rounding=ROUND_HALF_UP) * (
-            Decimal(1) - Decimal(l_["l_discount"]).quantize(q4, rounding=ROUND_HALF_UP)
-        )
-        a = agg[nat[nk]]
-        a[0] += 1
-        a[1] += rev
-    assert set(rows) == set(agg)
-    total = sum(int(math.floor(v[1] * 100)) for v in agg.values())
-    for name, (n, rev) in agg.items():
-        r = rows[name]
-        cents = int(math.floor(rev * 100))
-        assert (r["n_lineitems"], r["revenue_cents"]) == (n, cents)
-        assert r["revenue_share_ppm"] == cents * 1_000_000 // total
-    assert sum(r["revenue_share_ppm"] for r in rows.values()) <= 1_000_000
-
-
 def test_typosquat_pairs_and_asymmetry_gate(spark):
     from openreviewcrawler_spark.catalog import q_url_typosquat_detect
 

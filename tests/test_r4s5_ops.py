@@ -165,26 +165,6 @@ def test_code_detect_planted_snippet(spark):
     assert not out[3]["is_code"] and out[3]["kw_hits"] == 1
 
 
-def test_tokenizer_fertility_integer_division(spark):
-    from openreviewcrawler_spark.catalog import q_traindata_tokenizer_fertility
-
-    rows = [("en", "four words right here"), ("en", "ab"), ("de", "lange wörter")]
-    df = spark.createDataFrame(rows, "lang string, text string")
-    df.createOrReplaceTempView("__fert_docs")
-    # drive the same arithmetic directly: en = (22+2)*1000 div (4+1)
-    agg = (
-        df.groupBy("lang")
-        .agg(
-            F.sum(F.length("text")).alias("c"),
-            F.sum(F.size(F.split("text", " "))).alias("t"),
-        )
-        .collect()
-    )
-    vals = {r["lang"]: (r["c"], r["t"]) for r in agg}
-    assert vals["en"] == (23, 5)
-    assert vals["de"] == (12, 2)
-
-
 def test_html_canonical_cluster_semantics(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_html_canonical_cluster
 
@@ -203,88 +183,6 @@ def test_html_canonical_cluster_semantics(spark, sf_dir):
     _assert_clean(plan, "Window")
 
 
-def test_banded_hamming_pairs_planted(spark):
-    from openreviewcrawler_spark.operators.dedup import banded_hamming_pairs
-
-    rows = [
-        (1, 100, 200, 300, 400),
-        (2, 101, 200, 300, 400),   # 1 bit off band 0 vs asset 1 (100^101=1 -> ham 1... actually bit_count(100^101)=1)
-        (3, 100, 200, 300, 1024),  # differs from 1 only in band 3 by one bit (400^1024 has several bits)
-        (4, 9999, 8888, 7777, 6666),  # unrelated
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, b0 long, b1 long, b2 long, b3 long")
-    out = {(r["id_a"], r["id_b"]): r["hamming"]
-           for r in banded_hamming_pairs(df, max_hamming=3).collect()}
-    assert (1, 2) in out and out[(1, 2)] == bin(100 ^ 101).count("1")
-    # (1,3) shares bands 0-2, verify hamming = popcount(400^1024)
-    h13 = bin(400 ^ 1024).count("1")
-    assert ((1, 3) in out) == (h13 <= 3)
-    assert all(a != 4 and b != 4 for a, b in out)
-
-
-def test_mm_phash_dedup_groups_of_four(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_mm_phash_dedup
-
-    df = q_mm_phash_dedup(spark, sf_dir)
-    rows = df.collect()
-    assert rows, "planted groups must produce near-dup pairs"
-    # every surviving pair is within the verify threshold and in-group
-    for r in rows:
-        assert r["hamming"] <= 3
-        assert r["id_a"] // 4 == r["id_b"] // 4, "cross-group pair leaked"
-    # a full group of 4 yields all 6 pairs; count pairs for group of ids 0-3
-    g0 = [r for r in rows if r["id_a"] // 4 == 0]
-    assert len(g0) == 6
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    _assert_clean(plan)
-
-
-def test_ivf_cell_balance_shares(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import q_ann_ivf_cell_balance
-
-    df = q_ann_ivf_cell_balance(spark, sf_dir)
-    rows = df.collect()
-    total = sum(r["n_vectors"] for r in rows)
-    n_cells = len(rows)
-    assert total > 0 and n_cells >= 2
-    for r in rows:
-        assert r["share_ppm"] == (r["n_vectors"] * 1_000_000) // total
-        assert r["is_hot"] == (r["n_vectors"] * n_cells > 2 * total)
-    # shares under-sum 1e6 only by truncation
-    assert 1_000_000 - n_cells <= sum(r["share_ppm"] for r in rows) <= 1_000_000
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # nested loops here are only the K-row centroid broadcasts (the
-    # established ivf shape) + the 1-row total; never an unbroadcast product
-    assert "BatchEvalPython" not in plan and "CartesianProduct" not in plan
-
-
-def test_funnel_audit_chains_and_matches_clean_corpus(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import (
-        q_traindata_clean_corpus,
-        q_traindata_funnel_audit,
-    )
-
-    rows = sorted(
-        q_traindata_funnel_audit(spark, sf_dir).collect(),
-        key=lambda r: r["stage_id"],
-    )
-    assert [r["stage"] for r in rows] == [
-        "exact_dedup", "near_dedup", "lang_filter", "quality_gate",
-        "decontaminate",
-    ]
-    for r in rows:
-        assert 0 <= r["n_out"] <= r["n_in"]
-        expect = 0 if r["n_in"] == 0 else ((r["n_in"] - r["n_out"]) * 1_000_000) // r["n_in"]
-        assert r["drop_ppm"] == expect
-    for prev, nxt in zip(rows, rows[1:]):
-        assert nxt["n_in"] == prev["n_out"]
-    # the funnel's final survivor count IS the clean_corpus output count
-    final = rows[-1]["n_out"]
-    assert final == q_traindata_clean_corpus(spark, sf_dir).count()
-    # stages genuinely drop something on the planted dup fixture
-    assert rows[0]["n_in"] > final
-
-
 def test_dns_prefetch_plan_first_seen_partition(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_crawl_dns_prefetch_plan
 
@@ -300,45 +198,3 @@ def test_dns_prefetch_plan_first_seen_partition(spark, sf_dir):
         assert r["n_urls"] >= r["n_hosts"]
     plan = _plan(q_crawl_dns_prefetch_plan(spark, sf_dir))
     _assert_clean(plan, "Window")
-
-
-def test_cluster_purity_consistent(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import (
-        q_ann_ivf_cell_balance,
-        q_embedding_cluster_purity,
-    )
-
-    pur = {r["cell"]: r for r in q_embedding_cluster_purity(spark, sf_dir).collect()}
-    bal = {r["cell"]: r for r in q_ann_ivf_cell_balance(spark, sf_dir).collect()}
-    # same quantizer -> same cells with identical populations
-    assert set(pur) == set(bal)
-    for c, r in pur.items():
-        assert r["n_vectors"] == bal[c]["n_vectors"]
-        assert 0 < r["majority_n"] <= r["n_vectors"]
-        assert r["purity_ppm"] == (r["majority_n"] * 1_000_000) // r["n_vectors"]
-
-
-def test_pack_fragmentation_invariants(spark, sf_dir):
-    from openreviewcrawler_spark.catalog import (
-        q_traindata_pack_fragmentation,
-        q_traindata_pack_sequences,
-    )
-
-    frag = sorted(
-        q_traindata_pack_fragmentation(spark, sf_dir).collect(),
-        key=lambda r: r["seq_id"],
-    )
-    packed = q_traindata_pack_sequences(spark, sf_dir).collect()
-    n_docs = len(packed)
-    # every doc starts in exactly one sequence
-    assert sum(r["n_starts"] for r in frag) == n_docs
-    # intersections = sum of spans
-    assert sum(r["n_docs"] for r in frag) == sum(r["n_seqs_spanned"] for r in packed)
-    for r in frag:
-        assert r["n_docs"] == r["n_whole_docs"] + r["n_split_docs"]
-        assert r["is_fragmented"] == (r["n_split_docs"] > 0)
-    # contiguous sequence ids from 0
-    assert frag[0]["seq_id"] == 0
-    assert [r["seq_id"] for r in frag] == list(range(len(frag)))
-    plan = _plan(q_traindata_pack_fragmentation(spark, sf_dir))
-    assert "BatchEvalPython" not in plan and "CartesianProduct" not in plan
