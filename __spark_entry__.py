@@ -2,10 +2,10 @@
 
 ``entry`` runs the flagship crawl-scheduling-round query; ``queries`` /
 ``oracle_sql`` expose the operator catalog (one entry per crawl, web, WARC,
-graph, text, dedup or core operator), built in the
-``openreviewcrawler_spark/catalog/`` package and returned in CATALOG
-insertion order. Entries whose output has no SQL formulation simply have no
-``oracle_sql`` key.
+graph, text, dedup, core, event-analytics or embedding/multimodal operator),
+built in the ``openreviewcrawler_spark/catalog/`` package and returned in
+CATALOG insertion order. Entries whose output has no SQL formulation simply
+have no ``oracle_sql`` key.
 """
 
 from __future__ import annotations

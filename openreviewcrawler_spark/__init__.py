@@ -4,8 +4,8 @@ Re-expresses the query and data-processing capabilities of the reference
 fetch-and-parse pipeline (ErikBird/OpenReviewCrawler, /root/reference) as a
 distributed URL-frontier + fetch scheduler over Common-Crawl-style web-page
 tables, plus the reference's parse/label/tree/flatten/statistics operators and
-the web-corpus operators around the crawl (dedup, link-graph ranking, text
-analysis, WARC/sitemap layouts).
+the large-scale training-data-pipeline operators (dedup, similarity search,
+text analysis, multimodal plumbing).
 
 Architecture is Spark-first: DataFrame/SQL plans optimized by Catalyst,
 vectorized pandas/Arrow UDFs only where built-in operators cannot express the

@@ -1,12 +1,12 @@
 """Tracked persist() handles for lazy operator builders.
 
-Several operators (the dedup band/signature tables, the embedding band
-table, the packing prefix-sum partition pin) persist a derived table that
-the RETURNED DataFrame still references — the builder cannot unpersist
-before the caller's action, so without tracking each call leaks a cached
-table for the session lifetime (r4 ADVICE finding; a benchmark calling
-``clearCache()`` masked it, library callers running many queries in one
-session accumulate executor storage).
+Several operators (the dedup band/signature tables, the ANN band table, the
+packing prefix-sum partition pin) persist a derived table that the RETURNED
+DataFrame still references — the builder cannot unpersist before the
+caller's action, so without tracking each call leaks a cached table for the
+session lifetime (r4 ADVICE finding; a benchmark calling ``clearCache()``
+masked it, library callers running many queries in one session accumulate
+executor storage).
 
 The fix is a registry: builders persist through :func:`track_persist`, and
 callers release everything between logical queries with

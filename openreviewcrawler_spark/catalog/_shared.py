@@ -146,6 +146,7 @@ _BINPACK_HOST_EXPR = "'h' || cast(doc_id % ((doc_id % 37) + 1) as varchar(10))"
 # ---------------------------------------------------------------------------
 
 
+
 def _sw_sql(words: tuple[str, ...]) -> str:
     quoted = ", ".join(f"'{w}'" for w in words)
     return f"len(list_filter({_SQL_TOKENS}, t -> t in ({quoted})))"

@@ -754,7 +754,7 @@ def q_mm_modality_mix_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal dataset card: per modality (the image/audio/video cycle
     of multimodal.assets_from_documents) — asset count, payload bytes,
     byte share and mean asset size. The one-table summary a multimodal
-    training mix quotes next to traindata_dataset_card's text card. One
+    training mix quotes next to its text card. One
     groupBy; the share window runs over 3 rows; integer ppm and
     integer-division means."""
     from ..operators.multimodal import assets_from_documents
@@ -802,7 +802,7 @@ _FRAME_BUDGET = 10000
 def q_mm_frame_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling budget allocation across videos: frames per asset
     proportional to sqrt(duration) under a global budget — the τ=2
-    temperature-mix recipe (traindata_domain_mix) applied to the video
+    temperature-mix recipe applied to the video
     tier, so long videos don't monopolize the decode budget and shorts
     aren't starved. sqrt is IEEE-correctly-rounded (bit-stable); the
     normalizer sums sqrt terms as DECIMAL(28,12) (exact, associative);

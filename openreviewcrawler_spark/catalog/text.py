@@ -1341,7 +1341,7 @@ def q_text_simhash_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy corpus-drift monitor: per source, a GROUP-level 64-bit
     simhash (token bit-votes aggregated over the whole epoch slice, not
     per doc) for the even-id and odd-id epochs, compared by Hamming
-    distance — corpus_snapshot_diff sees only exact-hash turnover;
+    distance — checkpoint.snapshot_diff sees only exact-hash turnover;
     this sees DISTRIBUTIONAL drift (a source whose vocabulary shifted
     moves many bits even when no page is byte-identical across
     epochs). Same vote/band arithmetic as dedup_simhash (all

@@ -49,9 +49,11 @@ def asof_join(
     caller owns (mirrors DuckDB ASOF JOIN semantics). Left rows with no
     eligible right row keep NULL values (left-outer asof).
 
-    Timestamps are integral (epoch-ms BIGINT by convention, any integer
-    order key works); a timestamp-typed right ts would silently come
-    back as epoch SECONDS through the final long cast, so it is
+    Timestamps are integral on both sides (epoch-ms BIGINT by
+    convention, any integer order key works): a timestamp-typed right ts
+    would silently come back as epoch SECONDS through the final long
+    cast, and a timestamp-typed left ts would be compared against the
+    right side's integers through an implicit cast, so either is
     rejected here. ``value_cols`` and ``asof_ts_name`` must not collide
     with left's non-key columns — the union projection would otherwise
     produce duplicate/ambiguous output columns (r4 ADVICE)."""
@@ -66,13 +68,15 @@ def asof_join(
         raise ValueError(
             f"asof_ts_name {asof_ts_name!r} collides with a left column"
         )
-    rts_type = right.schema[rts].dataType.simpleString()
-    if rts_type not in ("bigint", "int", "smallint", "tinyint"):
-        raise ValueError(
-            f"right ts column {rts!r} is {rts_type}; asof_join expects an "
-            "integral order key (epoch-ms bigint) — cast timestamps with "
-            "unix_millis() first (cast('long') on a timestamp is SECONDS)"
-        )
+    for side, df, col in (("left", left, ts_col), ("right", right, rts)):
+        col_type = df.schema[col].dataType.simpleString()
+        if col_type not in ("bigint", "int", "smallint", "tinyint"):
+            raise ValueError(
+                f"{side} ts column {col!r} is {col_type}; asof_join expects "
+                "an integral order key (epoch-ms bigint) — cast timestamps "
+                "with unix_millis() first (cast('long') on a timestamp is "
+                "SECONDS)"
+            )
     lcols = left.columns
     r = right.select(
         *key_cols,

@@ -557,6 +557,45 @@ def connected_components(
     ).unionByName(singletons)
 
 
+def decontaminate_ngrams(
+    train: DataFrame, eval_docs: DataFrame, n: int = 3
+) -> DataFrame:
+    """(doc_id, n_hit_ngrams, n_eval_docs) — benchmark decontamination scan.
+
+    Flags every training document sharing at least one n-token shingle with
+    an evaluation/benchmark document (the standard pre-training
+    decontamination pass; the reference has no analog — its corpus is
+    benchmark-free by construction, but any 100 TB web corpus must prove its
+    eval sets aren't leaked into training data).
+
+    Scale shape: the eval side is MBs against a 100 TB train side, so the
+    eval n-gram inverted index is built once, deduplicated, and BROADCAST —
+    the train shingles stream through a map-side hash join and the only
+    shuffle is the final per-doc count aggregation (map-side partial). No
+    stop-shingle cap here, deliberately: dropping a hot n-gram could hide a
+    real leak, and the broadcast side bounds the join fan-out at
+    |eval ngrams| regardless of train-side frequency.
+
+    ``n`` is the contamination window: production decontamination uses
+    8-13-token windows (the scale of published benchmark answers); the
+    fixture corpus draws from a ~30-word vocabulary, so the catalog entry
+    runs n=3 to exercise every code path with non-trivial hit counts.
+
+    eval_docs: (eval_id, text). Returns one row per CONTAMINATED train doc:
+    distinct leaked n-grams and how many distinct eval docs they came from.
+    """
+    ev = (
+        shingles_df(eval_docs.select(F.col("eval_id").alias("doc_id"), "text"), n=n)
+        .select(F.col("doc_id").alias("eval_id"), "shingle")
+    )
+    tr = shingles_df(train, n=n)
+    hits = tr.join(F.broadcast(ev), "shingle")
+    return hits.groupBy("doc_id").agg(
+        F.count_distinct("shingle").alias("n_hit_ngrams"),
+        F.count_distinct("eval_id").alias("n_eval_docs"),
+    )
+
+
 def minhash_lsh_incremental(
     old: DataFrame, new: DataFrame, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
@@ -920,3 +959,108 @@ def quality_keeper(comp: DataFrame, quality: DataFrame) -> DataFrame:
     )
 
 
+def banded_hamming_pairs(
+    wide: DataFrame,
+    id_col: str = "asset_id",
+    n_bands: int = SIMHASH_BANDS,
+    max_hamming: int = SIMHASH_MAX_HAMMING,
+) -> DataFrame:
+    """(id_a, id_b, hamming) — near-duplicate pairs under Hamming distance
+    over ANY banded 64-bit fingerprint, given a wide table
+    (``id_col``, b0..b{n_bands-1}) of 16-bit band values. The generic
+    engine behind :func:`simhash_near_pairs`, reusable for perceptual
+    image hashes (pHash), audio chromaprints, or any other fixed-width
+    fingerprint a decode stage emits — the banding, hot-bucket cap and
+    exact verify are modality-independent.
+
+    Same at-scale contract as the simhash tier: candidate generation is a
+    band equi-join (pigeonhole: Hamming <= n_bands-1 pairs always share a
+    band, so blocking loses no qualifying pair), buckets above MAX_BUCKET
+    (degenerate all-black/all-silent assets) drop before the join, and
+    the band table evaluates ONCE (persisted; hot scan + anti-join +
+    self-join all read cache — the r3 union-embeds lesson).
+    """
+    band_structs = [
+        F.struct(
+            F.lit(b).cast("long").alias("band"), F.col(f"b{b}").alias("bval")
+        )
+        for b in range(n_bands)
+    ]
+    bands = track_persist(
+        wide.select(
+            F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
+        ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval"))
+    )
+    hot = (
+        bands.groupBy("band", "bval")
+        .agg(F.count(F.lit(1)).alias("__bn"))
+        .filter(F.col("__bn") > MAX_BUCKET)
+        .select("band", "bval")
+    )
+    kept = bands.join(F.broadcast(hot), ["band", "bval"], "left_anti")
+    l, r = kept.alias("l"), kept.alias("r")
+    pairs = (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bval") == F.col("r.bval"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+        )
+        .distinct()
+    )
+    wl = wide.select(
+        F.col(id_col).alias("id_a"),
+        *[F.col(f"b{b}").alias(f"la{b}") for b in range(n_bands)],
+    )
+    wr = wide.select(
+        F.col(id_col).alias("id_b"),
+        *[F.col(f"b{b}").alias(f"rb{b}") for b in range(n_bands)],
+    )
+    hamming = None
+    for b in range(n_bands):
+        term = F.bit_count(F.col(f"la{b}").bitwiseXOR(F.col(f"rb{b}")))
+        hamming = term if hamming is None else hamming + term
+    return (
+        pairs.join(wl, "id_a")
+        .join(wr, "id_b")
+        .select("id_a", "id_b", hamming.cast("long").alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def banded_hamming_pairs_sql(
+    wide_cte: str,
+    id_col: str = "asset_id",
+    n_bands: int = SIMHASH_BANDS,
+    max_hamming: int = SIMHASH_MAX_HAMMING,
+) -> str:
+    """Oracle twin of :func:`banded_hamming_pairs` over a CTE producing
+    (``id_col``, b0..b{n_bands-1})."""
+    ham = " + ".join(f"bit_count(xor(wl.b{b}, wr.b{b}))" for b in range(n_bands))
+    band_rows = " union all ".join(
+        f"select {id_col}, {b}::BIGINT as band, b{b} as bval from wide"
+        for b in range(n_bands)
+    )
+    return f"""
+with wide as ({wide_cte}),
+bands as (
+  {band_rows}
+), hot as (
+  select band, bval from bands group by 1, 2 having count(*) > {MAX_BUCKET}
+), kept as (
+  select b.* from bands b
+  where not exists (select 1 from hot h where h.band = b.band and h.bval = b.bval)
+), pairs as (
+  select distinct l.{id_col} as id_a, r.{id_col} as id_b
+  from kept l join kept r
+    on l.band = r.band and l.bval = r.bval and l.{id_col} < r.{id_col}
+)
+select p.id_a::BIGINT as id_a, p.id_b::BIGINT as id_b, ({ham})::BIGINT as hamming
+from pairs p
+join wide wl on wl.{id_col} = p.id_a
+join wide wr on wr.{id_col} = p.id_b
+where ({ham}) <= {max_hamming}
+"""

@@ -1,16 +1,88 @@
-"""Binary-payload plumbing: magic-byte MIME sniffing.
+"""Multimodal (image/audio/video) column plumbing.
 
 Not in the reference (its only binary payload is the fetched PDF blob,
 /root/reference/crawler.py:174,194 and database_model.py:62 ``pdf_binary
-LargeBinary``). Payloads are opaque ``binary`` columns; the sniffer reads a
-fixed-size head slice as a column expression, so the blob itself never
-reaches Python or a downstream exchange.
+LargeBinary``); required for the training-data-pipeline surface.
+
+Design: media are opaque ``binary`` columns + typed metadata, processed in
+Arrow-batched ``mapInPandas`` (bytes never round-trip through Python row
+objects). The actual codec step is STUBBED — image/audio libraries are not
+in this container — behind ``_decode_stub``, which derives deterministic
+fake dimensions from the payload bytes. The Spark-side plumbing (schema,
+batching, partitioning, UDF signature) is real and tested; swapping the stub
+for PIL/ffmpeg changes one function.
+
+Scale notes: payload columns dominate I/O, so every plan prunes them until
+the mapInPandas that needs bytes; metadata-only queries never read payloads
+(verified by ``.explain`` ReadSchema in tests). Frame sampling emits rows,
+not arrays, so downstream repartitioning can spread frames of one video
+across executors.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterator
+
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+ASSET_SCHEMA = "asset_id long, kind string, payload binary, src_len long"
+META_SCHEMA = "asset_id long, kind string, n_bytes long, width long, height long"
+FRAME_SCHEMA = "asset_id long, frame_idx long, frame_bytes binary, frame_len long"
+
+
+def assets_from_documents(docs: DataFrame) -> DataFrame:
+    """Derive a deterministic media-asset table from ``documents``: payload =
+    utf-8 bytes of the text (a stand-in blob), kind cycles image/audio/video."""
+    kind = F.element_at(
+        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+        (F.col("doc_id") % 3 + 1).cast("int"),
+    )
+    return docs.select(
+        F.col("doc_id").alias("asset_id"),
+        kind.alias("kind"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
+        F.length(F.col("text")).cast("long").alias("src_len"),
+    )
+
+
+def _decode_stub(payload: bytes) -> tuple[int, int]:
+    """STUB codec: derive (width, height) deterministically from the bytes.
+
+    A real deployment decodes with PIL/libav here; raising
+    NotImplementedError instead would make the plumbing untestable, so the
+    stub is a documented deterministic fake: width = n % 640 + 1,
+    height = first_byte + 1.
+    """
+    n = len(payload)
+    return n % 640 + 1, (payload[0] if n else 0) + 1
+
+
+def decode_metadata(assets: DataFrame) -> DataFrame:
+    """Arrow-batched 'decode': (asset_id, kind, n_bytes, width, height).
+
+    mapInPandas so each task handles whole Arrow record batches of binary —
+    the same shape a real decoder wants (vectorized, no per-row Python UDF
+    dispatch)."""
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = pdf["payload"]
+            dims = [_decode_stub(bytes(p)) for p in payloads]
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["asset_id"],
+                    "kind": pdf["kind"],
+                    "n_bytes": payloads.map(len).astype("int64"),
+                    "width": pd.Series([d[0] for d in dims], dtype="int64"),
+                    "height": pd.Series([d[1] for d in dims], dtype="int64"),
+                }
+            )
+
+    return assets.select("asset_id", "kind", "payload").mapInPandas(
+        _decode, META_SCHEMA
+    )
 
 
 #: ASCII-representable magic prefixes -> MIME (cross-engine determinism:
@@ -51,3 +123,190 @@ def sniff_mime(pages: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
+def sample_frames(assets: DataFrame, n_frames: int = 3) -> DataFrame:
+    """Frame sampling: split each payload into ``n_frames`` equal slices
+    (rows, not arrays). Real frame extraction swaps the slicer for a codec;
+    the row-explosion plumbing is what matters at scale."""
+
+    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, idxs, blobs, lens = [], [], [], []
+            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
+                b = bytes(payload)
+                step = len(b) // n_frames
+                for i in range(n_frames):
+                    ids.append(aid)
+                    idxs.append(i)
+                    chunk = b[i * step : (i + 1) * step] if step else b""
+                    blobs.append(chunk)
+                    lens.append(len(chunk))
+            yield pd.DataFrame(
+                {
+                    "asset_id": pd.Series(ids, dtype="int64"),
+                    "frame_idx": pd.Series(idxs, dtype="int64"),
+                    "frame_bytes": pd.Series(blobs, dtype=object),
+                    "frame_len": pd.Series(lens, dtype="int64"),
+                }
+            )
+
+    return assets.filter(F.col("kind") == "video").select(
+        "asset_id", "payload"
+    ).mapInPandas(_frames, FRAME_SCHEMA)
+
+
+CHUNK_WIN_MS = 2000
+CHUNK_HOP_MS = 1500
+
+
+def plan_audio_chunks(
+    assets: DataFrame, win_ms: int = CHUNK_WIN_MS, hop_ms: int = CHUNK_HOP_MS
+) -> DataFrame:
+    """Audio chunking plan — (asset_id, chunk_idx, start_ms, end_ms) for
+    every audio asset: fixed windows with overlap (win 2 s, hop 1.5 s —
+    the Whisper-style segmentation shape). The DECODE stays behind the
+    documented stub; this is the metadata-only planner, so it is pure
+    JVM expressions (duration from src_len via the deterministic
+    10 ms/byte stand-in), one sequence-explode, zero Python, zero
+    shuffle — the plan rows feed the Arrow decode stage downstream.
+
+    n_chunks = 1 if dur <= win else 1 + ceil((dur - win) / hop); the last
+    chunk is truncated at the asset's end.
+    """
+    dur = (F.col("src_len") * 10).cast("long")
+    n_chunks = (
+        F.when(dur <= win_ms, F.lit(1).cast("long"))
+        .otherwise(F.lit(1) + F.floor((dur - win_ms + hop_ms - 1) / hop_ms))
+        .cast("long")
+    )
+    audio = assets.filter(F.col("kind") == "audio").select(
+        "asset_id", dur.alias("__dur"), n_chunks.alias("__n")
+    )
+    c = audio.select(
+        "asset_id",
+        "__dur",
+        F.explode(F.sequence(F.lit(0), (F.col("__n") - 1).cast("int"))).alias(
+            "chunk_idx"
+        ),
+    )
+    start = F.col("chunk_idx").cast("long") * hop_ms
+    return c.select(
+        "asset_id",
+        F.col("chunk_idx").cast("long").alias("chunk_idx"),
+        start.alias("start_ms"),
+        F.least(start + win_ms, F.col("__dur")).alias("end_ms"),
+    )
+
+
+TILE_PX = 64
+
+
+def plan_image_tiles(assets: DataFrame, tile_px: int = TILE_PX) -> DataFrame:
+    """Image tiling plan — (asset_id, tile_idx, x0, y0, x1, y1) covering
+    each image with a tile_px grid (ViT-patch / SAM-crop preprocessing
+    shape). Like ``plan_audio_chunks`` this is the METADATA-ONLY planner:
+    width/height come from the deterministic src_len stand-in for the
+    decode stub's output (w = src_len % 613 + 32, h = src_len*7 % 487 +
+    32 — the real pipeline joins ``decode_metadata`` instead), so the
+    plan is pure JVM sequence-explode with the payload column pruned;
+    the Arrow crop stage downstream is the only reader of bytes.
+
+    Edge tiles are clipped at the image border (x1/y1 = least(..)), so
+    sum(tile areas) == w*h exactly. Row-major tile_idx = ty*nx + tx.
+    Not in the reference (PDF blobs only); training-pipeline surface.
+    """
+    w = (F.col("src_len") % 613 + 32).cast("long")
+    h = ((F.col("src_len") * 7) % 487 + 32).cast("long")
+    img = assets.filter(F.col("kind") == "image").select(
+        "asset_id", w.alias("__w"), h.alias("__h")
+    )
+    nx = F.floor((F.col("__w") + tile_px - 1) / tile_px).cast("long")
+    ny = F.floor((F.col("__h") + tile_px - 1) / tile_px).cast("long")
+    g = img.select("asset_id", "__w", "__h", nx.alias("__nx"), ny.alias("__ny"))
+    t = g.select(
+        "asset_id",
+        "__w",
+        "__h",
+        "__nx",
+        F.explode(
+            F.sequence(F.lit(0), (F.col("__nx") * F.col("__ny") - 1).cast("int"))
+        ).alias("tile_idx"),
+    )
+    tx = F.col("tile_idx").cast("long") % F.col("__nx")
+    ty = F.floor(F.col("tile_idx").cast("long") / F.col("__nx")).cast("long")
+    x0 = tx * tile_px
+    y0 = ty * tile_px
+    return t.select(
+        "asset_id",
+        F.col("tile_idx").cast("long").alias("tile_idx"),
+        x0.alias("x0"),
+        y0.alias("y0"),
+        F.least(x0 + tile_px, F.col("__w")).alias("x1"),
+        F.least(y0 + tile_px, F.col("__h")).alias("y1"),
+    )
+
+
+def scene_cuts(frames: DataFrame, hamming_thr: int = 8) -> DataFrame:
+    """Scene segmentation plan from per-frame perceptual hashes: a cut
+    wherever consecutive frames' hashes differ by more than
+    ``hamming_thr`` bits, scenes as (start_frame, n_frames) runs. The
+    video preprocessing step between frame sampling and per-scene
+    keyframe extraction — planned entirely from hash metadata (the
+    byte-level decode stays behind the documented multimodal stub).
+
+    Scale shape: ONE shuffle on video_id — the lag window, the running
+    cut-count (scene id) window and the per-scene groupBy all share the
+    same partitioning, so Spark reuses one exchange + one sort.
+    ``bit_count(xor)`` is pure codegen (the simhash verify recipe);
+    integer-only output.
+    """
+    w = Window.partitionBy("video_id").orderBy("frame_idx")
+    prev = F.lag("phash").over(w)
+    cut = F.when(prev.isNull(), F.lit(1)).otherwise(
+        (
+            F.bit_count(F.col("phash").bitwiseXOR(prev)) > hamming_thr
+        ).cast("int")
+    )
+    marked = frames.select(
+        "video_id", "frame_idx", "phash", cut.alias("is_cut")
+    )
+    run = Window.partitionBy("video_id").orderBy("frame_idx").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    scened = marked.withColumn("scene_seq", F.sum("is_cut").over(run))
+    return (
+        scened.groupBy("video_id", F.col("scene_seq").cast("long").alias("scene_seq"))
+        .agg(
+            F.min("frame_idx").cast("long").alias("start_frame"),
+            F.count("*").cast("long").alias("n_frames"),
+        )
+    )
+
+
+def scene_cuts_sql(frames_cte: str, hamming_thr: int = 8) -> str:
+    """DuckDB twin of :func:`scene_cuts`. ``frames_cte`` must select
+    (video_id, frame_idx, phash)."""
+    return f"""
+with f as ({frames_cte}),
+marked as (
+  select video_id, frame_idx, phash,
+         case when lag(phash) over (
+                partition by video_id order by frame_idx) is null then 1
+              when bit_count(xor(phash, lag(phash) over (
+                partition by video_id order by frame_idx))) > {hamming_thr}
+                then 1
+              else 0 end as is_cut
+  from f
+),
+scened as (
+  select video_id, frame_idx, is_cut,
+         sum(is_cut) over (
+           partition by video_id order by frame_idx
+           rows between unbounded preceding and current row
+         ) as scene_seq
+  from marked
+)
+select video_id, scene_seq::BIGINT as scene_seq,
+       min(frame_idx)::BIGINT as start_frame,
+       count(*)::BIGINT as n_frames
+from scened group by video_id, scene_seq
+"""

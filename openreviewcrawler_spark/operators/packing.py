@@ -1,8 +1,11 @@
-"""Scalable exclusive prefix sum over a globally ordered DataFrame.
+"""Sequence packing — concat-and-chunk document→training-sequence assignment.
 
-Laying records out back to back — archive byte offsets for WARC compaction,
-token offsets for sequence packing — needs each row's EXCLUSIVE PREFIX SUM
-of a size column in a global order.
+LLM trainers consume fixed-length token sequences, not documents: the corpus
+is (virtually) concatenated in a deterministic order and split every
+``seq_tokens`` tokens. The assignment each document needs is therefore its
+EXCLUSIVE PREFIX SUM of token counts in the global order — which chunk it
+starts in (``seq_id``), where (``offset_in_seq``), and how many chunks it
+spans (``n_seqs_spanned``).
 
 A naive ``sum() over (order by ...)`` window is a single-partition funnel —
 the same trap ``ordering.assign_seq_scalable`` avoids for row numbers — so
@@ -17,9 +20,9 @@ the prefix sum here generalizes that two-pass pattern from counts to sums:
      further shuffle, deterministic at any parallelism (the sum depends
      only on the total order, never on partition boundaries).
 
-Sizes are integers, so unlike float aggregation there is no fold-order
-hazard: the result is exactly the single-threaded cumsum and the DuckDB
-oracle window (``warc_compaction_plan``) matches bit-for-bit.
+Token counts are integers, so unlike float aggregation there is no
+fold-order hazard: the result is exactly the single-threaded cumsum, and a
+SQL ``sum(...) over (order by ...)`` window matches it bit-for-bit.
 """
 
 from __future__ import annotations
@@ -87,3 +90,59 @@ def prefix_sum_scalable(
     return d.mapInPandas(_stamp, out_schema)
 
 
+def pack_sequences(
+    docs: DataFrame,
+    seq_tokens: int,
+    token_col: str = "n_tokens",
+    order_cols: list[str] | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Assign each document its place in the packed fixed-length token
+    stream. Adds ``tok_offset`` (exclusive prefix sum), ``seq_id``,
+    ``offset_in_seq``, ``n_seqs_spanned``. ``token_col`` must be >= 1 per
+    row (single-space tokenization guarantees it)."""
+    order_cols = order_cols or ["doc_id"]
+    with_off = prefix_sum_scalable(
+        docs, token_col, order_cols, "tok_offset", num_partitions
+    )
+    off, s = F.col("tok_offset"), F.lit(seq_tokens)
+    return (
+        with_off.withColumn("seq_id", F.expr(f"tok_offset div {seq_tokens}"))
+        .withColumn("offset_in_seq", F.pmod(off, s).cast("long"))
+        .withColumn(
+            "n_seqs_spanned",
+            (F.expr(f"(tok_offset + {token_col} - 1) div {seq_tokens}")
+             - F.col("seq_id") + F.lit(1)).cast("long"),
+        )
+    )
+
+
+def token_budget_trim(
+    docs: DataFrame,
+    budget: int,
+    score_col: str = "score",
+    token_col: str = "n_tokens",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Data selection under a global token budget: keep the highest-quality
+    documents whose token counts fit.
+
+    Training runs are sized in tokens, not documents; given an integer
+    quality ``score`` per doc, the kept set is the greedy best-first prefix
+    — exactly the docs whose EXCLUSIVE prefix sum of tokens in
+    (score desc, id) order still fits ``budget`` with their own tokens.
+    A straddling document (starts inside, ends outside) is dropped whole —
+    budgets bound what the trainer reads, so partial docs don't count.
+
+    Scale shape: one :func:`prefix_sum_scalable` pass (range-repartition +
+    O(partitions) counts job + Arrow stamp — no global window funnel), then
+    a pure filter. Deterministic at any parallelism; integer arithmetic
+    only.
+    """
+    d = docs.withColumn("__neg_score", -F.col(score_col))
+    stamped = prefix_sum_scalable(
+        d, token_col, ["__neg_score", id_col], "tok_prefix"
+    )
+    return stamped.filter(
+        F.col("tok_prefix") + F.col(token_col) <= F.lit(budget)
+    ).drop("__neg_score")

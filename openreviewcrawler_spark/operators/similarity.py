@@ -1,22 +1,27 @@
-"""Embedding-space building blocks for semantic dedup.
+"""Approximate-nearest-neighbor search over an embedding column.
 
-Not present in the reference (it has no vector data). What remains here
-serves ``semantic_dedup`` and the LSH-banded cosine dedup in
-``operators/dedup.py``; all of it is pure array expressions (JVM-side,
-codegen'd — no Python in the scoring loop):
+Not present in the reference (it has no vector data); required for the
+training-data-pipeline surface. Tiers, all pure array expressions
+(JVM-side, codegen'd — no Python in the scoring loop):
 
-  * ``ivf_centroids`` / ``ivf_assign`` — IVF coarse quantizer:
-                         deterministic seeded centroids (first K corpus
-                         vectors), every vector assigned to its nearest
-                         centroid. At 100 TB the centroid table stays a
-                         broadcast-side constant and the corpus shuffles
-                         once on cell.
-  * ``lsh_band_values`` — random-hyperplane cosine LSH bands:
+  * ``brute_topk``     — exact cosine top-k: broadcast the (small) query set
+                         against the full corpus, score, per-query window.
+                         The baseline and the recall oracle.
+  * ``ivf_topk``       — IVF: deterministic seeded coarse quantizer (first K
+                         corpus vectors are the centroids), every vector
+                         assigned to its nearest centroid, queries probe
+                         their P nearest cells. The candidate join is an
+                         equi-join on cell id; at 100 TB the centroid table
+                         stays a broadcast-side constant and the corpus
+                         shuffles once on cell.
+  * ``lsh_signatures`` / ``lsh_band_values`` — random-hyperplane cosine LSH:
                          bit j = [v . r_j > 0]. Hyperplane components are
                          md5-derived CONSTANTS baked into the plan as literal
                          arrays (identical values in Spark, DuckDB, and
                          Python — no per-row hash evaluation, the r1 cost).
-  * ``semantic_dedup`` — SemDeDup: cosine near-duplicates within an IVF cell.
+  * ``ann_lsh_topk``   — LSH retrieval: candidates via signature-band
+                         equi-join, exact-cosine verify, per-query top-k.
+                         The 10^10-row scale path: no brute-force stage.
 
 All floats are summed in identical left-fold order in both engines and
 rounded before comparison.
@@ -31,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..caching import track_persist
 
+N_PLANES = 8  # legacy full-signature width (ann_lsh_signature)
 IVF_REFINE = 1  # Lloyd iterations refining the seeded centroids
 LSH_PLANES = 24  # banded retrieval: 3 bands x 8 bits
 LSH_BAND_BITS = 8
@@ -38,6 +44,7 @@ LSH_BANDS = LSH_PLANES // LSH_BAND_BITS
 MAX_VEC_BUCKET = 50  # hot-bucket cap, same discipline as operators.dedup
 MAX_DIM = 64  # plane constants are generated to this length (testdata dim)
 IVF_K = 8  # coarse centroids
+IVF_PROBE = 2  # cells probed per query
 
 
 def _h32(s: str) -> int:
@@ -85,6 +92,32 @@ def _plane_dot(e: Column, j: int, dim: int = MAX_DIM) -> Column:
         F.zip_with(e, F.slice(_plane_lit(j, dim), 1, F.size(e)), lambda x, y: x * y),
         F.lit(0.0),
         lambda a, x: a + x,
+    )
+
+
+def brute_topk(vectors: DataFrame, n_queries: int = 16, k: int = 5) -> DataFrame:
+    """(query_id, cand_id, rank, cos) — exact top-k by cosine.
+
+    Query side is tiny -> broadcast; the corpus side streams. Rank ties are
+    broken by cand_id so output is deterministic.
+    """
+    v = _as_double(vectors)
+    q = v.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("norm").alias("qnorm"),
+    )
+    scored = v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("cand_id"),
+        _cos("qe", "e", "qnorm", "norm").alias("cos_raw"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", F.col("rank").cast("long").alias("rank"),
+                F.round(F.col("cos_raw"), 3).alias("cos"))
     )
 
 
@@ -151,24 +184,112 @@ def ivf_centroids(
     return cents
 
 
-def ivf_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell) — each vector's nearest centroid by cosine (ties
-    broken by cell id).
+def ivf_assign(vectors: DataFrame, n_centroids: int = IVF_K,
+               probe: int = 1, cents: DataFrame | None = None) -> DataFrame:
+    """(vec_id, cell, cell_rank) — each vector's ``probe`` nearest centroids
+    by cosine (rank 1 = nearest, ties broken by cell id). probe=1 is the
+    storage assignment; probe>1 is the query-side multi-probe.
 
-    ``cents``: precomputed quantizer (from :func:`ivf_centroids`), so the
-    Lloyd refinement runs once however often the caller assigns. The argmax
-    is a ``max(struct(csim, -cell))`` groupBy (map-side partial, one
-    shuffle, no window sort) with the same (csim desc, cell asc) tie-break."""
+    ``cents``: precomputed quantizer (from :func:`ivf_centroids`). Callers
+    that assign twice against the same quantizer (storage + probe, as
+    ``ivf_topk`` does) MUST pass it in — otherwise each call re-runs the full
+    Lloyd refinement. probe=1 avoids the per-vector sort entirely: argmax is
+    a ``max(struct(csim, -cell))`` groupBy (map-side partial, one shuffle, no
+    window sort) with the same (csim desc, cell asc) tie-break."""
     v = _as_double(vectors)
+    if cents is None:
+        cents = ivf_centroids(vectors, n_centroids)
     scored = v.join(F.broadcast(cents)).select(
         "vec_id",
         "cell",
         _cos("ce", "e", "cnorm", "norm").alias("csim"),
     )
-    best = scored.groupBy("vec_id").agg(
-        F.max(F.struct(F.col("csim"), (-F.col("cell")).alias("negc"))).alias("b")
+    if probe == 1:
+        best = scored.groupBy("vec_id").agg(
+            F.max(F.struct(F.col("csim"), (-F.col("cell")).alias("negc"))).alias("b")
+        )
+        return best.select(
+            "vec_id",
+            (-F.col("b.negc")).cast("long").alias("cell"),
+            F.lit(1).cast("long").alias("cell_rank"),
+        )
+    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cell"))
+    return (
+        scored.withColumn("cell_rank", F.row_number().over(w))
+        .filter(F.col("cell_rank") <= probe)
+        .select("vec_id", "cell", F.col("cell_rank").cast("long").alias("cell_rank"))
     )
-    return best.select("vec_id", (-F.col("b.negc")).cast("long").alias("cell"))
+
+
+def ivf_topk(vectors: DataFrame, n_queries: int = 16, k: int = 3,
+             n_centroids: int = IVF_K, probe: int = IVF_PROBE) -> DataFrame:
+    """(query_id, cand_id, rank, cos) — top-k within the query's probed
+    cells. Corpus vectors live in their single nearest cell; each query
+    probes its ``probe`` nearest cells, so the candidate join is an
+    equi-join on cell id (broadcast query side), then exact-cosine verify
+    and a per-query window. The real-IVF replacement for the r1 ``label``
+    stand-in quantizer.
+
+    The quantizer is computed ONCE and checkpointed (K rows): storage and
+    probe assignment reuse the identical materialized centroids — the r2
+    version re-ran the full Lloyd pass (broadcast join + posexplode + two
+    shuffles) for each of the two assigns. The probe side also assigns only
+    the QUERY vectors (filter pushed before the centroid join), not the full
+    corpus."""
+    v = _as_double(vectors)
+    # K rows; eager localCheckpoint materializes the Lloyd result and cuts
+    # its lineage so neither assign re-plans the refinement
+    cents = ivf_centroids(vectors, n_centroids).localCheckpoint(eager=True)
+    storage = ivf_assign(vectors, n_centroids, probe=1, cents=cents)
+    qprobe = ivf_assign(
+        vectors.filter(F.col("vec_id") < n_queries), n_centroids, probe=probe,
+        cents=cents,
+    )
+    cand = (
+        qprobe.select(F.col("vec_id").alias("query_id"), "cell")
+        .join(storage.select(F.col("vec_id").alias("cand_id"), "cell"), "cell")
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id")
+        .distinct()
+    )
+    q = v.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("norm").alias("qnorm"),
+    )
+    scored = (
+        cand.join(v.select(F.col("vec_id").alias("cand_id"), "e", "norm"), "cand_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "cand_id",
+            _cos("qe", "e", "qnorm", "norm").alias("cos_raw"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", F.col("rank").cast("long").alias("rank"),
+                F.round(F.col("cos_raw"), 3).alias("cos"))
+    )
+
+
+def lsh_signatures(vectors: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
+    """(vec_id, sig) — random-hyperplane signature, bit j = [v . r_j > 0].
+
+    Identical output to the r1 runtime-hash version (same md5-derived plane
+    values), but the planes are literal arrays: the per-row cost is one
+    fused zip_with/fold per plane, no md5 calls in the hot path."""
+    v = vectors.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    sig = None
+    for j in range(n_planes):
+        bit = F.when(_plane_dot(F.col("e"), j) > 0, F.lit(1).cast("long")).otherwise(
+            F.lit(0)
+        )
+        term = bit * F.lit(1 << j).cast("long")
+        sig = term if sig is None else sig + term
+    return v.select("vec_id", sig.alias("sig"))
 
 
 def lsh_band_values(vectors: DataFrame, n_planes: int = LSH_PLANES,
@@ -208,6 +329,106 @@ def lsh_band_values(vectors: DataFrame, n_planes: int = LSH_PLANES,
     ).select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval"))
 
 
+def ann_lsh_topk(vectors: DataFrame, n_queries: int = 16, k: int = 5) -> DataFrame:
+    """(query_id, cand_id, rank, cos) — LSH-retrieved top-k: candidates are
+    corpus vectors sharing >=1 signature band with the query (equi-join on
+    (band, bval)), verified by exact cosine, ranked per query.
+
+    This is the ANN *answer* path the r1 round left half-built: signature ->
+    bucket join -> verify -> top-k, with no brute-force fallback. Queries
+    whose buckets contain no other vector return no rows (honest ANN miss).
+
+    Hot-bucket discipline (same cap as every other LSH path here): buckets
+    holding more than MAX_VEC_BUCKET vectors are dropped from BOTH sides
+    before the join — a degenerate band value on a low-entropy corpus would
+    otherwise pull a large corpus fraction into the per-query exact-cosine
+    verify (the quadratic-bucket trap). A query whose every band is hot
+    returns no rows (honest miss, the corpus region is boilerplate-dense);
+    the SQL oracle mirrors the drop.
+    """
+    v = _as_double(vectors)
+    # pin the band signatures: the hot-bucket scan, the query-side filter
+    # and the corpus side of the bucket join otherwise each re-run the
+    # 24 plane-dot folds per vector.
+    bands = track_persist(lsh_band_values(vectors))
+    hot = (
+        bands.groupBy("band", "bval")
+        .agg(F.count("*").alias("__bn"))
+        .filter(F.col("__bn") > MAX_VEC_BUCKET)
+        .select("band", "bval")
+    )
+    kept = bands.join(F.broadcast(hot), ["band", "bval"], "left_anti")
+    qb = kept.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), "band", "bval"
+    )
+    cand = (
+        F.broadcast(qb)
+        .join(kept.select(F.col("vec_id").alias("cand_id"), "band", "bval"),
+              ["band", "bval"])
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id")
+        .distinct()
+    )
+    q = v.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("norm").alias("qnorm"),
+    )
+    scored = (
+        cand.join(v.select(F.col("vec_id").alias("cand_id"), "e", "norm"), "cand_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "cand_id",
+            _cos("qe", "e", "qnorm", "norm").alias("cos_raw"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", F.col("rank").cast("long").alias("rank"),
+                F.round(F.col("cos_raw"), 3).alias("cos"))
+    )
+
+
+def embedding_qa(vectors: DataFrame) -> DataFrame:
+    """Embedding-table QA rollup — per label/source: (n_vectors, min_dim,
+    max_dim, n_zero_norm, n_nan, min_norm, max_norm, mean_norm).
+
+    The ingest gate in front of every ANN/dedup stage above: ragged
+    dimensions (min_dim != max_dim) break zip_with silently, zero-norm
+    vectors make cosine NaN, and NaN elements poison whole partitions of
+    a brute-force top-k — cheaper to count them in ONE scan than to debug
+    them downstream at 100 TB.
+
+    Scale shape: per-row array folds (the same fold shape as the
+    ANN norms — Arrow-free, JVM higher-order functions) then a single
+    map-side-combined groupBy on the label. Float parity: per-row norm is
+    bit-identical across engines (products + left fold + correctly-rounded
+    sqrt); min/max are order-independent; the mean rides the decimal-cast
+    sum recipe (exact, associative), one division + round at the end.
+    """
+    d = _as_double(vectors)
+    has_nan = F.exists("e", lambda x: F.isnan(x))
+    return d.groupBy("label").agg(
+        F.count("*").cast("long").alias("n_vectors"),
+        F.min(F.size("e")).cast("long").alias("min_dim"),
+        F.max(F.size("e")).cast("long").alias("max_dim"),
+        F.sum(F.when(F.col("norm") == 0.0, 1).otherwise(0))
+        .cast("long")
+        .alias("n_zero_norm"),
+        F.sum(F.when(has_nan, 1).otherwise(0)).cast("long").alias("n_nan"),
+        F.round(F.min("norm"), 6).alias("min_norm"),
+        F.round(F.max("norm"), 6).alias("max_norm"),
+        F.round(
+            F.sum(F.col("norm").cast("decimal(28,12)")).cast("double")
+            / F.count("*").cast("double"),
+            6,
+        ).alias("mean_norm"),
+    )
+
+
 SEMDEDUP_THRESHOLD = 0.99  # cosine above which two in-cell vectors are dups
 
 
@@ -227,7 +448,7 @@ def semantic_dedup(
     the quadratic blowup of all-pairs cosine never materializes.
 
     Scale shape: the quantizer is K rows (localCheckpointed once,
-    broadcast into the assignment pass — the r2 ivf lesson); the
+    broadcast into both assignment passes — the r2 ivf lesson); the
     assigned table is persisted through the tracked registry so the
     in-cell self-join's two sides read cache (the r3 self-join lesson);
     the join itself is an EQUI join on cell. Cell population is the knob:
@@ -241,7 +462,9 @@ def semantic_dedup(
     from ..caching import track_persist
 
     cents = ivf_centroids(vectors, n_centroids).localCheckpoint(eager=True)
-    assign = ivf_assign(vectors, cents)
+    assign = ivf_assign(vectors, n_centroids, probe=1, cents=cents).select(
+        "vec_id", "cell"
+    )
     d = _as_double(vectors).select("vec_id", "e", "norm")
     sv = track_persist(d.join(assign, "vec_id"))
     a = sv.select(
@@ -270,18 +493,1180 @@ def semantic_dedup(
     )
 
 
+def quantize_qa(vectors: DataFrame) -> DataFrame:
+    """Int8 (0..255) per-vector affine quantization QA — (vec_id, mn, mx,
+    scale, max_abs_err, n_coarse). The storage tier every large ANN/
+    embedding corpus runs: 4x smaller vectors against a bounded
+    reconstruction error; this op reports that bound per vector so the
+    pipeline can gate which shards may be quantized.
+
+    q_i = clamp(floor((x_i - mn) / scale + 0.5), 0, 255) with
+    scale = (mx - mn) / 255; errors are |x_i - (mn + q_i * scale)|.
+    max_abs_err is an order-free max over per-element doubles (each
+    bit-identical across engines: +,-,*,/ and floor are correctly
+    rounded); n_coarse counts elements whose error exceeds 0.375 * scale
+    (the worst quartile of the quantization band) — an integer, exact.
+    Degenerate constant vectors (mx == mn) quantize losslessly via a
+    dummy unit scale.
+
+    Scale shape: pure map-side array expressions, zero shuffle, zero
+    Python. mn/mx/scale are materialized as COLUMNS before the lambda
+    uses them — a lambda capturing the array_min EXPRESSION would
+    re-evaluate it per element (the r4 lambda-capture lesson).
+    """
+    v = vectors.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    s = v.select(
+        "vec_id",
+        "e",
+        F.array_min("e").alias("mn"),
+        F.array_max("e").alias("mx"),
+    ).withColumn(
+        "qscale",
+        F.when(
+            F.col("mx") > F.col("mn"),
+            (F.col("mx") - F.col("mn")) / F.lit(255.0),
+        ).otherwise(F.lit(1.0)),
+    )
+    mn, qs = F.col("mn"), F.col("qscale")
+    dq = lambda x: mn + F.least(  # noqa: E731
+        F.lit(255.0), F.greatest(F.lit(0.0), F.floor((x - mn) / qs + F.lit(0.5)))
+    ) * qs
+    errs = F.transform(F.col("e"), lambda x: F.abs(x - dq(x)))
+    w = s.withColumn("errs", errs)
+    return w.select(
+        "vec_id",
+        F.round("mn", 6).alias("mn"),
+        F.round("mx", 6).alias("mx"),
+        F.round((F.col("mx") - F.col("mn")) / F.lit(255.0), 8).alias("scale"),
+        F.round(F.array_max("errs"), 8).alias("max_abs_err"),
+        F.size(
+            F.filter("errs", lambda er: er > qs * F.lit(0.375))
+        ).cast("long").alias("n_coarse"),
+    )
+
+
+def quantize_qa_sql(vectors_cte: str) -> str:
+    """Oracle twin: identical clamp/floor affine arithmetic; mn/mx/scale
+    staged as columns in a prior CTE (same lambda-capture discipline)."""
+    return f"""
+with vraw as ({vectors_cte}),
+v as (select vec_id, embedding::DOUBLE[] as e from vraw),
+s as (
+  select vec_id, e, list_min(e) as mn, list_max(e) as mx,
+         case when list_max(e) > list_min(e)
+              then (list_max(e) - list_min(e)) / 255.0 else 1.0 end as qscale
+  from v
+),
+w as (
+  select vec_id, mn, mx, qscale,
+         list_transform(e, x -> abs(x - (mn + least(255.0, greatest(0.0,
+           floor((x - mn) / qscale + 0.5))) * qscale))) as errs
+  from s
+)
+select vec_id, round(mn, 6) as mn, round(mx, 6) as mx,
+       round((mx - mn) / 255.0, 8) as scale,
+       round(list_max(errs), 8) as max_abs_err,
+       len(list_filter(errs, er -> er > qscale * 0.375))::BIGINT as n_coarse
+from w
+"""
+
+
+def centroid_drift(vectors: DataFrame) -> DataFrame:
+    """Per-label centroid norm + distance to the GLOBAL centroid — the
+    domain-shift monitor a training-data pipeline runs per ingest batch:
+    a source whose centroid drifts from the corpus centroid signals a
+    distribution change (new boilerplate, language shift, scraper
+    breakage) before any downstream eval does. One row per label:
+    (label, n_vectors, centroid_norm, drift_to_global).
+
+    Scale shape: ONE posexplode pass (rows = vectors x dim, map-side
+    combinable), ONE (label, pos) groupBy; the global centroid derives
+    from the per-label DECIMAL sums (exact + associative — no second
+    scan of the corpus), and the dim-indexed join is against a table of
+    n_labels x dim rows, trivially small at any corpus size. No window
+    functions, no broadcast of corpus-sized relations.
+
+    Float parity recipe (CLAUDE.md): per-dim sums in DECIMAL(28,12)
+    (exact, shuffle-order independent — the k-means recipe,
+    `ivf_centroids` above); means = decimal::double / count (per-row,
+    exact); squared terms folded in INDEX ORDER via collect_list +
+    sort_array + F.aggregate with 0.0 init — bit-equal to DuckDB's
+    no-init list_reduce because every summand is non-negative; sqrt is
+    IEEE-correctly-rounded (unlike ln); output floor-truncated (the
+    round() tie-digit trap)."""
+    dims = vectors.select(
+        F.col("label").cast("long").alias("label"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "pos", "val"
+        ),
+    )
+    # lm (n_labels x dim rows) feeds BOTH the global centroid and the
+    # per-label join — without a persist Catalyst embeds the full
+    # corpus-scan aggregation once per consumer (the r3 "self-reference
+    # re-runs the upstream plan" trap; the plan guard asserts one scan)
+    lm = track_persist(
+        dims.groupBy("label", "pos").agg(
+            F.sum(F.col("val").cast("decimal(28,12)")).alias("s"),
+            F.count("*").alias("c"),
+        )
+    )
+    g = lm.groupBy("pos").agg(
+        (F.sum("s").cast("double") / F.sum("c")).alias("gm")
+    )
+    j = lm.join(g, "pos").select(
+        "label",
+        "pos",
+        "c",
+        (F.col("s").cast("double") / F.col("c")).alias("m"),
+        "gm",
+    )
+    d2 = (F.col("m") - F.col("gm")) * (F.col("m") - F.col("gm"))
+    agg = j.groupBy("label").agg(
+        F.max("c").cast("long").alias("n_vectors"),
+        F.sort_array(
+            F.collect_list(F.struct("pos", (F.col("m") * F.col("m")).alias("m2")))
+        ).alias("ml"),
+        F.sort_array(F.collect_list(F.struct("pos", d2.alias("d2")))).alias(
+            "dl"
+        ),
+    )
+    fold = lambda arr, fld: F.sqrt(  # noqa: E731
+        F.aggregate(
+            F.transform(arr, lambda st: st[fld]), F.lit(0.0), lambda a, x: a + x
+        )
+    )
+    trunc = lambda c: F.floor(c * F.lit(1000000.0)) / F.lit(1000000.0)  # noqa: E731
+    return agg.select(
+        "label",
+        "n_vectors",
+        trunc(fold(F.col("ml"), "m2")).alias("centroid_norm"),
+        trunc(fold(F.col("dl"), "d2")).alias("drift_to_global"),
+    )
+
+
+SQL_CENTROID_DRIFT = """
+with raw as (
+  select label::BIGINT as label, embedding::DOUBLE[] as e from embeddings
+),
+dims as (
+  select label, unnest(range(1, len(e) + 1)) as pos, unnest(e) as val
+  from raw
+),
+lm as (
+  select label, pos, sum(val::DECIMAL(28,12)) as s, count(*) as c
+  from dims group by label, pos
+),
+g as (select pos, sum(s)::DOUBLE / sum(c) as gm from lm group by pos),
+j as (
+  select label, pos, c, s::DOUBLE / c as m, gm
+  from lm join g using (pos)
+),
+a as (
+  select label, max(c)::BIGINT as n_vectors,
+         list(m * m order by pos) as ml,
+         list((m - gm) * (m - gm) order by pos) as dl
+  from j group by label
+)
+select label, n_vectors,
+       floor(sqrt(list_reduce(ml, (x, y) -> x + y)) * 1000000.0) / 1000000.0
+         as centroid_norm,
+       floor(sqrt(list_reduce(dl, (x, y) -> x + y)) * 1000000.0) / 1000000.0
+         as drift_to_global
+from a
+"""
+
+
+def dim_stats(vectors: DataFrame) -> DataFrame:
+    """Per-dimension QA profile — (pos, n, vmin, vmax, mean, n_zero,
+    is_dead) over the whole embedding table. The ingest-time detector for
+    dead dimensions (constant output — a truncated or mis-initialized
+    encoder head), clipped ranges, and zero-inflation; the per-dimension
+    sibling of :func:`embedding_qa`'s per-vector norms.
+
+    Scale shape: ONE posexplode pass, ONE groupBy(pos) with map-side
+    partials — output is dim rows regardless of corpus size. Parity:
+    min/max/counts are exact (float32-widened doubles compare exactly);
+    the mean rides the DECIMAL(28,12)-sum recipe on the RAW values only —
+    no decimal cast of any computed double (the shortest-repr cast
+    asymmetry stays out of reach); one double division, floor-truncated."""
+    dims = vectors.select(
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "pos", "val"
+        )
+    )
+    agg = dims.groupBy("pos").agg(
+        F.count("*").cast("long").alias("n"),
+        F.min("val").alias("vmin"),
+        F.max("val").alias("vmax"),
+        F.sum(F.col("val").cast("decimal(28,12)")).alias("s"),
+        F.sum(F.when(F.col("val") == 0.0, 1).otherwise(0))
+        .cast("long")
+        .alias("n_zero"),
+    )
+    return agg.select(
+        (F.col("pos") + 1).cast("long").alias("pos"),  # 1-based, oracle-shared
+        "n",
+        "vmin",
+        "vmax",
+        (
+            F.floor(
+                (F.col("s").cast("double") / F.col("n")) * F.lit(1000000.0)
+            )
+            / F.lit(1000000.0)
+        ).alias("mean"),
+        "n_zero",
+        (F.col("vmin") == F.col("vmax")).alias("is_dead"),
+    )
+
+
+SQL_DIM_STATS = """
+with dims as (
+  select unnest(range(1, len(embedding) + 1)) as pos,
+         unnest(embedding::DOUBLE[]) as val
+  from embeddings
+)
+select pos::BIGINT as pos, count(*)::BIGINT as n,
+       min(val) as vmin, max(val) as vmax,
+       floor((sum(val::DECIMAL(28,12))::DOUBLE / count(*)) * 1000000.0)
+         / 1000000.0 as mean,
+       sum(case when val = 0.0 then 1 else 0 end)::BIGINT as n_zero,
+       min(val) = max(val) as is_dead
+from dims group by pos
+"""
+
+
+def recall_eval(vectors: DataFrame, n_queries: int = 16, k: int = 5) -> DataFrame:
+    """ANN quality gate — recall@k of the LSH path against the exact
+    brute-force answer, per query: (query_id, n_brute, n_lsh, n_hit,
+    recall). The eval harness a production ANN deployment ships with:
+    recall collapse after a re-bucketing or plane change shows up here
+    before any training-data consumer sees it.
+
+    Both rankers run on the SAME fixed query sample (n_queries), so cost
+    is bounded by the sample, not the corpus: brute-force is a
+    broadcast-query scan (its only all-pairs side is the k x sample
+    output), the LSH side is the capped band join. The overlap count is
+    an equi-join on (query_id, cand_id); recall = n_hit / n_brute,
+    floor-truncated (tie-digit round() trap)."""
+    # each ranking feeds TWO consumers (its per-query count + the overlap
+    # join); an eager checkpoint of the k x sample rows (<= 80) runs each
+    # ranker pipeline exactly ONCE — unpersisted, both pipelines re-ran per
+    # consumer (the r3 "self-join embeds the upstream plan" class, ~2x the
+    # whole entry: measured 7.6 s -> see BENCH.md r5 notes)
+    brute = (
+        brute_topk(vectors, n_queries, k)
+        .select("query_id", "cand_id")
+        .localCheckpoint(eager=True)
+    )
+    approx = (
+        ann_lsh_topk(vectors, n_queries, k)
+        .select("query_id", "cand_id")
+        .localCheckpoint(eager=True)
+    )
+    nb = brute.groupBy("query_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_brute")
+    )
+    nl = approx.groupBy("query_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_lsh")
+    )
+    nh = (
+        brute.join(approx, ["query_id", "cand_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
+    )
+    out = (
+        nb.join(nl, "query_id", "left")
+        .join(nh, "query_id", "left")
+        .select(
+            "query_id",
+            "n_brute",
+            F.coalesce("n_lsh", F.lit(0)).cast("long").alias("n_lsh"),
+            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+        )
+    )
+    recall = F.col("n_hit").cast("double") / F.col("n_brute").cast("double")
+    return out.select(
+        "query_id",
+        "n_brute",
+        "n_lsh",
+        "n_hit",
+        (F.floor(recall * F.lit(1000000.0)) / F.lit(1000000.0)).alias("recall"),
+    )
+
+
+def pca_power(vectors: DataFrame, n_iter: int = 2, dim: int = 64) -> DataFrame:
+    """Dominant principal direction of the (uncentered) embedding Gram
+    matrix by POWER ITERATION — (pos, loading, eigenvalue). The
+    embedding-collapse monitor: a healthy encoder spreads variance, a
+    collapsing one concentrates it, and the top eigenvalue's share is
+    the first number a representation-quality dashboard plots. Two
+    matrix-vector products expressed as DataFrame aggregations — no
+    MLlib, no driver-side linear algebra.
+
+    Per iteration (v fixed, one row): y_i = <x_i, v> is an INDEX-ORDER
+    double fold per row (zip_with + aggregate = DuckDB's list_transform
+    + list_reduce, bit-equal); s_j = sum_i y_i * x_ij in DECIMAL(28,12)
+    (exact, shuffle-order independent — the k-means/centroid recipe);
+    norm + normalize via sqrt (IEEE-correctly-rounded) and per-row
+    division. The new v is ONE ROW, localCheckpoint()ed so the next
+    iteration's plan reads a materialized row instead of re-embedding
+    the whole corpus aggregation per consumer (redirects/self-join
+    lesson). Scale shape per iteration: one posexplode scan of the
+    corpus, one 64-group decimal groupBy, one single-row crossJoin
+    (sanctioned 1-row BNLJ, stats.py precedent). Output floor-truncated.
+    """
+    base = vectors.select(F.col("embedding").cast("array<double>").alias("e"))
+    spark = vectors.sparkSession
+    va = spark.range(1).select(
+        F.array(*[F.lit(1.0)] * dim).alias("vv"), F.lit(0.0).alias("lam")
+    )
+    for _ in range(n_iter):
+        t = base.crossJoin(va.select("vv"))
+        y = F.aggregate(
+            F.zip_with(F.col("e"), F.col("vv"), lambda x, w: x * w),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        rows = t.select(y.alias("y"), F.posexplode("e").alias("pos", "val"))
+        s = rows.groupBy("pos").agg(
+            F.sum((F.col("y") * F.col("val")).cast("decimal(28,12)")).alias("sd")
+        )
+        one = s.groupBy().agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct("pos", F.col("sd").cast("double").alias("sv"))
+                )
+            ).alias("sl")
+        )
+        norm = F.sqrt(
+            F.aggregate(
+                F.transform(F.col("sl"), lambda st: st["sv"] * st["sv"]),
+                F.lit(0.0),
+                lambda a, x: a + x,
+            )
+        )
+        pre = one.select("sl", norm.alias("lam"))
+        va = pre.select(
+            F.transform(F.col("sl"), lambda st: st["sv"] / F.col("lam")).alias(
+                "vv"
+            ),
+            "lam",
+        ).localCheckpoint()
+    trunc = lambda c: F.floor(c * F.lit(1000000.0)) / F.lit(1000000.0)  # noqa: E731
+    out = va.select("lam", F.posexplode("vv").alias("pos", "loading"))
+    return out.select(
+        F.col("pos").cast("long").alias("pos"),
+        trunc(F.col("loading")).alias("loading"),
+        trunc(F.col("lam")).alias("eigenvalue"),
+    )
+
+
+def pca_power_sql(vectors_cte: str, n_iter: int = 2, dim: int = 64) -> str:
+    """Oracle twin: the identical recurrence unrolled — same index-order
+    folds (list_reduce), same DECIMAL(28,12) per-dim sums, same sqrt and
+    floor truncation."""
+    steps = ["v0 as (select list_transform(range(%d), i -> 1.0) as vv)" % dim]
+    prev = "v0"
+    for k in range(1, n_iter + 1):
+        steps.append(f"""y{k} as (
+  select e, list_reduce(
+    list_transform(range(1, {dim} + 1), j -> e[j] * vv[j]), (a, b) -> a + b
+  ) as y
+  from raw cross join {prev}
+), d{k} as (
+  select y, unnest(range(len(e))) as pos, unnest(e) as val from y{k}
+), s{k} as (
+  select pos, sum((y * val)::DECIMAL(28,12)) as sd from d{k} group by pos
+), l{k} as (
+  select list(sd::DOUBLE order by pos) as sl from s{k}
+), n{k} as (
+  select sl, sqrt(list_reduce(list_transform(sl, x -> x * x),
+                              (a, b) -> a + b)) as lam
+  from l{k}
+), v{k} as (
+  select list_transform(sl, x -> x / lam) as vv, lam from n{k}
+)""")
+        prev = f"v{k}"
+    body = ",\n".join(steps)
+    return f"""
+with raw as ({vectors_cte}),
+{body}
+select pos::BIGINT as pos,
+       floor(loading * 1000000.0) / 1000000.0 as loading,
+       floor(lam * 1000000.0) / 1000000.0 as eigenvalue
+from (select unnest(range({dim})) as pos, unnest(vv) as loading, lam
+      from {prev})
+"""
+
+
+def outlier_topk(vectors: DataFrame, k: int = 5) -> DataFrame:
+    """(label, rank, vec_id, dist) — the k vectors FARTHEST from their
+    label's centroid, per label. The embedding-space outlier audit a
+    training-data pipeline runs per source/domain: mislabeled documents,
+    encoder failures and adversarial pages sit in the distance tail of
+    their label's cluster, and the tail is what a human (or a stronger
+    classifier) should re-inspect first.
+
+    Scale shape: centroids are per-(label, pos) DECIMAL(28,12) sums (the
+    exact-mean recipe shared with ``ivf_centroids``) collapsed to a
+    means table of n_labels rows — a broadcast-side constant at any
+    corpus size (the oov-vocab justification: bounded by the label
+    vocabulary, not the corpus). Scoring is one broadcast join + a pure
+    array fold. Top-k is TWO-PHASE: a per-(label, input-partition)
+    row_number prunes every partition to k candidates, then the final
+    per-label window ranks <= k * n_partitions survivors — no partition
+    ever holds a label's full vector set, unlike a naive global window
+    (the one-task-funnel trap). Top-k is a semilattice, so the result is
+    identical under any partitioning; ties (duplicate vectors) break by
+    vec_id, making the order total.
+
+    Float parity: per-row fold in index order with 0.0 init (== DuckDB's
+    no-init list_reduce — summands are squares, non-negative), sqrt is
+    IEEE-correctly-rounded, output floor-truncated (round() tie trap)."""
+    v = vectors.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("label").cast("long").alias("label"),
+        F.col("embedding").cast("array<double>").alias("e"),
+    )
+    dims = v.select("label", F.posexplode("e").alias("pos", "val"))
+    lm = dims.groupBy("label", "pos").agg(
+        (
+            F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
+            / F.count("*")
+        ).alias("m")
+    )
+    means = lm.groupBy("label").agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("pos", "m"))),
+            lambda s: s["m"],
+        ).alias("mu")
+    )
+    d2 = F.aggregate(
+        F.zip_with(F.col("e"), F.col("mu"), lambda x, m: (x - m) * (x - m)),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+    scored = v.join(F.broadcast(means), "label").select(
+        "label", "vec_id", d2.alias("d2")
+    )
+    part = scored.withColumn("__part", F.spark_partition_id())
+    w1 = Window.partitionBy("label", "__part").orderBy(
+        F.desc("d2"), F.asc("vec_id")
+    )
+    pruned = (
+        part.withColumn("__rn", F.row_number().over(w1))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn", "__part")
+    )
+    w2 = Window.partitionBy("label").orderBy(F.desc("d2"), F.asc("vec_id"))
+    return (
+        pruned.withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= k)
+        .select(
+            "label",
+            F.col("rank").cast("long").alias("rank"),
+            "vec_id",
+            (F.floor(F.sqrt(F.col("d2")) * F.lit(1000000.0)) / F.lit(1000000.0)).alias(
+                "dist"
+            ),
+        )
+    )
+
+
+def outlier_topk_sql(vectors_cte: str, k: int = 5) -> str:
+    """DuckDB twin of :func:`outlier_topk`. ``vectors_cte`` must select
+    (vec_id, label, embedding)."""
+    return f"""
+with raw as (
+  select vec_id::BIGINT as vec_id, label::BIGINT as label,
+         embedding::DOUBLE[] as e
+  from ({vectors_cte})
+),
+dims as (
+  select label, unnest(range(1, len(e) + 1)) as pos, unnest(e) as val
+  from raw
+),
+lm as (
+  select label, pos,
+         sum(val::DECIMAL(28,12))::DOUBLE / count(*) as m
+  from dims group by label, pos
+),
+means as (select label, list(m order by pos) as mu from lm group by label),
+scored as (
+  select r.label, r.vec_id,
+         list_reduce(
+           list_transform(range(1, len(r.e) + 1),
+                          i -> (r.e[i] - ms.mu[i]) * (r.e[i] - ms.mu[i])),
+           (a, b) -> a + b) as d2
+  from raw r join means ms using (label)
+),
+rk as (
+  select *, row_number() over (partition by label
+                               order by d2 desc, vec_id asc) as rnk
+  from scored
+)
+select label, rnk::BIGINT as rank, vec_id,
+       floor(sqrt(d2) * 1000000.0) / 1000000.0 as dist
+from rk where rnk <= {k}
+"""
+
+
+def pairwise_diversity(vectors: DataFrame) -> DataFrame:
+    """Per-label mean pairwise cosine similarity — the embedding-space
+    diversity audit for a training mix (a label/source whose documents
+    all point the same way is redundant; one near 0 is well spread),
+    computed WITHOUT the pair join: for unit vectors the mean pairwise
+    cosine is (||sum u||^2 - sum ||u||^2) / (n*(n-1)) — one pass, O(n*d),
+    a semilattice of per-dim sums. The n^2 formulation this replaces is
+    the textbook scale-killer; this shape is exact and never shuffles
+    anything larger than (n_labels * dim) rows.
+
+    Scale shape: per-row unit-normalize (the norm fold runs ONCE per row
+    in the pre-explode projection — never captured inside an element
+    lambda, the r4 lambda-capture lesson); per-(label, dim) partial sums
+    combine map-side; the label-level collapse handles n_labels * dim
+    rows only. Float parity: cross-row sums ride DECIMAL(28,12) (exact,
+    associative); the dim-order fold is 0.0-init over non-negative terms
+    (== DuckDB's no-init list_reduce); sqrt is IEEE-correctly rounded;
+    output floor-truncated (round() tie trap).
+    """
+    v = vectors.select(
+        F.col("label").cast("long").alias("label"),
+        F.col("embedding").cast("array<double>").alias("e"),
+    )
+    base = v.select(
+        "label",
+        "e",
+        F.sqrt(
+            F.aggregate(F.col("e"), F.lit(0.0), lambda a, x: a + x * x)
+        ).alias("nrm"),
+    ).filter(F.col("nrm") > 0)
+    dims = base.select(
+        "label", F.col("nrm"), F.posexplode("e").alias("pos", "val")
+    ).select("label", "pos", (F.col("val") / F.col("nrm")).alias("uv"))
+    g1 = dims.groupBy("label", "pos").agg(
+        F.sum(F.col("uv").cast("decimal(28,12)")).cast("double").alias("s"),
+        F.sum((F.col("uv") * F.col("uv")).cast("decimal(28,12)"))
+        .cast("double")
+        .alias("t"),
+        F.count("*").alias("cnt"),
+    )
+    lab = g1.groupBy("label").agg(
+        F.sort_array(F.collect_list(F.struct("pos", "s", "t"))).alias("arr"),
+        F.max("cnt").alias("n"),
+    )
+    s2 = F.aggregate(
+        F.transform(F.col("arr"), lambda z: z["s"] * z["s"]),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+    t_sum = F.aggregate(
+        F.transform(F.col("arr"), lambda z: z["t"]),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+    mean_cos = F.when(
+        F.col("n") > 1,
+        F.floor(
+            (s2 - t_sum)
+            / (F.col("n") * (F.col("n") - 1))
+            * F.lit(1000000.0)
+        )
+        / F.lit(1000000.0),
+    ).otherwise(F.lit(0.0))
+    return lab.select(
+        "label",
+        F.col("n").cast("long").alias("n"),
+        mean_cos.alias("mean_pairwise_cos"),
+    )
+
+
+def pairwise_diversity_sql(vectors_cte: str) -> str:
+    """DuckDB twin of :func:`pairwise_diversity`. ``vectors_cte`` must
+    select (label, embedding)."""
+    return f"""
+with raw as (
+  select label::BIGINT as label, embedding::DOUBLE[] as e
+  from ({vectors_cte})
+),
+base as (
+  select label, e,
+         sqrt(list_reduce(list_transform(e, x -> x * x), (a, b) -> a + b))
+           as nrm
+  from raw
+),
+nz as (select * from base where nrm > 0),
+dims as (
+  select label,
+         unnest(range(0, len(e))) as pos,
+         unnest(e) / nrm as uv
+  from nz
+),
+g1 as (
+  select label, pos,
+         sum(uv::DECIMAL(28,12))::DOUBLE as s,
+         sum((uv * uv)::DECIMAL(28,12))::DOUBLE as t,
+         count(*) as cnt
+  from dims group by label, pos
+),
+lab as (
+  select label,
+         list(s order by pos) as sa,
+         list(t order by pos) as ta,
+         max(cnt) as n
+  from g1 group by label
+)
+select label, n::BIGINT as n,
+       case when n > 1 then
+         floor(
+           (list_reduce(list_transform(sa, x -> x * x), (a, b) -> a + b)
+            - list_reduce(ta, (a, b) -> a + b))
+           / (n * (n - 1)) * 1000000.0
+         ) / 1000000.0
+       else 0.0 end as mean_pairwise_cos
+from lab
+"""
+
+
+def index_shard_plan(cell_counts: DataFrame, n_shards: int = 8) -> DataFrame:
+    """Assign ANN index cells (IVF lists / LSH buckets) to serving
+    shards, balancing vector count: cells ranked by size descending are
+    dealt round-robin across shards — the classic LPT-lite plan that
+    bounds shard skew by the largest cell. The index-build step between
+    quantization and serving: a shard plan too skewed means one serving
+    node holds the hot cells.
+
+    Scale shape: the input is the CELL table (one row per cell —
+    bounded by the index's nlist parameter, e.g. 2^16 — never the
+    corpus), so the global ranking window is over a bounded relation;
+    the per-shard rollup is a groupBy on <= n_shards keys. Integer-only
+    output; ties in cell size break by cell id (total order).
+    """
+    w = Window.orderBy(F.desc("n"), F.asc("cell"))
+    assigned = cell_counts.select(
+        F.col("cell").cast("long").alias("cell"),
+        F.col("n").cast("long").alias("n"),
+    ).withColumn("shard", ((F.row_number().over(w) - 1) % n_shards).cast("long"))
+    loads = assigned.groupBy("shard").agg(
+        F.count("*").cast("long").alias("n_cells"),
+        F.sum("n").cast("long").alias("n_vecs"),
+    )
+    ext = loads.agg(
+        F.max("n_vecs").alias("mx"), F.min("n_vecs").alias("mn")
+    )
+    out = loads.crossJoin(ext)  # 1-row totals side — the accepted shape
+    return out.select(
+        "shard",
+        "n_cells",
+        "n_vecs",
+        F.expr(
+            "cast(((mx - mn) * cast(1000000 as bigint)) div mx as bigint)"
+        ).alias("imbalance_ppm"),
+    )
+
+
+def index_shard_plan_sql(cell_counts_cte: str, n_shards: int = 8) -> str:
+    """DuckDB twin of :func:`index_shard_plan`. ``cell_counts_cte`` must
+    select (cell, n)."""
+    return f"""
+with cc as (
+  select cell::BIGINT as cell, n::BIGINT as n from ({cell_counts_cte})
+),
+assigned as (
+  select cell, n,
+         ((row_number() over (order by n desc, cell asc)) - 1)
+           % {n_shards} as shard
+  from cc
+),
+loads as (
+  select shard::BIGINT as shard, count(*)::BIGINT as n_cells,
+         sum(n)::BIGINT as n_vecs
+  from assigned group by shard
+),
+ext as (select max(n_vecs) as mx, min(n_vecs) as mn from loads)
+select shard, n_cells, n_vecs,
+       (((mx - mn) * 1000000) // mx)::BIGINT as imbalance_ppm
+from loads, ext
+"""
+
+
 # ---------------------------------------------------------------------------
 # product quantization
 # ---------------------------------------------------------------------------
+
+PQ_M = 4  # subspaces per vector
+PQ_K = 4  # codebook entries per subspace
+
+
+def pq_encode(vectors: DataFrame, m: int = PQ_M, k: int = PQ_K) -> DataFrame:
+    """(vec_id, sub_id, code, err2) — product-quantization assignment:
+    each vector splits into ``m`` contiguous subvectors and every
+    subvector maps to its nearest (squared-L2) entry of that subspace's
+    ``k``-row codebook. The compressed-storage path of a billion-vector
+    ANN index: m log2(k) bits per vector instead of 4*dim bytes, with
+    ``err2`` the per-subspace reconstruction error the recall model
+    consumes. Codebook seeding follows the IVF convention (first ``k``
+    vectors by vec_id — training iterations belong to ``ivf_centroids``).
+
+    Scale shape: ONE explode emits all m subvectors per row (the
+    union-embeds lesson); the codebook is m*k rows built from a k-row
+    TakeOrdered and broadcast, so assignment is a map-side join + a
+    row_number over the fine-grained (vec_id, sub_id) key — no shuffle
+    of the corpus beyond that window's, no per-row Python.
+
+    Float parity: the squared-L2 fold is index-ordered with non-negative
+    summands (0.0-init F.aggregate == DuckDB's no-init list_reduce) and
+    per-row double arithmetic is bit-identical; err2 is floor-projected
+    (the round() tie trap). Ties on err2 break by code asc."""
+    v = _as_double(vectors)
+    scored = _pq_assign(v, m, k)
+    return scored.select(
+        "vec_id",
+        "sub_id",
+        "code",
+        (F.floor(F.col("err2") * F.lit(1000000.0)) / F.lit(1000000.0)).alias(
+            "err2"
+        ),
+    )
+
+
+def _pq_slices(m: int) -> list[Column]:
+    """The m contiguous-subvector structs of column ``e`` (shared by the
+    corpus explode, the codebook explode and the query-side split)."""
+    return [
+        F.struct(
+            F.lit(j).cast("long").alias("sub_id"),
+            F.expr(
+                f"slice(e, {j} * (size(e) div {m}) + 1, size(e) div {m})"
+            ).alias("sv"),
+        )
+        for j in range(m)
+    ]
+
+
+def _pq_codebook(v: DataFrame, m: int, k: int) -> DataFrame:
+    """(code, sub_id, cv) — the m*k-row PQ codebook (IVF seed convention:
+    first ``k`` vectors by vec_id). Bounded by model geometry, broadcast-able
+    by construction."""
+    seeds = v.orderBy("vec_id").limit(k).select("vec_id", "e")
+    wseed = Window.orderBy("vec_id")
+    coded = seeds.withColumn(
+        "code", (F.row_number().over(wseed) - 1).cast("long")
+    )
+    return coded.select(
+        "code", F.explode(F.array(*_pq_slices(m))).alias("s")
+    ).select("code", "s.sub_id", F.col("s.sv").alias("cv"))
+
+
+def _pq_assign(v: DataFrame, m: int, k: int) -> DataFrame:
+    """(vec_id, sub_id, code, err2) — nearest-codebook-entry assignment with
+    the raw (unprojected) squared-L2 error; ties break by code asc."""
+    sub = v.select(
+        "vec_id", F.explode(F.array(*_pq_slices(m))).alias("s")
+    ).select("vec_id", "s.sub_id", F.col("s.sv").alias("sv"))
+    cb = _pq_codebook(v, m, k)
+    scored = sub.join(F.broadcast(cb), "sub_id").withColumn(
+        "err2",
+        F.aggregate(
+            F.zip_with(F.col("sv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+    )
+    w = Window.partitionBy("vec_id", "sub_id").orderBy(
+        F.asc("err2"), F.asc("code")
+    )
+    return (
+        scored.withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") == 1)
+        .select("vec_id", "sub_id", "code", "err2")
+    )
+
+
+def pq_encode_sql(vectors_cte: str, m: int = PQ_M, k: int = PQ_K) -> str:
+    """DuckDB twin of :func:`pq_encode`. ``vectors_cte`` must select
+    (vec_id, embedding)."""
+    return f"""
+with raw as ({vectors_cte}),
+v as (select vec_id, embedding::DOUBLE[] as e from raw),
+sub as (
+  select vec_id, j as sub_id,
+         list_slice(e, j * (len(e) // {m}) + 1, (j + 1) * (len(e) // {m})) as sv
+  from v, range(0, {m}) as t(j)
+),
+seeds as (
+  select row_number() over (order by vec_id) - 1 as code, e
+  from (select * from v order by vec_id limit {k})
+),
+cb as (
+  select code, j as sub_id,
+         list_slice(e, j * (len(e) // {m}) + 1, (j + 1) * (len(e) // {m})) as cv
+  from seeds, range(0, {m}) as t(j)
+),
+scored as (
+  select vec_id, s.sub_id, code,
+         list_reduce(list_transform(range(1, len(sv) + 1),
+                                    i -> (sv[i] - cv[i]) * (sv[i] - cv[i])),
+                     (x, y) -> x + y) as err2
+  from sub s join cb on s.sub_id = cb.sub_id
+),
+ranked as (
+  select *, row_number() over (
+    partition by vec_id, sub_id order by err2 asc, code asc
+  ) as r
+  from scored
+)
+select vec_id, sub_id::BIGINT as sub_id, code::BIGINT as code,
+       floor(err2 * 1000000.0) / 1000000.0 as err2
+from ranked where r = 1
+"""
 
 
 # ---------------------------------------------------------------------------
 # binary sign-sketch tier: 64-bit signature + Hamming prefilter + exact rerank
 # ---------------------------------------------------------------------------
 
+HAM_QUERY_MOD = 50  # vec_id % HAM_QUERY_MOD == 0 selects the query set
+HAM_PREFILTER = 8  # Hamming-nearest candidates kept per query before rerank
+HAM_K = 3  # final exact-cosine top-k
+
+
+def _sign_word_terms(lo: int, hi: int, elem_fmt: str) -> str:
+    """Sum-of-CASE text packing sign bits [lo, hi] (1-based dims) into one
+    BIGINT word: bit (i - lo) set iff component i >= 0. ``elem_fmt`` is the
+    engine's 1-based array access spelled with ``{i}`` (Spark
+    ``element_at(e, {i})``, DuckDB ``e[{i}]``) — the generated VALUES are
+    identical even though the accessor text differs."""
+    terms = [
+        f"(case when {elem_fmt.format(i=i)} >= 0 then"
+        f" cast({1 << (i - lo)} as bigint) else cast(0 as bigint) end)"
+        for i in range(lo, hi + 1)
+    ]
+    return " + ".join(terms)
+
+
+def binary_hamming_topk(
+    vectors: DataFrame,
+    query_mod: int = HAM_QUERY_MOD,
+    prefilter: int = HAM_PREFILTER,
+    k: int = HAM_K,
+    dim: int = MAX_DIM,
+) -> DataFrame:
+    """(query_id, cand_id, rank, hamming, cos_mil) — the binarized storage
+    tier of the ANN family: 4*dim-byte float vectors compress to dim sign
+    bits (two BIGINT words here), candidate retrieval is Hamming distance
+    over the words (``bit_count(xor)`` — pure codegen'd integer ops, the
+    same verify recipe as dedup_simhash), and only the ``prefilter``
+    Hamming-nearest survivors pay the exact-cosine rerank. At 10^10
+    vectors the signature table is 16 bytes/row where the float corpus is
+    256 — the scan that feeds the prefilter reads ~6% of the bytes.
+
+    Scale shape: the signature table builds in ONE projection over the
+    corpus scan (no fold — the bit-pack is a generated 64-term integer
+    sum, fully inside whole-stage codegen); the query side is bounded by
+    ``query_mod`` and broadcasts; per-query fan-out after the prefilter is
+    ``prefilter`` rows. cos_mil is floor(cos * 1000) — the tie-free
+    projection (round() is not cross-engine stable on tie digits)."""
+    v = _as_double(vectors)
+    half = dim // 2
+    w0 = _sign_word_terms(1, half, "element_at(e, {i})")
+    w1 = _sign_word_terms(half + 1, dim, "element_at(e, {i})")
+    sig = v.selectExpr(
+        "vec_id",
+        "e",
+        "norm",
+        f"cast({w0} as bigint) as b0",
+        f"cast({w1} as bigint) as b1",
+    )
+    q = sig.filter(F.col("vec_id") % query_mod == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("norm").alias("qnorm"),
+        F.col("b0").alias("qb0"),
+        F.col("b1").alias("qb1"),
+    )
+    ham = sig.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("cand_id"),
+        (
+            F.bit_count(F.col("qb0").bitwiseXOR(F.col("b0")))
+            + F.bit_count(F.col("qb1").bitwiseXOR(F.col("b1")))
+        )
+        .cast("long")
+        .alias("hamming"),
+        "qe",
+        "qnorm",
+        "e",
+        "norm",
+    )
+    wpre = Window.partitionBy("query_id").orderBy(
+        F.asc("hamming"), F.asc("cand_id")
+    )
+    survivors = ham.withColumn("pr", F.row_number().over(wpre)).filter(
+        F.col("pr") <= prefilter
+    )
+    rer = survivors.select(
+        "query_id",
+        "cand_id",
+        "hamming",
+        _cos("qe", "e", "qnorm", "norm").alias("cos_raw"),
+    )
+    wk = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_raw"), F.asc("cand_id")
+    )
+    return (
+        rer.withColumn("rank", F.row_number().over(wk).cast("long"))
+        .filter(F.col("rank") <= k)
+        .selectExpr(
+            "query_id",
+            "cand_id",
+            "rank",
+            "hamming",
+            "cast(floor(cos_raw * 1000) as bigint) as cos_mil",
+        )
+    )
+
+
+def binary_hamming_topk_sql(
+    query_mod: int = HAM_QUERY_MOD,
+    prefilter: int = HAM_PREFILTER,
+    k: int = HAM_K,
+    dim: int = MAX_DIM,
+) -> str:
+    """DuckDB twin of :func:`binary_hamming_topk` over the ``embeddings``
+    view — same generated sign-word values (1-based ``e[i]`` accessor),
+    ``bit_count(xor(...))`` for the Hamming terms (DuckDB ``^`` is POWER,
+    never use it for xor), same tie-breaks and floor projection."""
+    half = dim // 2
+    w0 = _sign_word_terms(1, half, "e[{i}]")
+    w1 = _sign_word_terms(half + 1, dim, "e[{i}]")
+    dot = (
+        "list_reduce(list_transform(range(1, len(qe) + 1),"
+        " i -> qe[i] * ce[i]), (x, y) -> x + y)"
+    )
+    norm = "sqrt(list_reduce(list_transform({a}, x -> x * x), (x, y) -> x + y))"
+    return f"""
+with v as (
+  select vec_id, embedding::DOUBLE[] as e,
+         {norm.format(a='embedding::DOUBLE[]')} as nrm
+  from embeddings
+),
+sig as (
+  select vec_id, e, nrm, ({w0})::BIGINT as b0, ({w1})::BIGINT as b1 from v
+),
+q as (
+  select vec_id as query_id, e as qe, nrm as qnrm, b0 as qb0, b1 as qb1
+  from sig where vec_id % {query_mod} = 0
+),
+ham as (
+  select query_id, c.vec_id as cand_id,
+         (bit_count(xor(qb0, c.b0)) + bit_count(xor(qb1, c.b1)))::BIGINT
+           as hamming,
+         qe, qnrm, c.e as ce, c.nrm as cnrm
+  from q join sig c on c.vec_id <> q.query_id
+),
+pre as (
+  select *, row_number() over (
+    partition by query_id order by hamming asc, cand_id asc
+  ) as pr
+  from ham
+),
+rer as (
+  select query_id, cand_id, hamming,
+         {dot} / (qnrm * cnrm) as cos_raw
+  from pre where pr <= {prefilter}
+),
+rk as (
+  select *, row_number() over (
+    partition by query_id order by cos_raw desc, cand_id asc
+  ) as rank
+  from rer
+)
+select query_id, cand_id, rank::BIGINT as rank, hamming,
+       cast(floor(cos_raw * 1000) as bigint) as cos_mil
+from rk where rank <= {k}
+"""
+
 
 # ---------------------------------------------------------------------------
 # PQ asymmetric-distance (ADC) search: the query path of the PQ storage tier
 # ---------------------------------------------------------------------------
 
+ADC_K = 3  # final top-k per query
 
+
+def _adc_sum_expr(m: int) -> str:
+    """The fixed-order per-row double sum over the m pivoted subspace
+    distances — shared verbatim between engines (left-assoc + is
+    bit-identical per row; a groupBy sum over doubles would not be)."""
+    return " + ".join(f"d{j}" for j in range(m))
+
+
+def pq_adc_topk(
+    vectors: DataFrame,
+    m: int = PQ_M,
+    n_codes: int = PQ_K,
+    query_mod: int = HAM_QUERY_MOD,
+    k: int = ADC_K,
+) -> DataFrame:
+    """(query_id, cand_id, rank, adc) — asymmetric-distance search over the
+    PQ codes of :func:`pq_encode`: the query stays a float vector, the
+    database is m log2(n_codes)-bit codes, and distance is the classic ADC
+    lookup-table sum d(q, x) = sum_j ||q_j - c_{j, code_j(x)}||^2 (Jegou et
+    al. 2011, IEEE TPAMI "Product quantization for nearest neighbor
+    search"). This is the search half of the compressed tier —
+    ``pq_encode`` built the storage, this answers queries against it
+    without ever touching the float corpus.
+
+    Scale shape: the LUT is (n_queries * m * n_codes) rows — bounded by
+    the query batch and the model geometry, never the corpus — built by
+    joining the query subvectors against the broadcast codebook, then
+    itself broadcast against the code table, so the corpus-side work is a
+    map-side join + one groupBy on (query, vec). The per-(query, vec)
+    pivot has exactly m rows; the final distance is a FIXED-ORDER per-row
+    double sum (d0 + d1 + ...), bit-identical across engines where an
+    aggregated float sum would not be. Top-k is the two-phase
+    per-partition prune of ``outlier_topk`` (top-k is a semilattice;
+    partitioning-invariant). With n_codes=4, m=4 there are only 256
+    distinct ADC values per query — ties are everywhere, broken by
+    cand_id asc. adc is floor-projected (the round() tie trap)."""
+    v = _as_double(vectors)
+    codes = _pq_assign(v, m, n_codes).select("vec_id", "sub_id", "code")
+    cb = _pq_codebook(v, m, n_codes)
+    qsub = (
+        v.filter(F.col("vec_id") % query_mod == 0)
+        .select(F.col("vec_id").alias("query_id"), "e")
+        .select(
+            "query_id", F.explode(F.array(*_pq_slices(m))).alias("s")
+        )
+        .select("query_id", "s.sub_id", F.col("s.sv").alias("qv"))
+    )
+    lut = qsub.join(cb, "sub_id").withColumn(
+        "d",
+        F.aggregate(
+            F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+    ).select("query_id", "sub_id", "code", "d")
+    pairs = codes.join(F.broadcast(lut), ["sub_id", "code"]).filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    piv = pairs.groupBy("query_id", "vec_id").agg(
+        *[
+            F.max(F.when(F.col("sub_id") == j, F.col("d"))).alias(f"d{j}")
+            for j in range(m)
+        ]
+    )
+    scored = piv.selectExpr(
+        "query_id",
+        "vec_id as cand_id",
+        f"{_adc_sum_expr(m)} as adc_raw",
+    )
+    part = scored.withColumn("__part", F.spark_partition_id())
+    w1 = Window.partitionBy("query_id", "__part").orderBy(
+        F.asc("adc_raw"), F.asc("cand_id")
+    )
+    pruned = (
+        part.withColumn("__rn", F.row_number().over(w1))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn", "__part")
+    )
+    w2 = Window.partitionBy("query_id").orderBy(
+        F.asc("adc_raw"), F.asc("cand_id")
+    )
+    return (
+        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "cand_id",
+            "rank",
+            (F.floor(F.col("adc_raw") * F.lit(1000000.0)) / F.lit(1000000.0)).alias(
+                "adc"
+            ),
+        )
+    )
+
+
+def pq_adc_topk_sql(
+    vectors_cte: str,
+    m: int = PQ_M,
+    n_codes: int = PQ_K,
+    query_mod: int = HAM_QUERY_MOD,
+    k: int = ADC_K,
+) -> str:
+    """DuckDB twin of :func:`pq_adc_topk`. ``vectors_cte`` must select
+    (vec_id, embedding). Same codebook seeds, same index-ordered folds,
+    same fixed-order distance sum and tie-breaks."""
+    sq_fold = (
+        "list_reduce(list_transform(range(1, len({a}) + 1),"
+        " i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
+    )
+    piv_cols = ",\n         ".join(
+        f"max(case when sub_id = {j} then d end) as d{j}" for j in range(m)
+    )
+    return f"""
+with raw as ({vectors_cte}),
+v as (select vec_id, embedding::DOUBLE[] as e from raw),
+sub as (
+  select vec_id, j as sub_id,
+         list_slice(e, j * (len(e) // {m}) + 1, (j + 1) * (len(e) // {m})) as sv
+  from v, range(0, {m}) as t(j)
+),
+seeds as (
+  select row_number() over (order by vec_id) - 1 as code, e
+  from (select * from v order by vec_id limit {n_codes})
+),
+cb as (
+  select code, j as sub_id,
+         list_slice(e, j * (len(e) // {m}) + 1, (j + 1) * (len(e) // {m})) as cv
+  from seeds, range(0, {m}) as t(j)
+),
+assign_scored as (
+  select vec_id, s.sub_id, code,
+         {sq_fold.format(a='sv', b='cv')} as err2
+  from sub s join cb on s.sub_id = cb.sub_id
+),
+codes as (
+  select vec_id, sub_id, code from (
+    select *, row_number() over (
+      partition by vec_id, sub_id order by err2 asc, code asc
+    ) as r
+    from assign_scored
+  ) where r = 1
+),
+qsub as (
+  select vec_id as query_id, sub_id, sv as qv
+  from sub where vec_id % {query_mod} = 0
+),
+lut as (
+  select query_id, q.sub_id, code,
+         {sq_fold.format(a='qv', b='cv')} as d
+  from qsub q join cb on q.sub_id = cb.sub_id
+),
+pairs as (
+  select query_id, vec_id, c.sub_id, d
+  from codes c join lut l on c.sub_id = l.sub_id and c.code = l.code
+  where c.vec_id <> l.query_id
+),
+piv as (
+  select query_id, vec_id as cand_id,
+         {piv_cols}
+  from pairs group by query_id, vec_id
+),
+scored as (
+  select query_id, cand_id, {_adc_sum_expr(m)} as adc_raw from piv
+),
+rk as (
+  select *, row_number() over (
+    partition by query_id order by adc_raw asc, cand_id asc
+  ) as rank
+  from scored
+)
+select query_id, cand_id, rank::BIGINT as rank,
+       floor(adc_raw * 1000000.0) / 1000000.0 as adc
+from rk where rank <= {k}
+"""

@@ -19,7 +19,7 @@ Cross-engine determinism rules used throughout this repo:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
@@ -122,6 +122,27 @@ def fingerprint_cols(text: Column) -> dict[str, Column]:
         lambda acc, h: (acc * F.lit(31) + h) % F.lit(2147483647),
     )
     return {"fp_md5": F.md5(norm), "fp_roll": roll}
+
+
+def stratified_sample_flag(
+    doc_id: Column, stratum: Column, rates: dict[str, float],
+    default_rate: float = 0.0, salt: str = "samp",
+) -> Column:
+    """Deterministic per-stratum Bernoulli sampling decision (boolean).
+
+    A pretraining-corpus mixer needs "keep X% of lang A, Y% of lang B"
+    decisions that are REPRODUCIBLE at any parallelism and on re-runs —
+    ``rand()`` is banned engine-wide (SURVEY.md §4). The coin is
+    ``hash32(salt|doc_id) % 10000 < rate * 10000``: md5-derived, so the
+    same doc always gets the same verdict in Spark, DuckDB, or plain
+    Python, and disjoint salts give independent samples. Pure column
+    expression — at 100 TB this is a codegen'd filter with zero shuffle.
+    """
+    coin = hash32_col(F.concat(F.lit(f"{salt}|"), doc_id.cast("string"))) % 10000
+    expr = F.lit(int(round(default_rate * 10000)))
+    for key, rate in sorted(rates.items()):
+        expr = F.when(stratum == key, F.lit(int(round(rate * 10000)))).otherwise(expr)
+    return coin < expr
 
 
 def repetition_cols(text: Column) -> dict[str, Column]:
@@ -343,6 +364,45 @@ def ngram_novelty(corpus: DataFrame, n: int = 3) -> DataFrame:
         "n_shingles",
         "n_novel",
         (F.floor(ratio * F.lit(1000000.0)) / F.lit(1000000.0)).alias("novelty"),
+    )
+
+
+def kfold_assign(
+    docs: DataFrame,
+    k: int = 5,
+    id_col: str = "doc_id",
+    stratum_col: str = "source",
+    salt: str = "kfold",
+) -> DataFrame:
+    """Deterministic k-fold split audit — fold = md5(salt|id) % k, then a
+    per-(fold, stratum) balance rollup. Training pipelines need splits
+    that are (a) reproducible across re-runs and cluster sizes (content
+    hash, never row position or rand()) and (b) balanced within every
+    stratum so no fold over-samples one source. Output: one row per
+    (fold, stratum) with its count and the deviation from the ideal
+    stratum_total/k share in parts-per-million (integer arithmetic —
+    exact at any scale, no float share).
+
+    ONE groupBy on (fold, stratum) + a stratum-total window over the
+    tiny k x |strata| rollup. The fold coin reuses the
+    stratified-sample hash kit (hash32_col) so both samplers stay
+    consistent."""
+    fold = (
+        hash32_col(F.concat(F.lit(f"{salt}|"), F.col(id_col).cast("string"))) % k
+    ).alias("fold")
+    rolled = docs.select(fold, F.col(stratum_col).alias("stratum")).groupBy(
+        "fold", "stratum"
+    ).agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    w = Window.partitionBy("stratum")
+    total = F.sum("n_docs").over(w)
+    # ppm deviation from the ideal total/k share: all-integer, exact
+    dev = (F.col("n_docs") * k - total) * F.lit(1000000) / (total * k)
+    return rolled.select(
+        "fold",
+        "stratum",
+        "n_docs",
+        total.cast("long").alias("stratum_total"),
+        F.floor(dev).cast("long").alias("dev_ppm"),
     )
 
 

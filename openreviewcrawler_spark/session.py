@@ -104,4 +104,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-

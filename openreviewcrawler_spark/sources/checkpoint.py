@@ -246,3 +246,45 @@ class SnapshotStore:
         return len(expired), n_dirs
 
 
+def snapshot_diff(
+    old: "DataFrame",
+    new: "DataFrame",
+    key_col: str = "doc_id",
+    payload_col: str = "text",
+    include_unchanged: bool = False,
+) -> "DataFrame":
+    """Change capture between two corpus snapshots — the read side of the
+    Iceberg-snapshot story ``SnapshotStore`` shims (incremental consumers
+    want "what changed since round N", not a full rescan).
+
+    Full outer join on the key, payload compared by md5 digest:
+    ``added`` (key only in new), ``removed`` (only in old), ``changed``
+    (both, digests differ), ``unchanged`` (both, equal — excluded by
+    default so the output is O(churn), not O(corpus)).
+
+    Output: (key, status, old_digest, new_digest) with '' for the absent
+    side. Scale shape: ONE shuffle join on the snapshot key (or zero
+    shuffles when both snapshots are bucketed/partitioned by it), digests
+    computed map-side before the join so only (key, 32-byte hash) shuffles
+    — never the payloads.
+    """
+    from pyspark.sql import functions as F  # local: keep module import light
+
+    o = old.select(F.col(key_col).alias("k"), F.md5(F.col(payload_col)).alias("old_digest"))
+    n = new.select(F.col(key_col).alias("k"), F.md5(F.col(payload_col)).alias("new_digest"))
+    j = o.join(n, "k", "full_outer")
+    status = (
+        F.when(F.col("old_digest").isNull(), F.lit("added"))
+        .when(F.col("new_digest").isNull(), F.lit("removed"))
+        .when(F.col("old_digest") != F.col("new_digest"), F.lit("changed"))
+        .otherwise(F.lit("unchanged"))
+    )
+    out = j.select(
+        F.col("k").alias(key_col),
+        status.alias("status"),
+        F.coalesce("old_digest", F.lit("")).alias("old_digest"),
+        F.coalesce("new_digest", F.lit("")).alias("new_digest"),
+    )
+    if not include_unchanged:
+        out = out.filter(F.col("status") != "unchanged")
+    return out

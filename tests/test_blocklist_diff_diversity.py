@@ -18,6 +18,7 @@ from openreviewcrawler_spark.operators.blocklist import (
     filter_blocklist_join,
 )
 from openreviewcrawler_spark.operators.textstats import word_diversity
+from openreviewcrawler_spark.sources.checkpoint import snapshot_diff
 
 RULES = ["bad.example", "cdn.big.example"]
 
@@ -67,6 +68,30 @@ def test_blocklist_literal_is_pure_projection(spark):
     )
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
+
+
+def test_snapshot_diff_statuses(spark):
+    v1 = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
+    )
+    v2 = spark.createDataFrame(
+        [(1, "a"), (2, "B2"), (4, "d")], "doc_id long, text string"
+    )
+    out = {r["doc_id"]: r["status"] for r in snapshot_diff(v1, v2).collect()}
+    assert out == {2: "changed", 3: "removed", 4: "added"}  # 1 (unchanged) excluded
+    full = {
+        r["doc_id"]: r["status"]
+        for r in snapshot_diff(v1, v2, include_unchanged=True).collect()
+    }
+    assert full[1] == "unchanged" and len(full) == 4
+
+
+def test_snapshot_diff_digest_columns_empty_on_absent_side(spark):
+    v1 = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    v2 = spark.createDataFrame([(2, "y")], "doc_id long, text string")
+    rows = {r["doc_id"]: r for r in snapshot_diff(v1, v2).collect()}
+    assert rows[1]["new_digest"] == "" and rows[1]["old_digest"] != ""
+    assert rows[2]["old_digest"] == "" and rows[2]["new_digest"] != ""
 
 
 def test_word_diversity_hand_computed(spark):

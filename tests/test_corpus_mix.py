@@ -1,5 +1,5 @@
-"""r4 operators: paragraph dedup, bigram-LM fluency, domain mixing,
-byte-budget admission. Semantic tests on planted data; the cross-engine
+"""r4 operators: paragraph dedup, bigram-LM fluency, byte-budget
+admission. Semantic tests on planted data; the cross-engine
 gate for the catalog entries lives in scripts/check_oracle.py."""
 
 from __future__ import annotations
@@ -99,9 +99,6 @@ def test_fluency_orders_like_true_nll(lm_corpus):
     assert by_p == by_nll
     # most fluent doc is bucket 1 (head), least fluent is bucket 3 (tail)
     assert rows[by_p[0]].bucket == 1 and rows[by_p[-1]].bucket == 3
-
-
-# --- domain mixing ---------------------------------------------------------
 
 
 # --- byte-budget admission -------------------------------------------------

@@ -1,8 +1,7 @@
 """North-rule determinism across cluster sizes, via the real launch path.
 
 BASELINE.json requires the SAME crawl ordering and URL-seen set at N and
-4N executors. bench.py asserts this inside its scaling phases; this test
-pins it in CI through the actual `spark-submit --py-files` entry point
+4N executors. This test pins it in CI through the actual `spark-submit --py-files` entry point
 (scripts/submit_crawl.py): two fresh JVMs at local[4] and local[16] run
 the identical synthetic crawl into separate snapshot stores, and the
 (fetch_seq, url, round) sequence plus the seen set must be identical.

@@ -1,34 +1,17 @@
-"""Rotation-policy contract (r5): the driver records only the first 50
-entries of queries(), so the ordering must spend that window on the
-entries with the weakest hard signal — never-driver-run first, then
-stalest round, stable within tiers."""
+"""Driver contract: ``queries()`` and ``oracle_sql()`` follow CATALOG
+insertion order, and a wrong ``sf_dir`` fails loudly."""
 
 from __future__ import annotations
 
 from openreviewcrawler_spark.catalog import CATALOG, oracle_sql, queries
-from openreviewcrawler_spark.driver_ledger import LAST_DRIVER_ROUND
-
-
-def test_window_is_never_run_first_then_stalest():
-    order = list(queries())
-    assert set(order) == set(CATALOG)
-    rounds = [LAST_DRIVER_ROUND.get(n, 0) for n in order]
-    assert rounds == sorted(rounds)  # staleness tiers are monotone
-    n_never = sum(1 for n in CATALOG if n not in LAST_DRIVER_ROUND)
-    window = order[: min(50, n_never)]
-    assert all(n not in LAST_DRIVER_ROUND for n in window)
 
 
 def test_oracle_sql_alignment():
     q = list(queries())
+    assert q == list(CATALOG)
     o = oracle_sql()
     assert list(o) == [n for n in q if CATALOG[n].sql is not None]
     assert all(isinstance(s, str) and s.strip() for s in o.values())
-
-
-def test_ledger_matches_catalog_names():
-    unknown = sorted(set(LAST_DRIVER_ROUND) - set(CATALOG))
-    assert unknown == []  # a renamed entry would silently lose its history
 
 
 def test_bogus_sf_dir_raises_not_empty(spark):

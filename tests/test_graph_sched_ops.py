@@ -442,3 +442,26 @@ def test_mirror_detect_hot_digest_cap_drops_boilerplate(spark):
     rows = [(f"h{i}", "boilerplate") for i in range(n)]
     pages = spark.createDataFrame(rows, "host string, digest string")
     assert mirror_detect(pages, min_shared=1).count() == 0
+
+
+def test_audio_chunk_plan_windows_and_truncation(spark):
+    from openreviewcrawler_spark.operators.multimodal import plan_audio_chunks
+
+    rows = [
+        (1, "audio", b"", 150),   # dur 1500 <= win -> one chunk [0, 1500)
+        (2, "audio", b"", 500),   # dur 5000 -> chunks at 0,1500,3000 -> 3 of them
+        (3, "video", b"", 999),   # not audio -> no rows
+    ]
+    assets = spark.createDataFrame(
+        rows, "asset_id long, kind string, payload binary, src_len long"
+    )
+    out = sorted(
+        (r["asset_id"], r["chunk_idx"], r["start_ms"], r["end_ms"])
+        for r in plan_audio_chunks(assets).collect()
+    )
+    assert out == [
+        (1, 0, 0, 1500),
+        (2, 0, 0, 2000),
+        (2, 1, 1500, 3500),
+        (2, 2, 3000, 5000),
+    ]

@@ -16,9 +16,6 @@ that class impossible:
    enforced cross-engine by the gate itself (check_oracle compares every
    entry's Spark dtypes against DESCRIBE and bans nested Spark outputs),
    which runs at both SFs before each commit per CLAUDE.md.
-
-The file also holds the driver-contract checks: ``queries()`` and
-``oracle_sql()`` follow CATALOG order, and a bogus ``sf_dir`` fails loudly.
 """
 
 from __future__ import annotations
@@ -116,28 +113,3 @@ def test_all_catalog_oracles_emit_scalar_64bit_columns(con):
             if norm_duck_type(typ) not in SCALAR_OK:
                 offenders.append((name, f"{col}: {typ}"))
     assert offenders == []
-
-
-def test_oracle_sql_alignment():
-    """Driver contract: queries() and oracle_sql() both follow CATALOG
-    insertion order, and every oracle is non-empty SQL."""
-    from openreviewcrawler_spark.catalog import CATALOG, oracle_sql, queries
-
-    q = list(queries())
-    assert q == list(CATALOG)
-    o = oracle_sql()
-    assert list(o) == [n for n in q if CATALOG[n].sql is not None]
-    assert all(isinstance(s, str) and s.strip() for s in o.values())
-
-
-def test_bogus_sf_dir_raises_not_empty(spark):
-    """Driver-contract robustness: a wrong sf_dir must fail loudly
-    (PATH_NOT_FOUND), never return an empty-but-schema-valid result the
-    harness would record as 0-row 'success'."""
-    import pytest
-    from pyspark.errors import AnalysisException
-
-    from openreviewcrawler_spark.catalog import q_crawl_canonicalize
-
-    with pytest.raises(AnalysisException):
-        q_crawl_canonicalize(spark, "/root/testdata/sf9.9").collect()

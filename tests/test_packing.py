@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from openreviewcrawler_spark.operators.packing import prefix_sum_scalable
+from openreviewcrawler_spark.operators.packing import pack_sequences, prefix_sum_scalable
 
 
 def _docs(spark, n=500):
@@ -27,3 +27,30 @@ def test_prefix_sum_equals_global_window(spark):
         assert sorted(map(tuple, got.select("doc_id", "off").collect())) == sorted(
             map(tuple, want.select("doc_id", "off").collect())
         )
+
+
+def test_pack_matches_single_threaded_packer(spark):
+    docs = _docs(spark, 300)
+    seq = 64
+    rows = {
+        r["doc_id"]: r
+        for r in pack_sequences(docs, seq, num_partitions=5).collect()
+    }
+    offset = 0
+    for d in sorted(rows):
+        r = rows[d]
+        n = r["n_tokens"]
+        assert r["tok_offset"] == offset
+        assert r["seq_id"] == offset // seq
+        assert r["offset_in_seq"] == offset % seq
+        assert r["n_seqs_spanned"] == (offset + n - 1) // seq - offset // seq + 1
+        offset += n
+    # the packed stream is gapless: total chunks = ceil(total tokens / seq)
+    assert max(r["seq_id"] for r in rows.values()) == (offset - 1) // seq
+
+
+def test_pack_deterministic_across_parallelism(spark):
+    docs = _docs(spark, 400)
+    a = sorted(map(tuple, pack_sequences(docs, 128, num_partitions=2).collect()))
+    b = sorted(map(tuple, pack_sequences(docs, 128, num_partitions=13).collect()))
+    assert a == b

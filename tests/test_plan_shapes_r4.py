@@ -102,6 +102,14 @@ def test_sitemap_index_parse_is_shuffle_free(spark, sf_dir):
     assert plan.count("Exchange") == 0, plan  # map-side explode only
 
 
+def test_embedding_qa_is_single_aggregate(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import q_embedding_qa
+
+    plan = _plan(q_embedding_qa(spark, sf_dir))
+    _assert_clean(plan, "Window", "Join")
+    assert plan.count("Exchange") <= 2, plan  # one shuffle (+AQE read)
+
+
 def test_retry_backoff_joins_are_equi_only(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_crawl_retry_backoff
 
@@ -140,6 +148,23 @@ def test_session3_graph_ops_plans_are_equi_join_only(spark, sf_dir):
     # alive/degree tables is the 100x scale killer (r3 ngram lesson)
     for q in (q_graph_kcore, q_graph_assortativity, q_graph_clustering_coeff):
         _assert_clean(_plan(q(spark, sf_dir)))
+
+
+def test_embedding_profile_plans_are_single_pass(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import (
+        q_embedding_centroid_drift,
+        q_embedding_dim_stats,
+    )
+
+    # dim_stats: one generate + one aggregate, no join at all
+    dplan = _plan(q_embedding_dim_stats(spark, sf_dir))
+    _assert_clean(dplan, "Join", "Window")
+    # centroid_drift: the global centroid must derive from the per-label
+    # sums — BOTH consumers of lm read the persisted relation (one
+    # physical corpus scan), never re-embed the scan+aggregate per branch
+    cplan = _plan(q_embedding_centroid_drift(spark, sf_dir))
+    _assert_clean(cplan, "Window")
+    assert cplan.count("InMemoryTableScan") == 2, cplan
 
 
 def test_unicode_profile_and_host_collapse_are_shuffle_minimal(spark, sf_dir):

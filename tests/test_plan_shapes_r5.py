@@ -59,3 +59,15 @@ def test_two_bfs_composition_stays_flat(spark):
     assert "Join" not in plan and "Aggregate" not in plan
     # sweep 2's plan must be small and independent of sweep 1's level count
     assert len(plan.splitlines()) < 40, plan
+
+
+def test_recall_eval_runs_each_ranker_once(spark, sf_dir):
+    """recall_eval's consumers must read the checkpointed 80-row rankings,
+    not re-embed the ranker pipelines (r5: unpersisted references re-ran
+    both rankers per consumer, ~2x the whole entry)."""
+    from openreviewcrawler_spark.catalog import q_ann_recall_eval
+
+    df = q_ann_recall_eval(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Relation" not in plan  # no parquet scan survives into the plan
+    assert plan.count("LogicalRDD") <= 4

@@ -110,6 +110,18 @@ def test_embedding_cosine_plan_is_equi_join_only(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_ann_lsh_topk_retrieval_is_bucket_join(spark, sf_dir):
+    """The ANN answer path must retrieve candidates through the signature
+    bucket join — broadcast/shuffled EQUI joins only, and no join may
+    degrade to a nested-loop scan of the corpus."""
+    from openreviewcrawler_spark.catalog import q_ann_lsh_topk
+
+    plan = plan_of(q_ann_lsh_topk(spark, sf_dir))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastHashJoin" in plan  # tiny query side broadcast
+
+
 def _fetched_plan_for(spark, max_bytes: int) -> str:
     """One scheduling round over a tiny synthetic frontier with the given
     fetch-broadcast byte bound; returns the fetched-side physical plan."""

@@ -1,6 +1,6 @@
-"""Semantic gates for the substring-dup statistics, vocab induction, and
-the hashed-n-gram quality classifier (the cross-engine value gate lives in
-scripts/check_oracle.py; these pin the OPERATOR semantics and plan shapes)."""
+"""Semantic gates for the substring-dup statistics and vocab induction (the
+cross-engine value gate lives in scripts/check_oracle.py; these pin the
+OPERATOR semantics and plan shapes)."""
 
 from __future__ import annotations
 

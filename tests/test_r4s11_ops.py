@@ -10,6 +10,10 @@ BAD_ALWAYS = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
 SF = "/root/testdata/sf0.001"
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 # ----------------------------------------------------------- crawl_aging_admit
 
 
@@ -53,3 +57,64 @@ def test_aging_admit_rescues_old_rounds(spark):
     oldest = min(by_round)
     newest = max(by_round)
     assert by_round.get(oldest, 0) >= by_round.get(newest, 0)
+
+
+# ------------------------------------------------------------ event_dwell_time
+
+
+def test_dwell_time_matches_python_model(spark):
+    from openreviewcrawler_spark.catalog import _events_ms, q_event_dwell_time
+
+    rows = _events_ms(spark, SF).collect()
+    by_user = collections.defaultdict(list)
+    for r in rows:
+        by_user[r["user_id"]].append((r["ts_ms"], r["event_id"], r["event_type"]))
+    dwells = collections.defaultdict(list)
+    for evs in by_user.values():
+        evs.sort()
+        for (ts, _e, typ), (nts, _ne, _nt) in zip(evs, evs[1:]):
+            d = nts - ts
+            if d <= 1_800_000:
+                dwells[typ].append(d)
+
+    def med(xs):
+        xs = sorted(xs)
+        n = len(xs)
+        return float(xs[n // 2]) if n % 2 else (xs[n // 2 - 1] + xs[n // 2]) / 2.0
+
+    got = {r["event_type"]: r for r in q_event_dwell_time(spark, SF).collect()}
+    assert set(got) == set(dwells)
+    for typ, ds in dwells.items():
+        r = got[typ]
+        assert r["n_dwells"] == len(ds)
+        assert r["median_dwell_ms"] == med(ds)
+        assert r["mean_dwell_ms"] == sum(ds) // len(ds)
+        assert r["max_dwell_ms"] == max(ds)
+
+
+# ----------------------------------------------------- event_hourly_seasonality
+
+
+def test_seasonality_marginals_and_lift(spark):
+    from openreviewcrawler_spark.catalog import q_event_hourly_seasonality
+
+    rows = q_event_hourly_seasonality(spark, SF).collect()
+    n_events = spark.read.parquet(f"{SF}/events.parquet").count()
+    assert sum(r["n"] for r in rows) == n_events
+    assert all(0 <= r["hour"] <= 23 for r in rows)
+    # independence normalization: sum over cells of n*type*hour/total == total
+    # => the n-weighted average lift is ~1e6 (integer div makes it <=)
+    wavg = sum(r["n"] * r["lift_ppm"] for r in rows) / n_events
+    assert 0.8e6 < wavg <= 1.2e6
+
+
+def test_seasonality_plan_reads_cached_cells(spark):
+    """All marginals must derive from the persisted cell rollup: the cells
+    table and every marginal read InMemoryTableScan (the plan STRING
+    repeats the cached child's lineage per consumer, so counting parquet
+    scan text overcounts — cache hits are the real signal)."""
+    from openreviewcrawler_spark.catalog import q_event_hourly_seasonality
+
+    plan = _plan(q_event_hourly_seasonality(spark, SF))
+    assert "BatchEvalPython" not in plan
+    assert plan.count("InMemoryTableScan") >= 4, plan

@@ -9,6 +9,26 @@ import re
 SF = "/root/testdata/sf0.001"
 
 
+# --------------------------------------------------------------- event_ab_test
+
+
+def test_ab_test_counts_and_lift_consistency(spark):
+    from openreviewcrawler_spark.catalog import q_event_ab_test
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    n_per = collections.defaultdict(lambda: [0, 0])
+    for r in ev:
+        k = int(re.search(r"([0-9]+)", r["props"]).group(1))
+        n_per[r["event_type"]][k % 2] += 1
+    rows = {r["event_type"]: r for r in q_event_ab_test(spark, SF).collect()}
+    assert set(rows) == set(n_per)
+    for typ, (na, nb) in n_per.items():
+        r = rows[typ]
+        assert (r["n_a"], r["n_b"]) == (na, nb)
+        assert r["mean_a_cents"] > 0 and r["mean_b_cents"] > 0
+        assert r["lift_ppm"] == r["mean_b_cents"] * 1_000_000 // r["mean_a_cents"]
+
+
 # ----------------------------------------------------------- url_template_mine
 
 

@@ -3,6 +3,7 @@ audit, session-duration histogram."""
 
 from __future__ import annotations
 
+import collections
 
 SF = "/root/testdata/sf0.001"
 
@@ -81,3 +82,51 @@ def test_violation_audit_zero_on_pinned_schedule(spark):
         F.col("gap").isNotNull() & (F.col("gap") < F.col("delay_ms"))
     ).count()
     assert viol == 0
+
+
+# -------------------------------------------- event_session_duration_histogram
+
+
+def test_session_duration_histogram_matches_model(spark):
+    from openreviewcrawler_spark.catalog import (
+        _events_ms,
+        q_event_session_duration_histogram,
+    )
+
+    rows = _events_ms(spark, SF).collect()
+    by_user = collections.defaultdict(list)
+    for r in rows:
+        by_user[r["user_id"]].append((r["ts_ms"], r["event_id"]))
+    durs = []
+    for evs in by_user.values():
+        evs.sort()
+        start = prev = None
+        n = 0
+        for ts, _e in evs:
+            if prev is None or ts - prev > 1_800_000:
+                if start is not None:
+                    durs.append((prev - start, n))
+                start, n = ts, 0
+            prev = ts
+            n += 1
+        durs.append((prev - start, n))
+
+    def bucket(d):
+        for b, hi in ((0, 0), (1, 60000), (2, 300000), (3, 900000), (4, 3600000)):
+            if d <= hi:
+                return b
+        return 5
+
+    expect = collections.defaultdict(lambda: [0, 0, 0])
+    for d, n in durs:
+        e = expect[bucket(d)]
+        e[0] += 1
+        e[1] += n
+        e[2] = max(e[2], d)
+    total = sum(v[0] for v in expect.values())
+    got = {r["bucket"]: r for r in q_event_session_duration_histogram(spark, SF).collect()}
+    assert set(got) == set(expect)
+    for b, (ns, ne, mx) in expect.items():
+        r = got[b]
+        assert (r["n_sessions"], r["n_events"], r["max_dur_ms"]) == (ns, ne, mx)
+        assert r["share_ppm"] == ns * 1_000_000 // total

@@ -8,6 +8,33 @@ import collections
 SF = "/root/testdata/sf0.001"
 
 
+# ------------------------------------------------------ event_new_vs_returning
+
+
+def test_new_vs_returning_matches_model(spark):
+    from openreviewcrawler_spark.catalog import (
+        _events_ms,
+        q_event_new_vs_returning,
+    )
+
+    ud = {(r["user_id"], r["ts_ms"] // 86_400_000)
+          for r in _events_ms(spark, SF).collect()}
+    first = {}
+    for u, d in ud:
+        first[u] = min(first.get(u, d), d)
+    expect = collections.defaultdict(lambda: [0, 0])
+    for u, d in ud:
+        expect[d][d != first[u]] += 1
+    got = {r["day"]: r for r in q_event_new_vs_returning(spark, SF).collect()}
+    assert set(got) == set(expect)
+    for d, (nn, nr) in expect.items():
+        r = got[d]
+        assert (r["n_new"], r["n_returning"]) == (nn, nr)
+        assert r["returning_ppm"] == nr * 1_000_000 // (nn + nr)
+    # conservation: every user is new exactly once
+    assert sum(v[0] for v in expect.values()) == len(first)
+
+
 # ----------------------------------------------------- link_host_concentration
 
 
@@ -42,3 +69,25 @@ def test_link_concentration_matches_model(spark):
         assert r["n_links"] == sum(ls)
         assert abs(r["gini"] - _gini(ls)) < 5e-7
         assert 0.0 <= r["gini"] < 1.0
+
+
+# --------------------------------------------------------- mm_modality_mix_card
+
+
+def test_modality_mix_card_conserves_bytes(spark):
+    from openreviewcrawler_spark.catalog import q_mm_modality_mix_card
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
+    expect = collections.defaultdict(lambda: [0, 0])
+    for r in docs:
+        kind = ["image", "audio", "video"][r["doc_id"] % 3]
+        expect[kind][0] += 1
+        expect[kind][1] += len(r["text"])
+    rows = {r["kind"]: r for r in q_mm_modality_mix_card(spark, SF).collect()}
+    assert set(rows) == {"image", "audio", "video"}
+    tot = sum(v[1] for v in expect.values())
+    for kind, (n, b) in expect.items():
+        r = rows[kind]
+        assert (r["n_assets"], r["total_bytes"]) == (n, b)
+        assert r["mean_bytes"] == b // n
+        assert r["byte_share_ppm"] == b * 1_000_000 // tot

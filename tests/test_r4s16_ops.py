@@ -30,30 +30,3 @@ def test_value_percentiles_match_order_statistics(spark):
         assert r["p90_value"] == _p_disc(xs, 0.9)
         assert r["p99_value"] == _p_disc(xs, 0.99)
         assert r["max_value"] == max(xs)
-
-
-def test_context_sweep_closed_forms(spark):
-    from openreviewcrawler_spark.catalog import (
-        _CTX_GRID,
-        q_traindata_context_sweep,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("text").collect()
-    toks = [len(r["text"].split(" ")) for r in docs]
-    got = {r["w"]: r for r in q_traindata_context_sweep(spark, SF).collect()}
-    assert set(got) == set(_CTX_GRID)
-    for w in _CTX_GRID:
-        n_fit = sum(t <= w for t in toks)
-        k = [-(-t // w) for t in toks]
-        pad = [ki * w - t for ki, t in zip(k, toks)]
-        r = got[w]
-        assert r["n_docs"] == len(toks)
-        assert r["n_fit_whole"] == n_fit
-        assert r["n_chunks"] == sum(k)
-        assert r["n_tokens"] == sum(toks)
-        assert r["pad_tokens"] == sum(pad)
-        assert r["pad_ppm"] == sum(pad) * 1_000_000 // (sum(k) * w)
-    # a larger context always wastes MORE capacity on this corpus shape
-    # (short docs): pad share grows with w
-    ppms = [got[w]["pad_ppm"] for w in sorted(_CTX_GRID)]
-    assert ppms == sorted(ppms)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import collections
 
 SF = "/root/testdata/sf0.001"
 
@@ -36,3 +37,23 @@ def test_vocab_growth_matches_model_and_saturates(spark):
     for a, b in zip(ps, ps[1:]):
         assert got[b]["n_distinct"] >= got[a]["n_distinct"]
         assert got[b]["type_token_ppm"] <= got[a]["type_token_ppm"]
+
+
+def test_burstiness_matches_integer_moments(spark):
+    from openreviewcrawler_spark.catalog import _events_ms, q_event_burstiness
+
+    rows = _events_ms(spark, SF).collect()
+    cells = collections.Counter(
+        (r["event_type"], r["ts_ms"] // 60_000) for r in rows
+    )
+    per_type = collections.defaultdict(list)
+    for (typ, _m), c in cells.items():
+        per_type[typ].append(c)
+    got = {r["event_type"]: r for r in q_event_burstiness(spark, SF).collect()}
+    assert set(got) == set(per_type)
+    for typ, cs in per_type.items():
+        n, s1, s2 = len(cs), sum(cs), sum(c * c for c in cs)
+        r = got[typ]
+        assert (r["n_minutes"], r["n_events"]) == (n, s1)
+        assert r["fano_ppm"] == (n * s2 - s1 * s1) * 1_000_000 // (n * s1)
+        assert r["fano_ppm"] >= 0

@@ -3,8 +3,35 @@ resurrection detection."""
 
 from __future__ import annotations
 
+import collections
 
 SF = "/root/testdata/sf0.001"
+
+WEEK = 604_800_000
+DAY = 86_400_000
+
+
+def test_cohort_value_conserves_users_and_offsets(spark):
+    from openreviewcrawler_spark.catalog import (
+        _events_ms,
+        q_event_cohort_value,
+    )
+
+    rows = q_event_cohort_value(spark, SF).collect()
+    ev = _events_ms(spark, SF).collect()
+    weeks = {(r["user_id"], r["ts_ms"] // WEEK) for r in ev}
+    first = {}
+    for u, w in weeks:
+        first[u] = min(first.get(u, w), w)
+    expect_users = collections.Counter(
+        (first[u], w - first[u]) for u, w in weeks
+    )
+    got_users = {
+        (r["cohort_week"], r["week_offset"]): r["n_users"] for r in rows
+    }
+    assert got_users == dict(expect_users)
+    assert all(r["week_offset"] >= 0 for r in rows)
+    assert all(r["value_cents"] > 0 for r in rows)
 
 
 def test_robots_adoption_stats_match_fixture(spark):
@@ -18,3 +45,33 @@ def test_robots_adoption_stats_match_fixture(spark):
     assert r["n_with_delay"] == 17
     assert (r["min_delay_s"], r["max_delay_s"]) == (1, 5)
     assert r["mean_delay_s"] >= 1
+
+
+def test_resurrection_detect_matches_model(spark):
+    from openreviewcrawler_spark.catalog import (
+        _RESURRECT_GAP_DAYS,
+        _events_ms,
+        q_event_resurrection_detect,
+    )
+
+    ud = sorted(
+        {(r["user_id"], r["ts_ms"] // DAY) for r in _events_ms(spark, SF).collect()}
+    )
+    by_user = collections.defaultdict(list)
+    for u, d in ud:
+        by_user[u].append(d)
+    expect = collections.defaultdict(lambda: [0, 0])
+    for u, days in by_user.items():
+        prev = None
+        for d in days:
+            e = expect[d]
+            e[0] += 1
+            if prev is not None and d - prev >= _RESURRECT_GAP_DAYS:
+                e[1] += 1
+            prev = d
+    got = {r["day"]: r for r in q_event_resurrection_detect(spark, SF).collect()}
+    assert set(got) == set(expect)
+    for d, (na, nr) in expect.items():
+        r = got[d]
+        assert (r["n_active"], r["n_resurrected"]) == (na, nr)
+        assert r["resurrect_ppm"] == nr * 1_000_000 // na

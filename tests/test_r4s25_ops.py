@@ -6,6 +6,32 @@ import collections
 
 SF = "/root/testdata/sf0.001"
 
+DAY = 86_400_000
+
+
+def test_dau_forecast_backtest_matches_model(spark):
+    from openreviewcrawler_spark.catalog import (
+        _events_ms,
+        q_event_dau_forecast_backtest,
+    )
+
+    ud = {(r["user_id"], r["ts_ms"] // DAY) for r in _events_ms(spark, SF).collect()}
+    dau = collections.Counter(d for _u, d in ud)
+    days = sorted(dau)
+    expect = {}
+    for i, d in enumerate(days):
+        hist = [dau[x] for x in days[max(0, i - 7):i]]
+        if hist:
+            fc = sum(hist) // len(hist)
+            expect[d] = (dau[d], fc, abs(dau[d] - fc) * 1_000_000 // dau[d])
+    got = {
+        r["day"]: (r["dau"], r["forecast_dau"], r["ape_ppm"])
+        for r in q_event_dau_forecast_backtest(spark, SF).collect()
+    }
+    assert got == expect
+    # first observed day has no history -> no row
+    assert days[0] not in got
+
 
 def test_sink_source_classes_partition_the_node_set(spark):
     from openreviewcrawler_spark.catalog import q_graph_sink_source_nodes

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import collections
-import hashlib
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,29 +38,3 @@ def test_conversion_lag_matches_model(spark):
         r = got[b]
         assert (r["n_users"], r["max_lag_min"]) == (n, mx)
         assert r["share_ppm"] == n * 1_000_000 // tot
-
-
-def test_shard_checksums_are_order_independent_and_exact(spark):
-    from openreviewcrawler_spark.catalog import q_traindata_shard_checksums
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
-    expect = collections.defaultdict(lambda: [0, 0, 0])
-    for r in docs:
-        h = int(hashlib.md5(r["text"].encode()).hexdigest()[:8], 16)
-        e = expect[r["doc_id"] % 8]
-        e[0] += 1
-        e[1] += r["n_chars"]
-        e[2] += h
-    got = {r["shard"]: r for r in q_traindata_shard_checksums(spark, SF).collect()}
-    assert set(got) == set(expect)
-    for s, (n, b, c) in expect.items():
-        r = got[s]
-        assert (r["n_docs"], r["n_bytes"], r["content_checksum"]) == (n, b, c)
-    # order independence: a different input partitioning yields identical rows
-    from openreviewcrawler_spark.catalog import CATALOG
-
-    a = sorted(map(tuple, CATALOG["traindata_shard_checksums"].build(spark, SF).collect()))
-    assert a == sorted(
-        (r["shard"], r["n_docs"], r["n_bytes"], r["content_checksum"])
-        for r in got.values()
-    )

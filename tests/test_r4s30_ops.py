@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,3 +34,23 @@ def test_refetch_forecast_is_rollup_of_change_rate(spark):
             h: got[h]["refetch_millis_per_day"] / got[h]["n_urls"] for h in tiers
         }
         assert per_url[tiers[0]] > per_url[tiers[-1]]
+
+
+def test_frame_budget_is_sqrt_proportional_within_budget(spark):
+    from openreviewcrawler_spark.catalog import (
+        _FRAME_BUDGET,
+        q_mm_frame_budget_plan,
+    )
+
+    rows = q_mm_frame_budget_plan(spark, SF).collect()
+    assert rows
+    z = sum(math.sqrt(r["dur_ms"]) for r in rows)
+    for r in rows:
+        ideal = math.sqrt(r["dur_ms"]) / z * _FRAME_BUDGET
+        assert r["n_frames"] <= ideal < r["n_frames"] + 1 + 1e-6
+    # floor never overshoots the global budget
+    assert sum(r["n_frames"] for r in rows) <= _FRAME_BUDGET
+    # monotone: longer video never gets fewer frames
+    by_dur = sorted(rows, key=lambda r: r["dur_ms"])
+    for a, b in zip(by_dur, by_dur[1:]):
+        assert a["n_frames"] <= b["n_frames"]

@@ -3,6 +3,7 @@ profile, event value pareto."""
 
 from __future__ import annotations
 
+import math
 
 SF = "/root/testdata/sf0.001"
 
@@ -53,3 +54,31 @@ def test_shingle_df_profile_accounts_every_posting(spark):
     assert sum(r["posting_share_ppm"] for r in rows) <= 1_000_000
     for r in rows:
         assert r["n_shingles"] <= r["n_postings"]
+
+
+def test_value_pareto_bands_are_exact_log10(spark):
+    from openreviewcrawler_spark.catalog import q_event_value_pareto
+
+    rows = q_event_value_pareto(spark, SF).collect()
+    assert len(rows) > 2  # the value distribution spans magnitudes
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def cents(v: float) -> int:
+        d = Decimal(v).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
+        return int(math.floor(d * 100))
+
+    total = sum(cents(e["value"]) for e in ev)
+    assert sum(r["value_cents"] for r in rows) == total
+    assert sum(r["n_events"] for r in rows) == len(ev)
+    for r in rows:
+        # band k holds cents in [10^(k-1), 10^k)
+        lo, hi = 10 ** (r["band"] - 1), 10 ** r["band"]
+        assert r["value_cents"] >= r["n_events"] * (lo if r["band"] > 1 else 0)
+        assert r["value_cents"] < r["n_events"] * hi
+        assert r["n_users"] <= r["n_events"]
+    # bigger-ticket bands carry more revenue per event by construction
+    per_ev = sorted(
+        (r["band"], r["value_cents"] / r["n_events"]) for r in rows
+    )
+    assert all(a[1] < b[1] for a, b in zip(per_ev, per_ev[1:]))

@@ -3,8 +3,30 @@ freshness SLA."""
 
 from __future__ import annotations
 
+import datetime
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_weekday_profile_matches_calendar(spark):
+    from openreviewcrawler_spark.catalog import q_event_weekday_profile
+
+    rows = {r["event_type"]: r for r in q_event_weekday_profile(spark, SF).collect()}
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    agg: dict[str, list[int]] = {}
+    for e in ev:
+        # python weekday(): Monday=0 — the exact convention the epoch
+        # arithmetic is supposed to reproduce
+        wd = e["ts"].replace(tzinfo=datetime.timezone.utc).weekday()
+        a = agg.setdefault(e["event_type"], [0, 0])
+        a[wd >= 5] += 1
+    assert set(rows) == set(agg)
+    for t, (nwd, nwe) in agg.items():
+        r = rows[t]
+        assert (r["n_weekday"], r["n_weekend"]) == (nwd, nwe)
+        if nwd:
+            assert r["weekend_daily_lift_ppm"] == nwe * 5_000_000 // (nwd * 2)
 
 
 def test_url_extension_stats_buckets_and_shares(spark):
@@ -19,6 +41,37 @@ def test_url_extension_stats_buckets_and_shares(spark):
     for r in rows.values():
         assert r["n_hosts"] <= r["n_urls"]
         assert r["bytes_total"] >= 200 * r["n_urls"]
+
+
+def test_touch_journey_agrees_with_last_touch_and_flags_multi(spark):
+    from openreviewcrawler_spark.catalog import (
+        _events_ms,
+        q_event_touch_journey,
+    )
+    from openreviewcrawler_spark.operators.events import (
+        last_touch_attribution,
+    )
+
+    j = {r["convert_event_id"]: r for r in q_event_touch_journey(spark, SF).collect()}
+    lt = {
+        r["convert_event_id"]: r
+        for r in last_touch_attribution(_events_ms(spark, SF)).collect()
+    }
+    # same conversions attributed, and the last-touch endpoint agrees
+    assert set(j) == set(lt)
+    assert j
+    for cid, r in j.items():
+        assert r["last_touch_id"] == lt[cid]["touch_event_id"]
+        assert r["n_prior_touches"] >= 1
+        assert r["journey_span_ms"] >= 0
+        if r["n_prior_touches"] == 1:
+            assert r["first_touch_id"] == r["last_touch_id"]
+            assert r["is_multi_path"] == 0 and r["journey_span_ms"] == 0
+        if r["is_multi_path"]:
+            assert r["first_touch_id"] != r["last_touch_id"]
+            assert r["n_prior_touches"] >= 2
+    # the fixture has real multi-touch journeys
+    assert any(r["is_multi_path"] for r in j.values())
 
 
 def test_freshness_sla_recomputes_from_parts(spark):

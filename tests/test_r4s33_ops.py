@@ -64,3 +64,24 @@ def test_paragraph_profile_conserves_tokens(spark):
     full = next(r for r in rows if r["n_tok"] == PARA_WORDS)
     assert full["n_tokens"] == max(r["n_tokens"] for r in rows)
     assert sum(r["token_share_ppm"] for r in rows) <= 1_000_000
+
+
+def test_type_share_drift_is_share_difference(spark):
+    from openreviewcrawler_spark.catalog import q_event_type_share_drift
+
+    rows = q_event_type_share_drift(spark, SF).collect()
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    ts = [int(e["ts"].timestamp() * 1000) for e in ev]
+    lo, hi = min(ts), max(ts)
+    t1 = sum(1 for t in ts if t * 2 < lo + hi)
+    t2 = len(ts) - t1
+    assert sum(r["n_first"] for r in rows) == t1
+    assert sum(r["n_second"] for r in rows) == t2
+    for r in rows:
+        s1 = r["n_first"] * 1_000_000 // t1
+        s2 = r["n_second"] * 1_000_000 // t2
+        assert (r["share_first_ppm"], r["share_second_ppm"]) == (s1, s2)
+        assert r["drift_ppm"] == s2 - s1
+    # shares are a (floor-)partition of the whole in each half
+    assert 1_000_000 - len(rows) < sum(r["share_first_ppm"] for r in rows) <= 1_000_000

@@ -31,6 +31,61 @@ def test_distance_histogram_partitions_the_universe(spark):
         assert r["node_share_ppm"] == r["n_nodes"] * 1_000_000 // len(uni)
 
 
+def test_hhi_bounds_and_recount(spark):
+    from openreviewcrawler_spark.catalog import q_event_user_type_diversity
+
+    rows = {r["user_id"]: r for r in q_event_user_type_diversity(spark, SF).collect()}
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    per = collections.defaultdict(collections.Counter)
+    for e in ev:
+        per[e["user_id"]][e["event_type"]] += 1
+    assert set(rows) == set(per)
+    for u, c in per.items():
+        r = rows[u]
+        n = sum(c.values())
+        s2 = sum(v * v for v in c.values())
+        assert (r["n_events"], r["n_types"]) == (n, len(c))
+        assert r["hhi_ppm"] == s2 * 1_000_000 // (n * n)
+        # HHI lives in [1/k, 1] scaled to ppm
+        assert 1_000_000 // len(c) <= r["hhi_ppm"] + 1
+        assert r["hhi_ppm"] <= 1_000_000
+
+
+def test_value_activity_corr_matches_numpy(spark):
+    import math
+
+    from openreviewcrawler_spark.catalog import q_event_value_vs_activity_corr
+
+    [row] = q_event_value_vs_activity_corr(spark, SF).collect()
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import collections
+
+    per = collections.defaultdict(lambda: [0, Decimal(0)])
+    for e in ev:
+        a = per[e["user_id"]]
+        a[0] += 1
+        a[1] += Decimal(e["value"]).quantize(
+            Decimal("0.0001"), rounding=ROUND_HALF_UP
+        )
+    xs = [a[0] for a in per.values()]
+    ys = [int(math.floor(a[1] * 100)) for a in per.values()]
+    assert row["n_users"] == len(xs)
+    m = len(xs)
+    sx, sy = sum(xs), sum(ys)
+    sxy = sum(x * y for x, y in zip(xs, ys))
+    sxx, syy = sum(x * x for x in xs), sum(y * y for y in ys)
+    num = m * sxy - sx * sy
+    den = math.sqrt(m * sxx - sx * sx) * math.sqrt(m * syy - sy * sy)
+    ref = math.floor(num / den * 1e6) / 1e6
+    assert abs(row["r_corr"] - ref) < 2e-6
+    assert -1.0 <= row["r_corr"] <= 1.0
+
+
 def test_pagination_detect_finds_both_idioms(spark):
     from openreviewcrawler_spark.catalog import q_url_pagination_detect
 

@@ -48,6 +48,23 @@ def test_salt_plan_spreads_only_hot_hosts(spark):
             assert (r["n_urls"] + r["salt_factor"] - 1) // r["salt_factor"] <= cap
 
 
+def test_quantization_sweep_is_monotone_in_bits(spark):
+    from openreviewcrawler_spark.catalog import (
+        _QSWEEP_LEVELS,
+        q_embedding_quantization_sweep,
+    )
+
+    rows = {r["levels"]: r for r in q_embedding_quantization_sweep(spark, SF).collect()}
+    assert set(rows) == set(_QSWEEP_LEVELS)
+    n = {r["n_vectors"] for r in rows.values()}
+    assert len(n) == 1  # every level sees every vector
+    # more levels => (weakly) more vectors inside tolerance
+    tol = [rows[lv]["n_within_tol"] for lv in sorted(rows)]
+    assert tol == sorted(tol)
+    # 8-bit ships essentially everything; 2-bit essentially nothing
+    assert rows[255]["tol_ok_ppm"] > rows[3]["tol_ok_ppm"]
+
+
 def test_robots_schedule_ttl_and_jitter(spark):
     from openreviewcrawler_spark.catalog import q_crawl_robots_fetch_schedule
 

@@ -6,33 +6,6 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
-def test_compression_clusters_catch_planted_dups(spark):
-    from openreviewcrawler_spark.catalog import (
-        _corpus,
-        q_corpus_compression_cluster_plan,
-    )
-
-    rows = q_corpus_compression_cluster_plan(spark, SF).collect()
-    assert rows
-    n_corpus = _corpus(spark, SF).count()
-    assert sum(r["n_docs"] for r in rows) == n_corpus
-    cands = [r for r in rows if r["delta_candidate"]]
-    # the corpus derivation plants exact copies (doc_id % 5 == 0 slice),
-    # which MUST share a simhash prefix -> multi-doc clusters exist
-    assert cands
-    for r in rows:
-        assert 0 <= r["bval"] < (1 << 16)
-        if r["delta_candidate"]:
-            assert r["n_docs"] >= 2
-            expect = ((r["n_docs"] - 1) * (r["n_bytes"] // r["n_docs"]) * 3) // 10
-            assert r["est_saved_bytes"] == expect
-        else:
-            assert r["est_saved_bytes"] == 0
-    # savings exist but never exceed 30% of the candidate mass
-    saved = sum(r["est_saved_bytes"] for r in cands)
-    assert 0 < saved <= sum(r["n_bytes"] for r in cands) * 3 // 10
-
-
 def test_stationary_mix_is_a_near_distribution_and_converges(spark):
     from openreviewcrawler_spark.catalog import q_event_type_stationary_mix
 
@@ -66,21 +39,3 @@ def test_stationary_mix_is_a_near_distribution_and_converges(spark):
         v = dict(nv)
     for t, ppm in rows.items():
         assert abs(ppm - int(v.get(t, 0.0) * 1_000_000)) <= 2
-
-
-def test_shuffle_audit_shows_good_mixing(spark):
-    from openreviewcrawler_spark.catalog import (
-        _SHUFFLE_SHARDS,
-        q_traindata_seed_shuffle_audit,
-    )
-
-    rows = q_traindata_seed_shuffle_audit(spark, SF).collect()
-    assert 1 < len(rows) <= _SHUFFLE_SHARDS
-    n = sum(r["n_docs"] for r in rows)
-    assert n == spark.read.parquet(f"{SF}/documents.parquet").count()
-    for r in rows:
-        assert r["max_source_n"] * r["n_sources"] >= r["n_docs"]  # max >= mean
-        assert r["skew_ppm"] == r["max_source_n"] * r["n_sources"] * 1_000_000 // r["n_docs"]
-    # a hash shuffle of a source-balanced corpus should not leave any
-    # shard dominated by one source: max stays within 6x the uniform share
-    assert all(r["skew_ppm"] < 6_000_000 for r in rows)

@@ -38,3 +38,22 @@ def test_phrase_mine_matches_python_rake(spark):
         assert r["n_docs"] == len(docs_with[r["phrase"]])
         assert len(r["phrase"].split(" ")) >= 2
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+
+
+def test_bounce_rate_agrees_with_sessionization(spark):
+    from openreviewcrawler_spark.catalog import (
+        q_event_bounce_rate,
+        q_sessionization,
+    )
+
+    rows = q_event_bounce_rate(spark, SF).collect()
+    assert rows
+    # total sessions must match the established sessionization entry
+    n_sessions = sum(
+        r["n_sessions"] for r in q_sessionization(spark, SF).collect()
+    )
+    assert sum(r["n_sessions"] for r in rows) == n_sessions
+    for r in rows:
+        assert 0 <= r["n_bounces"] <= r["n_sessions"]
+        assert r["bounce_ppm"] == r["n_bounces"] * 1_000_000 // r["n_sessions"]
+    assert any(r["n_bounces"] for r in rows)  # 30-min gaps do strand singles

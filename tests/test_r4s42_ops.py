@@ -3,6 +3,8 @@ entry."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -29,6 +31,24 @@ def test_asof_join_generic_semantics(spark):
     assert out[("b", 7)] == (1, 50)       # skips the later version
     assert out[("c", 9)] == (None, None)  # key with no dimension rows
     assert len(out) == 5
+
+
+def test_asof_join_rejects_non_integral_ts_on_either_side(spark):
+    """A timestamp-typed ts column is rejected on the left as well as the
+    right: compared against integer epoch-ms it would match through an
+    implicit cast instead of failing."""
+    import pytest
+
+    from openreviewcrawler_spark.operators.asof import asof_join
+
+    ints = spark.createDataFrame([("a", 5, 1)], "k string, ts long, v long")
+    stamps = spark.createDataFrame(
+        [("a", 1)], "k string, v2 long"
+    ).withColumn("ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
+    with pytest.raises(ValueError, match="left ts column 'ts'"):
+        asof_join(stamps, ints, ["k"], "ts", ["v"])
+    with pytest.raises(ValueError, match="right ts column 'ts'"):
+        asof_join(ints.drop("v"), stamps, ["k"], "ts", ["v2"])
 
 
 def test_fee_join_recomputes_via_python_asof(spark):

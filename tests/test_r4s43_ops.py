@@ -7,6 +7,29 @@ import hashlib
 SF = "/root/testdata/sf0.001"
 
 
+def test_hypertable_levels_are_consistent(spark):
+    from openreviewcrawler_spark.catalog import q_event_hypertable_rollup
+
+    rows = q_event_hypertable_rollup(spark, SF).collect()
+    levels = {r["level"] for r in rows}
+    assert levels == {"1h", "1d", "1w"}
+    by = {lv: [r for r in rows if r["level"] == lv] for lv in levels}
+    # conservation at every level
+    tot = {lv: (sum(r["n_events"] for r in by[lv]), sum(r["value_cents"] for r in by[lv])) for lv in levels}
+    assert tot["1h"] == tot["1d"] == tot["1w"]
+    assert tot["1h"][0] == spark.read.parquet(f"{SF}/events.parquet").count()
+    # each daily cell equals the sum of its hourly children
+    import collections
+
+    daily_from_hourly = collections.Counter()
+    for r in by["1h"]:
+        day_start = (r["bucket_start_ms"] // 86400000) * 86400000
+        daily_from_hourly[(r["event_type"], day_start)] += r["n_events"]
+    for r in by["1d"]:
+        assert daily_from_hourly[(r["event_type"], r["bucket_start_ms"])] == r["n_events"]
+    assert len(by["1h"]) > len(by["1d"]) >= len(by["1w"])
+
+
 def test_kmv_sketch_estimates_and_audit(spark):
     from openreviewcrawler_spark.catalog import _KMV_K, q_url_kmv_set_sketch
 

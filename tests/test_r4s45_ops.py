@@ -42,3 +42,55 @@ def test_diameter_estimate_double_sweep(spark):
     assert (row["far_node_2"], row["diameter_lb"]) == (far2, dmax)
     # the second sweep never shrinks the known eccentricity lower bound
     assert row["diameter_lb"] >= 0
+
+
+def test_matryoshka_energy_monotone_and_exact(spark):
+    import math
+
+    from openreviewcrawler_spark.catalog import (
+        _MRL_PREFIXES,
+        q_embedding_matryoshka_energy,
+    )
+
+    rows = {r["p"]: r for r in q_embedding_matryoshka_energy(spark, SF).collect()}
+    assert set(rows) == set(_MRL_PREFIXES)
+    vecs = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
+    import collections
+
+    agg = collections.defaultdict(list)
+    for v in vecs:
+        e = [float(x) for x in v["embedding"]]
+        tot = 0.0
+        for x in e:
+            tot += x * x
+        for p in _MRL_PREFIXES:
+            part = 0.0
+            for x in e[:p]:
+                part += x * x
+            agg[p].append(int(math.floor(part / tot * 1_000_000)))
+    for p, ppms in agg.items():
+        r = rows[p]
+        assert r["n_vectors"] == len(ppms)
+        assert r["mean_energy_ppm"] == sum(ppms) // len(ppms)
+        assert r["min_energy_ppm"] == min(ppms)
+    # energy grows with prefix width and tops out below the whole
+    means = [rows[p]["mean_energy_ppm"] for p in sorted(rows)]
+    assert means == sorted(means)
+    assert means[-1] <= 1_000_000
+
+
+def test_winsorized_mean_is_robust(spark):
+    from openreviewcrawler_spark.catalog import q_event_value_winsorized_mean
+
+    rows = q_event_value_winsorized_mean(spark, SF).collect()
+    assert rows
+    for r in rows:
+        assert r["lo_cents"] <= r["hi_cents"]
+        assert r["lo_cents"] <= r["winsorized_mean_cents"] <= r["hi_cents"]
+        assert r["n_clipped"] > 0  # p05/p95 clamps always touch the tails
+        assert r["n_clipped"] < r["n_events"] // 2
+    # winsorization pulls the mean toward the body on a right-skewed
+    # value distribution for at least some types
+    assert any(
+        r["winsorized_mean_cents"] != r["mean_cents"] for r in rows
+    )

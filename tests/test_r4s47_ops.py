@@ -35,3 +35,31 @@ def test_simhash_drift_matches_python_votes(spark):
         assert r["drift_ppm"] == ham * 1_000_000 // 64
     # same word-salad distribution in both epochs => LOW drift everywhere
     assert all(r["hamming_64"] <= 24 for r in rows.values())
+
+
+def test_novelty_rate_decays_over_time(spark):
+    from openreviewcrawler_spark.catalog import q_event_novelty_rate
+
+    rows = sorted(q_event_novelty_rate(spark, SF).collect(), key=lambda r: r["day"])
+    assert len(rows) > 3
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    assert sum(r["n_events"] for r in rows) == len(ev)
+    import collections
+
+    first = {}
+    for e in ev:
+        k = (e["user_id"], e["event_type"])
+        t = int(e["ts"].timestamp() * 1000)
+        if k not in first or t < first[k]:
+            first[k] = t
+    novel_per_day = collections.Counter()
+    for e in ev:
+        k = (e["user_id"], e["event_type"])
+        t = int(e["ts"].timestamp() * 1000)
+        if t == first[k]:
+            novel_per_day[t // 86400000] += 1
+    for r in rows:
+        assert r["n_novel"] == novel_per_day.get(r["day"], 0)
+        assert r["novelty_ppm"] == r["n_novel"] * 1_000_000 // r["n_events"]
+    # novelty concentrates early: the first day beats the last day
+    assert rows[0]["novelty_ppm"] > rows[-1]["novelty_ppm"]

@@ -5,6 +5,33 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
+def test_velocity_burst_matches_sliding_window(spark):
+    from openreviewcrawler_spark.catalog import (
+        _BURST_THRESHOLD,
+        _BURST_WINDOW_MS,
+        q_event_velocity_burst_detect,
+    )
+
+    rows = {r["user_id"]: r for r in q_event_velocity_burst_detect(spark, SF).collect()}
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    per = collections.defaultdict(list)
+    for e in ev:
+        per[e["user_id"]].append(int(e["ts"].timestamp() * 1000))
+    assert set(rows) == set(per)
+    for u, ts in per.items():
+        ts.sort()
+        win = [
+            sum(1 for s in ts if t - _BURST_WINDOW_MS <= s <= t) for t in ts
+        ]
+        r = rows[u]
+        assert r["n_events"] == len(ts)
+        assert r["max_burst"] == max(win)
+        assert r["n_burst_events"] == sum(1 for w in win if w >= _BURST_THRESHOLD)
+        assert r["velocity_flag"] == (1 if max(win) >= _BURST_THRESHOLD else 0)
+
+
 def test_autoscale_plan_actions(spark):
     from openreviewcrawler_spark.catalog import (
         _SCALE_PER_EXEC,
@@ -27,3 +54,34 @@ def test_autoscale_plan_actions(spark):
     # a real load curve has both directions
     acts = {r["action"] for r in rows}
     assert {"scale_up", "scale_down"} <= acts
+
+
+def test_extract_route_plan_conserves_docs(spark):
+    from openreviewcrawler_spark.catalog import (
+        _ROUTE_COST,
+        q_mime_sniff,
+        q_mm_extract_route_plan,
+    )
+
+    rows = q_mm_extract_route_plan(spark, SF).collect()
+    sniffed = q_mime_sniff(spark, SF).collect()
+    import collections
+
+    exp = collections.defaultdict(lambda: [0, 0, 0])
+    for s in sniffed:
+        route, coeff = _ROUTE_COST.get(s["mime"], ("quarantine", 0))
+        a = exp[(s["mime"], route)]
+        a[0] += 1
+        a[1] += s["n_bytes"]
+        a[2] += (s["n_bytes"] // 1024 + 1) * coeff
+    got = {(r["mime"], r["route"]): (r["n_docs"], r["bytes_total"], r["cpu_ms_total"]) for r in rows}
+    assert got == {k: tuple(v) for k, v in exp.items()}
+    # several pipelines in play, and OCR dominates CPU per byte
+    routes = {r["route"]: r for r in rows}
+    assert len(routes) >= 4
+    if "ocr_extract" in routes and "dom_extract" in routes:
+        ocr, dom = routes["ocr_extract"], routes["dom_extract"]
+        assert (
+            ocr["cpu_ms_total"] / ocr["bytes_total"]
+            > dom["cpu_ms_total"] / dom["bytes_total"]
+        )

@@ -5,6 +5,49 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
+def test_label_anova_matches_python(spark):
+    import math
+
+    from openreviewcrawler_spark.catalog import q_embedding_label_anova
+
+    [row] = q_embedding_label_anova(spark, SF).collect()
+    vecs = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
+    import collections
+
+    groups = collections.defaultdict(list)
+    for v in vecs:
+        x = 0.0
+        for c in v["embedding"]:
+            x += float(c) * float(c)
+        groups[v["label"]].append(x)
+    k = len(groups)
+    n = sum(len(g) for g in groups.values())
+    assert (row["k"], row["n"]) == (k, n)
+    # mirror the engine's DECIMAL(28,12) accumulation exactly — a float
+    # recount diverges because SSB is a catastrophic cancellation
+    # (sb_raw ≈ s²/n) that amplifies last-ulp summation differences
+    from decimal import Decimal
+
+    q = Decimal("0.000000000001")
+
+    def dsum(xs):
+        return sum(Decimal(x).quantize(q) for x in xs)
+
+    s = float(dsum(x for g in groups.values() for x in g))
+    ss = float(dsum(x * x for g in groups.values() for x in g))
+    sb_raw = float(
+        dsum(
+            float(dsum(g)) * float(dsum(g)) / len(g)
+            for g in groups.values()
+        )
+    )
+    ssb = sb_raw - s * s / n
+    ssw = ss - sb_raw
+    f = (ssb / (k - 1)) / (ssw / (n - k))
+    assert row["f_stat_milli"] == math.floor(f * 1000)
+    assert row["f_stat_milli"] >= 0
+
+
 def test_queue_wait_mm1(spark):
     from openreviewcrawler_spark.catalog import (
         q_crawl_latency_quantiles,

@@ -7,6 +7,7 @@ UDFs, no corpus-sized broadcasts).
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
 
 BAD_ALWAYS = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
 
@@ -53,6 +54,55 @@ def test_ngram_novelty_plan_no_corpus_broadcast(spark, sf_dir):
     # but the corpus-sized first-occurrence table must never carry a
     # literal broadcast hint (house rule, test_plans.py r3 verdict #2)
     assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_image_tiles_cover_exactly(spark):
+    from openreviewcrawler_spark.operators.multimodal import plan_image_tiles
+
+    # src_len 100 -> w=132, h=700%487+32=245 -> nx=3, ny=4 -> 12 tiles
+    assets = spark.createDataFrame(
+        [(7, "image", bytearray(b"x"), 100), (8, "audio", bytearray(b"x"), 100)],
+        "asset_id long, kind string, payload binary, src_len long",
+    )
+    tiles = plan_image_tiles(assets).collect()
+    assert {t["asset_id"] for t in tiles} == {7}
+    assert len(tiles) == 12
+    area = sum((t["x1"] - t["x0"]) * (t["y1"] - t["y0"]) for t in tiles)
+    assert area == 132 * 245
+    assert all(0 <= t["x0"] < t["x1"] <= 132 for t in tiles)
+    assert all(0 <= t["y0"] < t["y1"] <= 245 for t in tiles)
+    # row-major: tile_idx 0..11 each exactly once
+    assert sorted(t["tile_idx"] for t in tiles) == list(range(12))
+
+
+def test_image_tiles_plan_pure_jvm(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import q_mm_image_tiles
+
+    plan = _plan(q_mm_image_tiles(spark, sf_dir))
+    _assert_clean(plan, "ArrowEvalPython", "Exchange")  # zero shuffles
+
+
+def test_kfold_assign_partitions_and_balance(spark):
+    from openreviewcrawler_spark.operators.textstats import kfold_assign
+
+    docs = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).cast("string").alias("source")
+    )
+    out = kfold_assign(docs, k=5).collect()
+    # every (stratum) sums back to its total; folds partition the stratum
+    by_stratum: dict[str, int] = {}
+    for r in out:
+        by_stratum[r["stratum"]] = by_stratum.get(r["stratum"], 0) + r["n_docs"]
+        assert r["stratum_total"] == 250
+        # dev_ppm = (n*k - total)*1e6/(total*k), exact integer check
+        assert r["dev_ppm"] == (r["n_docs"] * 5 - 250) * 1000000 // (250 * 5)
+    assert all(v == 250 for v in by_stratum.values())
+    assert len(out) == 20  # 5 folds x 4 strata all non-empty at n=1000
+
+    # determinism across parallelism: same rollup at 1 and 8 partitions
+    a = sorted(map(tuple, kfold_assign(docs.repartition(1), k=5).collect()))
+    b = sorted(map(tuple, kfold_assign(docs.repartition(8), k=5).collect()))
+    assert a == b
 
 
 def test_circuit_breaker_trip_cooldown_probe_recover(spark):
@@ -122,6 +172,38 @@ def test_cdx_gap_audit_detects_planted_defects(spark):
     assert out[2]["n_gaps"] == 0 and out[2]["lost_bytes"] == 0
 
 
+def test_ann_recall_eval_bounds_and_truncation(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import q_ann_recall_eval
+
+    rows = q_ann_recall_eval(spark, sf_dir).collect()
+    assert len(rows) == 16
+    import math
+    for r in rows:
+        assert 0 <= r["n_hit"] <= min(r["n_brute"], r["n_lsh"] or 0) or r["n_lsh"] == 0
+        assert r["recall"] == math.floor(r["n_hit"] / r["n_brute"] * 1e6) / 1e6
+
+
+def test_ann_recall_eval_detects_good_recall_on_near_dups(spark, sf_dir):
+    """The harness must read HIGH when neighbors exist: same planted
+    ~0.99-cos corpus as the r2 LSH gate, evaluated through recall_eval
+    at k=1. (On raw random embeddings recall@5 ~ 0.05 — an honest ANN
+    answer, which is exactly what the catalog entry records.)"""
+    from openreviewcrawler_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    near = emb.filter(F.col("vec_id") < 16).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform(
+            F.col("embedding"),
+            lambda x, i: x * (F.lit(1.0) + F.lit(0.15) * (i == 0).cast("double")),
+        ).cast("array<float>").alias("embedding"),
+        "label",
+    )
+    rows = similarity.recall_eval(emb.unionByName(near), n_queries=16, k=1).collect()
+    mean_recall = sum(r["recall"] for r in rows) / len(rows)
+    assert mean_recall >= 0.8, f"recall_eval mean {mean_recall:.2f}"
+
+
 def test_host_lang_mix_shares_partition(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_host_lang_mix
 
@@ -135,6 +217,39 @@ def test_host_lang_mix_shares_partition(spark, sf_dir):
         # floor'd ppm shares under-count by < 1 ppm per language
         total_ppm = sum(r["share_ppm"] for r in rs)
         assert 1000000 - len(rs) < total_ppm <= 1000000, host
+
+
+def test_pca_power_recovers_planted_direction(spark):
+    from openreviewcrawler_spark.operators.similarity import pca_power
+
+    # all rows equal x = (3, 0, 4, 0): Gram = n * x x^T, one iteration
+    # already lands exactly on x/|x| = (0.6, 0, 0.8, 0)
+    df = spark.createDataFrame(
+        [(i, [3.0, 0.0, 4.0, 0.0]) for i in range(50)],
+        "vec_id long, embedding array<double>",
+    )
+    out = {r["pos"]: r for r in pca_power(df, n_iter=2, dim=4).collect()}
+    assert [out[p]["loading"] for p in range(4)] == [0.6, 0.0, 0.8, 0.0]
+    # eigenvalue of n * x x^T is n * |x|^2 = 50 * 25 = 1250
+    assert out[0]["eigenvalue"] == 1250.0
+
+
+def test_pca_power_dominant_axis_on_anisotropic_noise(spark):
+    from openreviewcrawler_spark.operators.similarity import pca_power
+
+    # deterministic anisotropic cloud: dim 1 has 10x the spread of the
+    # others -> the dominant loading concentrates there
+    rows = [
+        (i, [((i * 7) % 5 - 2.0) / 10.0,
+             float((i * 13) % 11 - 5),
+             ((i * 3) % 7 - 3.0) / 10.0])
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = {r["pos"]: r for r in pca_power(df, n_iter=2, dim=3).collect()}
+    assert abs(out[1]["loading"]) > 0.99
+    assert abs(out[0]["loading"]) < 0.1 and abs(out[2]["loading"]) < 0.1
+    assert out[1]["eigenvalue"] > 0
 
 
 def test_keeper_quality_prefers_best_copy(spark, sf_dir):

@@ -3,8 +3,49 @@ join plan shape."""
 
 from __future__ import annotations
 
+import statistics
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_seasonal_anomaly_baseline_is_same_weekday(spark):
+    from openreviewcrawler_spark.catalog import q_event_seasonal_anomaly
+
+    rows = q_event_seasonal_anomaly(spark, SF).collect()
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    daily = collections.Counter()
+    for e in ev:
+        daily[(e["event_type"], int(e["ts"].timestamp() * 1000) // 86400000)] += 1
+    series = collections.defaultdict(list)
+    for (t, day), n in sorted(daily.items(), key=lambda kv: kv[0][1]):
+        series[(t, (day + 3) % 7)].append((day, n))
+    expect = {}
+    for (t, dow), pts in series.items():
+        for i, (day, n) in enumerate(pts):
+            prior = [x for _, x in pts[max(0, i - 3) : i]]
+            expect[(t, day)] = (
+                n,
+                dow,
+                statistics.median(prior) if prior else None,
+            )
+    assert len(rows) == len(expect)
+    n_flagged = 0
+    for r in rows:
+        n, dow, med = expect[(r["event_type"], r["day"])]
+        assert (r["n"], r["dow"]) == (n, dow)
+        if med is None:
+            assert r["expected_decims"] is None
+            assert r["spike"] == 0 and r["dip"] == 0
+        else:
+            assert r["expected_decims"] == int(med * 10)
+            assert r["spike"] == (1 if n > 2 * med else 0)
+            assert r["dip"] == (1 if n * 2 < med else 0)
+            n_flagged += r["spike"] + r["dip"]
+    # sparse daily counts produce SOME flags, but not a flood
+    assert 0 < n_flagged < len(rows) // 2
 
 
 def test_case_probe_detects_planted_sensitive_hosts(spark):
@@ -32,3 +73,34 @@ def test_case_probe_detects_planted_sensitive_hosts(spark):
     # every host mixes probes; with %3 planting all hosts show SOME
     # divergence, at roughly a third
     assert all(200_000 < r["divergent_ppm"] < 500_000 for r in rows.values())
+
+
+def test_asof_join_plan_is_single_shuffle_window(spark):
+    """The as-of operator's scale claim, verified in the plan: one
+    exchange on the key, no broadcast-nested-loop, no cartesian."""
+    from pyspark.sql import functions as F
+
+    from openreviewcrawler_spark.operators.asof import asof_join
+
+    left = spark.range(1000).select(
+        (F.col("id") % 7).alias("k"),
+        (F.col("id") * 13 % 997).alias("ts_ms"),
+        F.col("id").alias("payload"),
+    )
+    right = spark.range(50).select(
+        (F.col("id") % 7).alias("k"),
+        (F.col("id") * 31 % 997).alias("start_ms"),
+        (F.col("id") + 10000).alias("v"),
+    )
+    out = asof_join(left, right, ["k"], "ts_ms", ["v"], right_ts_col="start_ms")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    # the union + one keyed window = exactly one shuffle of the data
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Window" in plan
+    # and it actually computes the right thing on this synthetic pair
+    sample = out.filter(F.col("k") == 3).collect()
+    assert sample and all(
+        r["asof_ts"] is None or r["asof_ts"] <= r["ts_ms"] for r in sample
+    )

@@ -2,8 +2,39 @@
 
 from __future__ import annotations
 
+import math
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_paired_ttest_matches_python(spark):
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from openreviewcrawler_spark.catalog import q_event_paired_ttest
+
+    [row] = q_event_paired_ttest(spark, SF).collect()
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    ts = [int(e["ts"].timestamp() * 1000) for e in ev]
+    lo, hi = min(ts), max(ts)
+    import collections
+
+    halves = collections.defaultdict(lambda: [Decimal(0), Decimal(0)])
+    for e, t in zip(ev, ts):
+        v = Decimal(e["value"]).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
+        halves[e["user_id"]][0 if t * 2 < lo + hi else 1] += v
+    ds = [
+        int(math.floor(b * 100)) - int(math.floor(a * 100))
+        for a, b in halves.values()
+    ]
+    n = len(ds)
+    assert row["n"] == n
+    assert row["sum_diff_cents"] == sum(ds)
+    sd = sum(ds)
+    sdd = sum(d * d for d in ds)
+    mean = sd / n
+    var = (sdd - sd * sd / n) / (n - 1)
+    t_stat = mean / math.sqrt(var / n)
+    assert row["t_stat_milli"] == math.floor(t_stat * 1000)
 
 
 def test_hreflang_completeness_follows_planting(spark):

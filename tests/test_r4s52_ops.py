@@ -64,3 +64,22 @@ def test_in_out_degree_corr(spark):
     den = math.sqrt(m * sxx - sx * sx) * math.sqrt(m * syy - sy * sy)
     assert abs(row["r_corr"] - math.floor(num / den * 1e6) / 1e6) < 2e-6
     assert -1.0 <= row["r_corr"] <= 1.0
+
+
+def test_depth_conversion_totals_match_sessionization(spark):
+    from openreviewcrawler_spark.catalog import (
+        q_event_depth_vs_conversion,
+        q_sessionization,
+    )
+
+    rows = q_event_depth_vs_conversion(spark, SF).collect()
+    n_sessions = sum(
+        r["n_sessions"] for r in q_sessionization(spark, SF).collect()
+    )
+    assert sum(r["n_sessions"] for r in rows) == n_sessions
+    for r in rows:
+        assert 0 <= r["n_converted"] <= r["n_sessions"]
+        assert r["cvr_ppm"] == r["n_converted"] * 1_000_000 // r["n_sessions"]
+    assert len(rows) > 1  # depths actually spread across bands
+    # deeper sessions convert at least somewhere
+    assert any(r["n_converted"] > 0 for r in rows)

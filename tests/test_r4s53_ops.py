@@ -2,41 +2,8 @@
 
 from __future__ import annotations
 
-import hashlib
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_duplicate_discount_weights(spark):
-    from openreviewcrawler_spark.catalog import (
-        _corpus,
-        q_traindata_duplicate_discount_weights,
-    )
-
-    rows = {r["source"]: r for r in q_traindata_duplicate_discount_weights(spark, SF).collect()}
-    assert set(rows) == {"base", "tailcut", "snapshot"}
-    corpus = _corpus(spark, SF).collect()
-    import collections
-
-    copies = collections.Counter(hashlib.md5(c["text"].encode()).hexdigest() for c in corpus)
-    per = collections.defaultdict(lambda: [0, 0])
-    for c in corpus:
-        src = (
-            "snapshot"
-            if c["doc_id"] >= 200000
-            else "tailcut" if c["doc_id"] >= 100000 else "base"
-        )
-        n = copies[hashlib.md5(c["text"].encode()).hexdigest()]
-        a = per[src]
-        a[0] += 1
-        a[1] += 1_000_000 // n
-    for src, (nd, eff) in per.items():
-        r = rows[src]
-        assert (r["n_docs"], r["effective_docs_ppm"]) == (nd, eff)
-        assert r["discount_ppm"] == (nd * 1_000_000 - eff) // nd
-    # the snapshot slice is pure copies: discounted hard; base keeps
-    # most of its mass
-    assert rows["snapshot"]["discount_ppm"] > rows["base"]["discount_ppm"]
 
 
 def test_wau_jaccard_pairs(spark):
@@ -61,33 +28,3 @@ def test_wau_jaccard_pairs(spark):
         assert r["next_week"] == w + 1
     # small fixture cohort is sticky: overlap is substantial
     assert any(r["jaccard_ppm"] > 500_000 for r in rows.values())
-
-
-def test_quality_drift_epochs(spark):
-    from openreviewcrawler_spark.catalog import (
-        q_corpus_quality_drift_epochs,
-        q_text_quality,
-    )
-    import math
-
-    rows = {r["source"]: r for r in q_corpus_quality_drift_epochs(spark, SF).collect()}
-    assert rows
-    q = {r["doc_id"]: r["quality_score"] for r in q_text_quality(spark, SF).collect()}
-    docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
-    import collections
-    from decimal import Decimal
-
-    agg = collections.defaultdict(lambda: [0, Decimal(0), 0, Decimal(0)])
-    for d in docs:
-        ep = 1 if d["doc_id"] % 40 - d["doc_id"] % 20 == 20 else 0
-        a = agg[d["source"]]
-        a[2 * ep] += 1
-        a[2 * ep + 1] += Decimal(str(q[d["doc_id"]]))
-    for src, (n0, s0, n1, s1) in agg.items():
-        r = rows[src]
-        assert (r["n_epoch0"], r["n_epoch1"]) == (n0, n1)
-        q0 = math.floor(float(s0) / n0 * 1_000_000)
-        q1 = math.floor(float(s1) / n1 * 1_000_000)
-        assert abs(r["q0_ppm"] - q0) <= 1
-        assert abs(r["q1_ppm"] - q1) <= 1
-        assert r["drift_ppm"] == r["q1_ppm"] - r["q0_ppm"]

@@ -32,3 +32,38 @@ def test_community_cut_consistent_with_lpa(spark):
     assert row["cut_ppm"] == n_cut * 1_000_000 // len(edges)
     # the planted cells keep most edges internal; the noise graph cuts
     assert 0 < row["n_cut"] < row["n_edges"]
+
+
+def test_error_cascades_are_islands_of_hot_minutes(spark):
+    from openreviewcrawler_spark.catalog import (
+        _CASCADE_MIN_ERRORS,
+        q_event_error_cascade_windows,
+    )
+
+    rows = sorted(
+        q_event_error_cascade_windows(spark, SF).collect(),
+        key=lambda r: r["start_minute"],
+    )
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    mins = collections.Counter(
+        int(e["ts"].timestamp() * 1000) // 60000
+        for e in ev
+        if e["event_type"] == "error"
+    )
+    hot = sorted(m for m, n in mins.items() if n >= _CASCADE_MIN_ERRORS)
+    episodes = []
+    for m in hot:
+        if episodes and m - episodes[-1][-1] == 1:
+            episodes[-1].append(m)
+        else:
+            episodes.append([m])
+    assert len(rows) == len(episodes)
+    for r, ep in zip(rows, episodes):
+        assert r["start_minute"] == ep[0]
+        assert r["end_minute"] == ep[-1]
+        assert r["n_minutes"] == len(ep)
+        assert r["n_errors"] == sum(mins[m] for m in ep)
+    if rows:
+        assert all(r["n_errors"] >= _CASCADE_MIN_ERRORS * r["n_minutes"] for r in rows)

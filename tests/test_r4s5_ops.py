@@ -183,6 +183,61 @@ def test_html_canonical_cluster_semantics(spark, sf_dir):
     _assert_clean(plan, "Window")
 
 
+def test_banded_hamming_pairs_planted(spark):
+    from openreviewcrawler_spark.operators.dedup import banded_hamming_pairs
+
+    rows = [
+        (1, 100, 200, 300, 400),
+        (2, 101, 200, 300, 400),   # 1 bit off band 0 vs asset 1 (100^101=1 -> ham 1... actually bit_count(100^101)=1)
+        (3, 100, 200, 300, 1024),  # differs from 1 only in band 3 by one bit (400^1024 has several bits)
+        (4, 9999, 8888, 7777, 6666),  # unrelated
+    ]
+    df = spark.createDataFrame(rows, "asset_id long, b0 long, b1 long, b2 long, b3 long")
+    out = {(r["id_a"], r["id_b"]): r["hamming"]
+           for r in banded_hamming_pairs(df, max_hamming=3).collect()}
+    assert (1, 2) in out and out[(1, 2)] == bin(100 ^ 101).count("1")
+    # (1,3) shares bands 0-2, verify hamming = popcount(400^1024)
+    h13 = bin(400 ^ 1024).count("1")
+    assert ((1, 3) in out) == (h13 <= 3)
+    assert all(a != 4 and b != 4 for a, b in out)
+
+
+def test_mm_phash_dedup_groups_of_four(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import q_mm_phash_dedup
+
+    df = q_mm_phash_dedup(spark, sf_dir)
+    rows = df.collect()
+    assert rows, "planted groups must produce near-dup pairs"
+    # every surviving pair is within the verify threshold and in-group
+    for r in rows:
+        assert r["hamming"] <= 3
+        assert r["id_a"] // 4 == r["id_b"] // 4, "cross-group pair leaked"
+    # a full group of 4 yields all 6 pairs; count pairs for group of ids 0-3
+    g0 = [r for r in rows if r["id_a"] // 4 == 0]
+    assert len(g0) == 6
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    _assert_clean(plan)
+
+
+def test_ivf_cell_balance_shares(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import q_ann_ivf_cell_balance
+
+    df = q_ann_ivf_cell_balance(spark, sf_dir)
+    rows = df.collect()
+    total = sum(r["n_vectors"] for r in rows)
+    n_cells = len(rows)
+    assert total > 0 and n_cells >= 2
+    for r in rows:
+        assert r["share_ppm"] == (r["n_vectors"] * 1_000_000) // total
+        assert r["is_hot"] == (r["n_vectors"] * n_cells > 2 * total)
+    # shares under-sum 1e6 only by truncation
+    assert 1_000_000 - n_cells <= sum(r["share_ppm"] for r in rows) <= 1_000_000
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # nested loops here are only the K-row centroid broadcasts (the
+    # established ivf shape) + the 1-row total; never an unbroadcast product
+    assert "BatchEvalPython" not in plan and "CartesianProduct" not in plan
+
+
 def test_dns_prefetch_plan_first_seen_partition(spark, sf_dir):
     from openreviewcrawler_spark.catalog import q_crawl_dns_prefetch_plan
 
@@ -198,3 +253,19 @@ def test_dns_prefetch_plan_first_seen_partition(spark, sf_dir):
         assert r["n_urls"] >= r["n_hosts"]
     plan = _plan(q_crawl_dns_prefetch_plan(spark, sf_dir))
     _assert_clean(plan, "Window")
+
+
+def test_cluster_purity_consistent(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import (
+        q_ann_ivf_cell_balance,
+        q_embedding_cluster_purity,
+    )
+
+    pur = {r["cell"]: r for r in q_embedding_cluster_purity(spark, sf_dir).collect()}
+    bal = {r["cell"]: r for r in q_ann_ivf_cell_balance(spark, sf_dir).collect()}
+    # same quantizer -> same cells with identical populations
+    assert set(pur) == set(bal)
+    for c, r in pur.items():
+        assert r["n_vectors"] == bal[c]["n_vectors"]
+        assert 0 < r["majority_n"] <= r["n_vectors"]
+        assert r["purity_ppm"] == (r["majority_n"] * 1_000_000) // r["n_vectors"]

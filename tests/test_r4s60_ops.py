@@ -5,6 +5,26 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
+def test_deadline_sweep_is_monotone_and_anchored(spark):
+    from openreviewcrawler_spark.catalog import (
+        _DEADLINE_GRID_MIN,
+        q_event_deadline_conversion,
+        q_event_deadline_sweep,
+    )
+
+    rows = {r["deadline_min"]: r for r in q_event_deadline_sweep(spark, SF).collect()}
+    assert set(rows) == set(_DEADLINE_GRID_MIN)
+    # a longer deadline can only convert more
+    cvr = [rows[m]["cvr_ppm"] for m in sorted(rows)]
+    assert cvr == sorted(cvr)
+    assert cvr[0] < cvr[-1]  # the window genuinely binds on this data
+    # the 60-min point must equal the single-deadline entry exactly
+    [single] = q_event_deadline_conversion(spark, SF).collect()
+    assert rows[60]["n_signed_users"] == single["n_signed_users"]
+    assert rows[60]["n_converted"] == single["n_converted_1h"]
+    assert rows[60]["cvr_ppm"] == single["cvr_1h_ppm"]
+
+
 def test_delay_sweep_closed_form(spark):
     from openreviewcrawler_spark.catalog import (
         _DELAY_GRID_MS,

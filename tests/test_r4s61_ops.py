@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import datetime
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,3 +28,30 @@ def test_frontier_memory_estimate(spark):
     assert row["bytes_per_row"] == total // n
     # sanity: a frontier row costs tens of bytes, not kilobytes
     assert 30 < row["bytes_per_row"] < 200
+
+
+def test_weekend_value_premium(spark):
+    from openreviewcrawler_spark.catalog import q_event_weekend_value_premium
+
+    rows = {r["event_type"]: r for r in q_event_weekend_value_premium(spark, SF).collect()}
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    agg = collections.defaultdict(lambda: [[0, Decimal(0)], [0, Decimal(0)]])
+    for e in ev:
+        wd = e["ts"].replace(tzinfo=datetime.timezone.utc).weekday()
+        side = 1 if wd >= 5 else 0
+        a = agg[e["event_type"]][side]
+        a[0] += 1
+        a[1] += Decimal(e["value"]).quantize(
+            Decimal("0.0001"), rounding=ROUND_HALF_UP
+        )
+    for t, (wd_, we) in agg.items():
+        r = rows[t]
+        assert (r["n_weekday"], r["n_weekend"]) == (wd_[0], we[0])
+        m_wd = int(math.floor(wd_[1] * 100)) // wd_[0]
+        m_we = int(math.floor(we[1] * 100)) // we[0]
+        assert r["mean_weekday_cents"] == m_wd
+        assert r["mean_weekend_cents"] == m_we
+        assert r["premium_ppm"] == m_we * 1_000_000 // m_wd

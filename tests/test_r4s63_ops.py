@@ -33,3 +33,32 @@ def test_status_class_mix(spark):
     assert any(
         not (r["n_3xx"] and r["n_5xx"]) for r in rows.values()
     )
+
+
+def test_local_peaks(spark):
+    from openreviewcrawler_spark.catalog import q_event_local_peak_detect
+
+    rows = {r["hour_b"]: r for r in q_event_local_peak_detect(spark, SF).collect()}
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    hourly = collections.Counter(
+        int(e["ts"].timestamp() * 1000) // 3600000 for e in ev
+    )
+    hours = sorted(hourly)
+    exp = {}
+    for i, h in enumerate(hours):
+        if 0 < i < len(hours) - 1:
+            p, nx = hours[i - 1], hours[i + 1]
+            if (
+                p == h - 1
+                and nx == h + 1
+                and hourly[h] > hourly[p]
+                and hourly[h] > hourly[nx]
+            ):
+                exp[h] = (hourly[h], hourly[h] - max(hourly[p], hourly[nx]))
+    assert set(rows) == set(exp)
+    assert exp  # the hourly curve is bumpy enough to have real peaks
+    for h, (n, prom) in exp.items():
+        assert (rows[h]["n_events"], rows[h]["prominence"]) == (n, prom)
+        assert prom >= 1

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,3 +27,39 @@ def test_harmonic_reach_from_histogram(spark):
     assert row["harmonic_micro"] == harm
     assert row["mean_depth_milli"] == mean_md
     assert row["harmonic_micro"] > 0
+
+
+def test_ltv_age_curve_cumulative(spark):
+    from openreviewcrawler_spark.catalog import q_event_ltv_age_curve
+
+    rows = sorted(q_event_ltv_age_curve(spark, SF).collect(), key=lambda r: r["age_days"])
+    assert rows
+    assert rows[0]["age_days"] == 0
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    first = {}
+    for e in ev:
+        d = int(e["ts"].timestamp() * 1000) // 86400000
+        u = e["user_id"]
+        if u not in first or d < first[u]:
+            first[u] = d
+    daily = collections.defaultdict(lambda: [Decimal(0), 0])
+    for e in ev:
+        d = int(e["ts"].timestamp() * 1000) // 86400000
+        a = daily[d - first[e["user_id"]]]
+        a[0] += Decimal(e["value"]).quantize(
+            Decimal("0.0001"), rounding=ROUND_HALF_UP
+        )
+        a[1] += 1
+    assert len(rows) == len(daily)
+    cum = 0
+    for r in rows:
+        dec, n = daily[r["age_days"]]
+        cents = int(math.floor(dec * 100))
+        assert (r["n_events"], r["day_cents"]) == (n, cents)
+        cum += cents
+        assert r["cum_cents"] == cum
+    # the curve is non-decreasing and day 0 carries real mass
+    assert rows[0]["day_cents"] > 0
+    assert rows[-1]["cum_cents"] == cum

@@ -37,3 +37,41 @@ def test_adaptive_timeout_plan(spark):
     assert set(rows) == {
         r["host"] for r in q_crawl_latency_mad_outliers(spark, SF).collect()
     }
+
+
+def test_session_type_pairs_lift(spark):
+    from openreviewcrawler_spark.catalog import q_event_session_type_pairs
+
+    rows = {(r["type_a"], r["type_b"]): r for r in q_event_session_type_pairs(spark, SF).collect()}
+    assert rows
+    ev = sorted(
+        spark.read.parquet(f"{SF}/events.parquet").collect(),
+        key=lambda e: (e["user_id"], e["ts"], e["event_id"]),
+    )
+    sessions = []
+    prev_user, prev_ts = None, None
+    for e in ev:
+        t = int(e["ts"].timestamp() * 1000)
+        if e["user_id"] != prev_user or t - prev_ts > 1800000:
+            sessions.append(set())
+        sessions[-1].add(e["event_type"])
+        prev_user, prev_ts = e["user_id"], t
+    ns = len(sessions)
+    import collections
+    import itertools
+
+    n_t = collections.Counter()
+    n_both = collections.Counter()
+    for s in sessions:
+        for t in s:
+            n_t[t] += 1
+        for a, b in itertools.combinations(sorted(s), 2):
+            n_both[(a, b)] += 1
+    assert set(rows) == set(n_both)
+    for (a, b), nb in n_both.items():
+        r = rows[(a, b)]
+        assert (r["n_both"], r["n_a"], r["n_b"]) == (nb, n_t[a], n_t[b])
+        assert r["lift_ppm"] == nb * ns * 1_000_000 // (n_t[a] * n_t[b])
+    # lifts spread around independence (1e6)
+    lifts = [r["lift_ppm"] for r in rows.values()]
+    assert min(lifts) < 1_000_000 < max(lifts) or len(set(lifts)) > 1

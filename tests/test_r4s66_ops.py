@@ -5,31 +5,6 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.001"
 
 
-def test_mixture_hhi_decreases_with_temperature(spark):
-    from openreviewcrawler_spark.catalog import (
-        q_traindata_mixture_hhi,
-        q_traindata_temperature_sweep,
-    )
-
-    rows = {r["tau"]: r for r in q_traindata_mixture_hhi(spark, SF).collect()}
-    assert set(rows) == {1, 2, 4}
-    sw = q_traindata_temperature_sweep(spark, SF).collect()
-    import collections
-
-    per = collections.defaultdict(list)
-    for r in sw:
-        per[r["tau"]].append(r["weight_ppm"])
-    for tau, ws in per.items():
-        r = rows[tau]
-        assert r["n_domains"] == len(ws)
-        assert r["hhi_ppm"] == sum(w * w for w in ws) // 1_000_000
-        assert r["uniform_floor_ppm"] == 1_000_000 // len(ws)
-        assert r["hhi_ppm"] >= r["uniform_floor_ppm"] - 1
-    # hotter sampling = flatter mixture = lower concentration
-    hhis = [rows[t]["hhi_ppm"] for t in sorted(rows)]
-    assert hhis[0] > hhis[1] > hhis[2]
-
-
 def test_power_user_migration_matrix(spark):
     from openreviewcrawler_spark.catalog import q_event_power_user_migration
 

@@ -8,6 +8,31 @@ import re
 SF = "/root/testdata/sf0.001"
 
 
+def test_srm_daily_trend(spark):
+    from openreviewcrawler_spark.catalog import q_event_srm_daily_trend
+
+    rows = {r["day"]: r for r in q_event_srm_daily_trend(spark, SF).collect()}
+    assert len(rows) > 10
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    per = collections.defaultdict(lambda: [0, 0])
+    for e in ev:
+        day = int(e["ts"].timestamp() * 1000) // 86400000
+        v = int(re.search(r"([0-9]+)", e["props"]).group(1)) % 2
+        per[day][v] += 1
+    assert set(rows) == set(per)
+    for d, (a, b) in per.items():
+        r = rows[d]
+        assert (r["n_a"], r["n_b"]) == (a, b)
+        chi2 = (a - b) * (a - b) * 1000 // (a + b)
+        assert r["chi2_milli"] == chi2
+        assert r["srm_flag"] == (1 if chi2 > 3841 else 0)
+    # daily samples are small: flags fire occasionally, never daily
+    flags = sum(r["srm_flag"] for r in rows.values())
+    assert flags < len(rows) // 2
+
+
 def test_dedup_granularity_card(spark):
     from openreviewcrawler_spark.catalog import (
         _corpus,

@@ -2,8 +2,46 @@
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_ab_duration_estimate(spark):
+    from openreviewcrawler_spark.catalog import q_event_ab_duration_estimate
+
+    rows = {r["event_type"]: r for r in q_event_ab_duration_estimate(spark, SF).collect()}
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    per = collections.defaultdict(lambda: [0, set(), 0, 0])
+    for e in ev:
+        c = int(
+            math.floor(
+                Decimal(e["value"]).quantize(
+                    Decimal("0.0001"), rounding=ROUND_HALF_UP
+                )
+                * 100
+            )
+        )
+        a = per[e["event_type"]]
+        a[0] += 1
+        a[1].add(int(e["ts"].timestamp() * 1000) // 86400000)
+        a[2] += c
+        a[3] += c * c
+    for t, (n, days, s1, s2) in per.items():
+        r = rows[t]
+        assert (r["n"], r["n_days"]) == (n, len(days))
+        var = (s2 - s1 * s1 / n) / (n - 1)
+        delta = s1 / n / 20
+        need = math.floor(16.0 * var / (delta * delta)) + 1
+        assert r["n_per_arm"] == need
+        assert r["est_days_to_run"] == (need * 2 * len(days) + n - 1) // n
+        # a 5%-lift test on a high-variance metric needs far more
+        # traffic than one fixture month provides
+        assert r["est_days_to_run"] > r["n_days"]
 
 
 def test_host_discovery_curve(spark):

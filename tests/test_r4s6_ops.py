@@ -23,6 +23,137 @@ def _assert_clean(plan: str, *also_banned: str):
         assert op not in plan, f"{op} in plan:\n{plan}"
 
 
+# ---------------------------------------------------------------- funnel
+
+
+def _funnel_events(spark, rows):
+    return spark.createDataFrame(
+        rows, "user_id long, event_id long, event_type string, ts_ms long"
+    )
+
+
+def test_funnel_counts_only_in_order(spark):
+    from openreviewcrawler_spark.operators.events import funnel
+
+    rows = [
+        # user 1: view -> click -> purchase (reaches all three)
+        (1, 1, "view", 100),
+        (1, 2, "click", 200),
+        (1, 3, "purchase", 300),
+        # user 2: purchase, click, THEN view — only the view step counts
+        (2, 4, "purchase", 100),
+        (2, 5, "click", 200),
+        (2, 6, "view", 300),
+        # user 3: view then purchase with NO click — purchase must not count
+        (3, 7, "view", 100),
+        (3, 8, "purchase", 200),
+        # user 4: click before view, then click after view (qualifies)
+        (4, 9, "click", 100),
+        (4, 10, "view", 200),
+        (4, 11, "click", 300),
+    ]
+    out = {r["step"]: r for r in funnel(_funnel_events(spark, rows)).collect()}
+    assert out["view"]["n_users"] == 4
+    assert out["click"]["n_users"] == 2  # users 1 and 4
+    assert out["purchase"]["n_users"] == 1  # user 1 only
+    assert out["view"]["conv_ppm"] == 1000000
+    assert out["click"]["conv_ppm"] == 500000  # 2 of 4
+    assert out["purchase"]["conv_ppm"] == 500000  # 1 of 2
+    assert [out[s]["step_idx"] for s in ("view", "click", "purchase")] == [
+        1,
+        2,
+        3,
+    ]
+
+
+def test_funnel_same_ts_ties_break_by_event_id(spark):
+    from openreviewcrawler_spark.operators.events import funnel
+
+    # click at the SAME ts as the view but a smaller event_id orders first
+    # -> not qualified; the later (event_id) click at the same ts qualifies
+    rows = [
+        (1, 2, "view", 100),
+        (1, 1, "click", 100),  # before the view in (ts, event_id) order
+        (2, 3, "view", 100),
+        (2, 4, "click", 100),  # after the view in (ts, event_id) order
+    ]
+    out = {r["step"]: r for r in funnel(_funnel_events(spark, rows)).collect()}
+    assert out["click"]["n_users"] == 1
+
+
+def test_funnel_plan_single_user_shuffle(spark):
+    from openreviewcrawler_spark.operators.events import funnel
+
+    df = funnel(_funnel_events(spark, [(1, 1, "view", 1)]))
+    plan = _plan(df)
+    _assert_clean(plan)
+    # all three step windows ride ONE user_id exchange (plus the final
+    # single-partition total); no per-step re-shuffle of the event table
+    n_hash_exchanges = plan.count("hashpartitioning(user_id")
+    assert n_hash_exchanges <= 1, plan
+
+
+def test_cohort_retention_offsets(spark):
+    from openreviewcrawler_spark.operators.events import cohort_retention
+
+    wk = 7 * 86400000
+    rows = [
+        (1, 0 * wk),  # cohort week 0
+        (1, 0 * wk + 5),  # same week, still one (user, week) row
+        (1, 2 * wk),  # active again at offset 2
+        (2, 1 * wk),  # cohort week 1
+        (2, 2 * wk),  # offset 1
+    ]
+    ev = spark.createDataFrame(rows, "user_id long, ts_ms long")
+    out = {
+        (r["cohort_week"], r["week_offset"]): r["n_users"]
+        for r in cohort_retention(ev).collect()
+    }
+    assert out == {(0, 0): 1, (0, 2): 1, (1, 0): 1, (1, 1): 1}
+
+
+# ---------------------------------------------------------- outlier top-k
+
+
+def _planted_vectors(spark):
+    # label 0: 9 vectors at ~[1, 0], one far outlier at [9, 9]
+    rows = [(i, 0, [1.0 + 0.01 * i, 0.0]) for i in range(9)]
+    rows.append((99, 0, [9.0, 9.0]))
+    # label 1: tight cluster, vec 200 slightly farther
+    rows += [(100 + i, 1, [0.0, 2.0]) for i in range(5)]
+    rows.append((200, 1, [0.0, 3.0]))
+    return spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>"
+    )
+
+
+def test_outlier_topk_finds_planted_outlier(spark):
+    from openreviewcrawler_spark.operators.similarity import outlier_topk
+
+    out = outlier_topk(_planted_vectors(spark), k=2).collect()
+    by_label = {}
+    for r in out:
+        by_label.setdefault(r["label"], []).append(r)
+    top0 = min(by_label[0], key=lambda r: r["rank"])
+    assert top0["vec_id"] == 99
+    top1 = min(by_label[1], key=lambda r: r["rank"])
+    assert top1["vec_id"] == 200
+    assert all(r["dist"] >= 0 for r in out)
+
+
+def test_outlier_topk_partitioning_invariant(spark):
+    """Two-phase top-k is a semilattice: result identical under any input
+    partitioning (the property that makes the per-partition prune safe)."""
+    from openreviewcrawler_spark.operators.similarity import outlier_topk
+
+    v = _planted_vectors(spark)
+    a = sorted(map(tuple, outlier_topk(v, k=3).collect()))
+    b = sorted(map(tuple, outlier_topk(v.repartition(7), k=3).collect()))
+    c = sorted(map(tuple, outlier_topk(v.coalesce(1), k=3).collect()))
+    assert a == b == c
+    _assert_clean(_plan(outlier_topk(v, k=3)))
+
+
 # ------------------------------------------------------------ co-citation
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,3 +42,38 @@ def test_homograph_detection(spark):
     # confusable proves the join is a detector, not a rubber stamp
     assert any(r["impersonates_existing"] for r in rows.values())
     assert any(not r["impersonates_existing"] for r in rows.values())
+
+
+def test_early_value_ltv_corr(spark):
+    from openreviewcrawler_spark.catalog import q_event_early_value_ltv_corr
+
+    [row] = q_event_early_value_ltv_corr(spark, SF).collect()
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    per = collections.defaultdict(lambda: [None, Decimal(0), Decimal(0)])
+    for e in ev:
+        t = int(e["ts"].timestamp() * 1000)
+        a = per[e["user_id"]]
+        if a[0] is None or t < a[0]:
+            a[0] = t
+    q4 = Decimal("0.0001")
+    for e in ev:
+        t = int(e["ts"].timestamp() * 1000)
+        a = per[e["user_id"]]
+        v = Decimal(e["value"]).quantize(q4, rounding=ROUND_HALF_UP)
+        a[2] += v
+        if t < a[0] + 604800000:
+            a[1] += v
+    xs = [int(math.floor(a[1] * 100)) for a in per.values()]
+    ys = [int(math.floor(a[2] * 100)) for a in per.values()]
+    m = len(xs)
+    assert row["n_users"] == m
+    sx, sy = sum(xs), sum(ys)
+    sxy = sum(x * y for x, y in zip(xs, ys))
+    sxx, syy = sum(x * x for x in xs), sum(y * y for y in ys)
+    num = m * sxy - sx * sy
+    den = math.sqrt(m * sxx - sx * sx) * math.sqrt(m * syy - sy * sy)
+    assert abs(row["r_corr"] - math.floor(num / den * 1e6) / 1e6) < 2e-6
+    # week-one spend is a real (positive) early signal on this fixture
+    assert row["r_corr"] > 0

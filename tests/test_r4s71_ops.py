@@ -2,8 +2,40 @@
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_rolling_revenue_7d(spark):
+    from openreviewcrawler_spark.catalog import q_event_rolling_revenue_7d
+
+    rows = sorted(q_event_rolling_revenue_7d(spark, SF).collect(), key=lambda r: r["day"])
+    assert rows
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    import collections
+
+    daily = collections.defaultdict(Decimal)
+    q4 = Decimal("0.0001")
+    for e in ev:
+        daily[int(e["ts"].timestamp() * 1000) // 86400000] += Decimal(
+            e["value"]
+        ).quantize(q4, rounding=ROUND_HALF_UP)
+    days = sorted(daily)
+    cents = {d: int(math.floor(daily[d] * 100)) for d in days}
+    assert [r["day"] for r in rows] == days
+    for i, r in enumerate(rows):
+        window = days[max(0, i - 6) : i + 1]
+        assert r["day_cents"] == cents[r["day"]]
+        assert r["trailing_7d_cents"] == sum(cents[d] for d in window)
+        assert r["n_days_in_window"] == len(window)
+    # the trailing sum smooths: its spread is tighter than the daily's
+    dvals = [r["day_cents"] for r in rows[6:]]
+    tvals = [r["trailing_7d_cents"] for r in rows[6:]]
+    assert (max(tvals) - min(tvals)) / max(tvals) < (
+        max(dvals) - min(dvals)
+    ) / max(dvals)
 
 
 def test_error_budget_burn(spark):

@@ -110,3 +110,247 @@ def test_session_param_plan_one_scan_no_join(spark):
     plan = _plan(q_url_session_param_detect(spark, SF))
     _assert_clean(plan, "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
     assert plan.count("FileScan parquet") == 1, plan
+
+
+# --------------------------------------------------------- event_type_affinity
+
+
+def test_affinity_lift_matches_python_model(spark):
+    from openreviewcrawler_spark.catalog import q_event_type_affinity
+
+    rows = q_event_type_affinity(spark, SF).collect()
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    ut = {(e["user_id"], e["event_type"]) for e in ev}
+    users = {u for u, _ in ut}
+    by_type = {}
+    for u, t in ut:
+        by_type.setdefault(t, set()).add(u)
+    for r in rows:
+        assert r["type_a"] < r["type_b"]
+        both = by_type[r["type_a"]] & by_type[r["type_b"]]
+        assert r["n_both"] == len(both)
+        assert r["n_a"] == len(by_type[r["type_a"]])
+        assert r["n_b"] == len(by_type[r["type_b"]])
+        lift = len(both) * len(users) * 1_000_000 // (r["n_a"] * r["n_b"])
+        assert r["lift_ppm"] == lift
+
+
+def test_affinity_pair_count_bounded_by_type_vocab(spark):
+    from openreviewcrawler_spark.catalog import q_event_type_affinity
+
+    rows = q_event_type_affinity(spark, SF).collect()
+    types = {r["type_a"] for r in rows} | {r["type_b"] for r in rows}
+    n = len(types)
+    assert len(rows) <= n * (n - 1) // 2
+
+
+def test_affinity_self_join_reads_persisted_table(spark):
+    from openreviewcrawler_spark.caching import release_persisted
+    from openreviewcrawler_spark.catalog import q_event_type_affinity
+
+    try:
+        df = q_event_type_affinity(spark, SF)
+        plan = _plan(df)
+        # the 1-row n_users totals attach via the accepted single-row
+        # broadcast (folds to BroadcastNestedLoopJoin) — ban only the
+        # corpus-sized hazards
+        assert "CartesianProduct" not in plan, plan
+        assert "BatchEvalPython" not in plan, plan
+        # both self-join sides (plus the totals derivations) read the cached
+        # distinct (user, type) table, not a re-run of the events scan
+        # (InMemoryTableScan printouts embed the cached child's FileScan, so
+        # count readers, not scans)
+        assert plan.count("InMemoryTableScan") >= 2, plan
+        df.collect()
+    finally:
+        release_persisted()
+
+
+# ---------------------------------------------------------- event_rfm_segments
+
+
+def _rfm_model(spark):
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    per_user = {}
+    for e in ev:
+        ms = int(e["ts"].timestamp() * 1000)
+        u = per_user.setdefault(e["user_id"], [0, 0, 0.0])
+        u[0] = max(u[0], ms)
+        u[1] += 1
+        u[2] += round(float(e["value"]), 4)
+    gmax = max(u[0] for u in per_user.values())
+    segs = {}
+    for last_ms, freq, msum in per_user.values():
+        rd = (gmax - last_ms) // 86_400_000
+        r = 3 if rd <= 0 else 2 if rd <= 1 else 1
+        f = 3 if freq >= 70 else 2 if freq >= 55 else 1
+        m = 3 if msum >= 3600 else 2 if msum >= 2800 else 1
+        seg = f"R{r}F{f}M{m}"
+        s = segs.setdefault(seg, [0, 0, 0])
+        s[0] += 1
+        s[1] += freq
+        s[2] += int(round(msum * 100))
+    return segs
+
+
+def test_rfm_segments_match_python_model(spark):
+    from openreviewcrawler_spark.catalog import q_event_rfm_segments
+
+    rows = {r["segment"]: r for r in q_event_rfm_segments(spark, SF).collect()}
+    segs = _rfm_model(spark)
+    assert set(rows) == set(segs)
+    for seg, (n, ne, cents) in segs.items():
+        assert rows[seg]["n_users"] == n
+        assert rows[seg]["n_events"] == ne
+        assert rows[seg]["value_cents"] == cents
+
+
+def test_rfm_segments_discriminate(spark):
+    from openreviewcrawler_spark.catalog import q_event_rfm_segments
+
+    rows = q_event_rfm_segments(spark, SF).collect()
+    assert len(rows) >= 3, "tier thresholds collapsed to one segment"
+
+
+def test_rfm_plan_one_user_shuffle(spark):
+    from openreviewcrawler_spark.catalog import q_event_rfm_segments
+
+    from openreviewcrawler_spark.caching import release_persisted
+
+    try:
+        plan = _plan(q_event_rfm_segments(spark, SF))
+        # per-user aggregate (persisted once) + bounded segment rollup; the
+        # 1-row global-max attach is the accepted single-row broadcast
+        assert "CartesianProduct" not in plan, plan
+        assert "BatchEvalPython" not in plan, plan
+        assert "InMemoryTableScan" in plan, plan
+    finally:
+        release_persisted()
+
+
+# ----------------------------------------------------- event_session_path_topk
+
+
+def test_session_paths_match_python_model(spark):
+    from openreviewcrawler_spark.catalog import q_event_session_path_topk
+
+    rows = q_event_session_path_topk(spark, SF).collect()
+    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
+    by_user = {}
+    for e in ev:
+        by_user.setdefault(e["user_id"], []).append(
+            (int(e["ts"].timestamp() * 1000), e["event_id"], e["event_type"])
+        )
+    paths = {}
+    for seq in by_user.values():
+        seq.sort()
+        sess, last = [], None
+        for ms, _eid, et in seq:
+            if last is None or ms - last > 1_800_000:
+                if sess:
+                    p = ">".join(sess[:3])
+                    paths[p] = paths.get(p, 0) + 1
+                sess = []
+            sess.append(et)
+            last = ms
+        if sess:
+            p = ">".join(sess[:3])
+            paths[p] = paths.get(p, 0) + 1
+    top = sorted(paths.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+    got = sorted(((r["path"], r["n_sessions"]) for r in rows),
+                 key=lambda kv: (-kv[1], kv[0]))
+    assert got == top
+
+
+def test_session_paths_ranked_and_bounded(spark):
+    from openreviewcrawler_spark.catalog import q_event_session_path_topk
+
+    rows = sorted(q_event_session_path_topk(spark, SF).collect(),
+                  key=lambda r: r["rank"])
+    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+    for a, b in zip(rows, rows[1:]):
+        assert (a["n_sessions"], b["path"]) >= (b["n_sessions"], a["path"])
+    for r in rows:
+        assert 1 <= len(r["path"].split(">")) <= 3
+
+
+def test_session_paths_plan_single_user_exchange(spark):
+    from openreviewcrawler_spark.catalog import q_event_session_path_topk
+
+    plan = _plan(q_event_session_path_topk(spark, SF))
+    _assert_clean(plan, "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+    # gap flag, session id and in-session row_number share ONE user_id
+    # exchange (HashPartitioning(user) satisfies the (user, sess)
+    # clustering); + one for the bounded path rollup
+    assert plan.count("Exchange hashpartitioning") <= 2, plan
+
+
+# ------------------------------------------------------ embedding_hamming_topk
+
+
+def test_hamming_signature_and_rerank_semantics(spark):
+    from openreviewcrawler_spark.catalog import q_embedding_hamming_topk
+
+    rows = q_embedding_hamming_topk(spark, SF).collect()
+    assert rows
+    emb = {r["vec_id"]: list(r["embedding"])
+           for r in spark.read.parquet(f"{SF}/embeddings.parquet").collect()}
+
+    def words(v):
+        b0 = sum((1 << i) for i in range(32) if v[i] >= 0)
+        b1 = sum((1 << i) for i in range(32) if v[32 + i] >= 0)
+        return b0, b1
+
+    import math
+
+    for r in rows:
+        qa, qb = words(emb[r["query_id"]])
+        ca, cb = words(emb[r["cand_id"]])
+        ham = bin(qa ^ ca).count("1") + bin(qb ^ cb).count("1")
+        assert r["hamming"] == ham
+        q, c = emb[r["query_id"]], emb[r["cand_id"]]
+        dot = sum(float(x) * float(y) for x, y in zip(q, c))
+        cos = dot / (
+            math.sqrt(sum(float(x) ** 2 for x in q))
+            * math.sqrt(sum(float(y) ** 2 for y in c))
+        )
+        # python fold order differs from the engines' — tolerance, not repr
+        assert abs(r["cos_mil"] - math.floor(cos * 1000)) <= 1
+
+
+def test_hamming_topk_shape_per_query(spark):
+    from openreviewcrawler_spark.catalog import q_embedding_hamming_topk
+    from openreviewcrawler_spark.operators.similarity import HAM_K
+
+    rows = q_embedding_hamming_topk(spark, SF).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r)
+    for qid, rs in by_q.items():
+        assert qid % 50 == 0
+        assert len(rs) == HAM_K
+        assert sorted(r["rank"] for r in rs) == list(range(1, HAM_K + 1))
+        ranked = sorted(rs, key=lambda r: r["rank"])
+        for a, b in zip(ranked, ranked[1:]):
+            assert a["cos_mil"] >= b["cos_mil"] - 1  # floor projection slack
+
+
+def test_hamming_plan_broadcasts_queries_keeps_codegen(spark):
+    from openreviewcrawler_spark.catalog import q_embedding_hamming_topk
+
+    plan = _plan(q_embedding_hamming_topk(spark, SF))
+    # the query side is a bounded broadcast joined on a non-equi predicate
+    # (cand != query) — BroadcastNestedLoopJoin over the bounded side is the
+    # designed shape (same as ann_brute_topk); ban the corpus-sized hazards
+    assert "CartesianProduct" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+    assert "BroadcastExchange" in plan, plan
+    # the 64-term sign-word sum must stay inside whole-stage codegen — AQE
+    # only marks codegen spans in the FINAL plan, so materialize first
+    df = q_embedding_hamming_topk(spark, SF)
+    df.collect()
+    final = _plan(df)
+    import re
+
+    assert re.search(r"\*\(\d+\) Project", final), final

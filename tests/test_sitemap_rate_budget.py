@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from openreviewcrawler_spark.operators.packing import token_budget_trim
 from openreviewcrawler_spark.operators.robots import sitemap_directives
 from openreviewcrawler_spark.operators.stats import rate_timeseries
 
@@ -39,6 +40,29 @@ def test_sitemap_directives_position_independent_and_crlf(spark):
     }
     assert per_host["a"] == expected
     assert per_host["b"] == expected  # CRLF host parses identically
+
+
+def test_token_budget_trim_greedy_prefix_and_straddler(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, 90, 40),  # best: fits (prefix 0)
+            (2, 80, 50),  # fits (prefix 40)
+            (3, 70, 20),  # straddles 100 budget at prefix 90 -> dropped whole
+            (4, 60, 10),  # prefix is STILL 110 (greedy order, not knapsack)
+        ],
+        "doc_id long, score long, n_tokens long",
+    )
+    kept = {r["doc_id"]: r for r in token_budget_trim(docs, budget=100).collect()}
+    assert set(kept) == {1, 2}
+    assert kept[1]["tok_prefix"] == 0 and kept[2]["tok_prefix"] == 40
+
+
+def test_token_budget_trim_score_ties_break_on_id(spark):
+    docs = spark.createDataFrame(
+        [(2, 50, 60), (1, 50, 60)], "doc_id long, score long, n_tokens long"
+    )
+    kept = [r["doc_id"] for r in token_budget_trim(docs, budget=60).collect()]
+    assert kept == [1]  # same score: smaller id first
 
 
 def test_rate_timeseries_buckets_and_exact_sums(spark):

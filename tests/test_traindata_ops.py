@@ -1,5 +1,5 @@
-"""Training-data pipeline operators: dedup family, embedding LSH bands, text
-stats — plus a sampled catalog-vs-DuckDB oracle gate
+"""Training-data pipeline operators: dedup family, similarity search, text
+stats, multimodal plumbing — plus a sampled catalog-vs-DuckDB oracle gate
 (the same comparison the driver runs at sf0.01, here at sf0.001 on a fast
 subset; scripts/check_oracle.py covers the full catalog)."""
 
@@ -9,7 +9,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from openreviewcrawler_spark.operators import dedup, similarity
+from openreviewcrawler_spark.operators import dedup, multimodal, similarity
 from openreviewcrawler_spark.operators.textstats import (
     fingerprint_cols,
     lang_id_col,
@@ -79,7 +79,7 @@ def test_ngram_jaccard_exact(corpus):
     assert (0, 3) not in pairs  # no shared shingles at all
 
 
-def test_embedding_near_dups(spark):
+def test_embedding_near_dups_and_ann(spark):
     vecs = [
         (0, [1.0, 0.0, 0.0, 0.0], 0),
         (1, [1.0, 0.0, 0.0, 0.0], 0),      # exact dup of 0
@@ -90,6 +90,61 @@ def test_embedding_near_dups(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>, label int")
     near = {(r["vec_a"], r["vec_b"]) for r in dedup.embedding_near_pairs(df, 0.95).collect()}
     assert (0, 1) in near and (0, 3) not in near
+
+    top = similarity.brute_topk(df, n_queries=1, k=2).collect()
+    assert [r["cand_id"] for r in sorted(top, key=lambda r: r["rank"])] == [1, 2]
+
+    ivf = similarity.ivf_topk(df, n_queries=1, k=4).collect()
+    assert all(r["cand_id"] != 4 for r in ivf)  # other cell never probed
+
+    sig = {r["vec_id"]: r["sig"] for r in similarity.lsh_signatures(df).collect()}
+    assert sig[0] == sig[1]  # identical vectors -> identical signature
+
+    # LSH retrieval answers the ANN query: the exact dup is always in a
+    # shared bucket and ranks first with cos 1.0.
+    lsh = similarity.ann_lsh_topk(df, n_queries=1, k=3).collect()
+    first = [r for r in lsh if r["rank"] == 1]
+    assert first and first[0]["cand_id"] == 1 and first[0]["cos"] == 1.0
+
+
+def test_ivf_recall_against_brute_force(spark, sf_dir):
+    """VERDICT r1 item 9 gate: seeded-quantizer IVF with probe=2 must agree
+    with brute-force top-k on a healthy fraction of hits (it's approximate —
+    cells prune candidates — but on real embeddings recall@3 should be well
+    above random)."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    brute = {(r["query_id"], r["cand_id"])
+             for r in similarity.brute_topk(emb, n_queries=16, k=3).collect()}
+    ivf = {(r["query_id"], r["cand_id"])
+           for r in similarity.ivf_topk(emb, n_queries=16, k=3).collect()}
+    recall = len(brute & ivf) / len(brute)
+    assert recall >= 0.5, f"IVF recall@3 {recall:.2f} vs brute force"
+
+
+def test_lsh_topk_recall_against_brute_force_on_near_dups(spark, sf_dir):
+    """VERDICT r2 item 5 gate: ann_lsh_topk vs brute_topk recall@1 on a
+    corpus that actually CONTAINS near-neighbors (each query gets a
+    deterministic ~0.99-cos perturbed copy; random sf embeddings alone have
+    no high-cos pairs, top-1 cos ~0.37). At cos ~0.99 the per-band collision
+    probability is ~(1-theta/pi)^8 ~ 0.7, so 3 bands give ~0.97 expected
+    recall — assert a conservative 0.8."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    near = emb.filter(F.col("vec_id") < 16).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform(
+            F.col("embedding"),
+            lambda x, i: x * (F.lit(1.0) + F.lit(0.15) * (i == 0).cast("double")),
+        ).cast("array<float>").alias("embedding"),
+        "label",
+    )
+    corpus = emb.unionByName(near)
+    brute1 = {r["query_id"]: r["cand_id"]
+              for r in similarity.brute_topk(corpus, n_queries=16, k=1).collect()}
+    lsh = similarity.ann_lsh_topk(corpus, n_queries=16, k=1).collect()
+    lsh1 = {r["query_id"]: r["cand_id"] for r in lsh if r["rank"] == 1}
+    hits = sum(1 for q, c in brute1.items() if lsh1.get(q) == c)
+    recall = hits / len(brute1)
+    assert recall >= 0.8, f"LSH recall@1 {recall:.2f} vs brute force"
 
 
 def test_lsh_plane_dial_parameterized_by_dim():
@@ -105,6 +160,24 @@ def test_lsh_plane_dial_parameterized_by_dim():
     assert similarity.plane_components(3, 768) == p768  # deterministic
 
 
+def test_lsh_topk_finds_duplicates(spark, sf_dir):
+    """LSH retrieval guarantee: a query with an exact duplicate in the corpus
+    ALWAYS retrieves it at rank 1 / cos 1.0 (identical vector -> identical
+    signature -> same bucket in every band). Random sf embeddings have no
+    high-cos neighbors (top-1 cos ~0.37), so — correctly — LSH is not
+    expected to reproduce brute-force results there; near-dup recall is what
+    the operator promises and what's asserted."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    dup = emb.filter(F.col("vec_id") % 8 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding", "label"
+    )
+    corpus = emb.unionByName(dup)
+    lsh = similarity.ann_lsh_topk(corpus, n_queries=16, k=5).collect()
+    got_rank1 = {r["query_id"]: (r["cand_id"], r["cos"]) for r in lsh if r["rank"] == 1}
+    for q in (0, 8):  # queries whose exact duplicate exists at q+100000
+        assert got_rank1[q] == (q + 100000, 1.0), got_rank1.get(q)
+
+
 def test_lang_id_and_fingerprint(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string, lang string")
     pred = {r["doc_id"]: r["p"] for r in df.select(
@@ -118,6 +191,27 @@ def test_lang_id_and_fingerprint(spark):
     assert 0 <= rows[0][1] < 2147483647
 
 
+def test_multimodal_plumbing(spark):
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string, lang string")
+    assets = multimodal.assets_from_documents(docs)
+    meta = {r["asset_id"]: r for r in multimodal.decode_metadata(assets).collect()}
+    for d, text, _l in DOCS:
+        assert meta[d]["n_bytes"] == len(text.encode())
+        assert meta[d]["width"] == len(text.encode()) % 640 + 1
+        assert meta[d]["height"] == text.encode()[0] + 1
+    frames = multimodal.sample_frames(assets).collect()
+    vids = [d for d, _t, _l in DOCS if d % 3 == 2]
+    assert {r["asset_id"] for r in frames} == set(vids)
+    by_asset = {}
+    for r in frames:
+        by_asset.setdefault(r["asset_id"], []).append(r)
+    for aid, fr in by_asset.items():
+        assert sorted(f["frame_idx"] for f in fr) == [0, 1, 2]
+        n = [len(t.encode()) for d, t, _l in DOCS if d == aid][0]
+        assert all(f["frame_len"] == n // 3 for f in fr)
+        assert all(len(bytes(f["frame_bytes"])) == f["frame_len"] for f in fr)
+
+
 # --- sampled cross-engine oracle gate ---------------------------------------
 
 ORACLE_SUBSET = [
@@ -127,6 +221,8 @@ ORACLE_SUBSET = [
     "doc_fingerprint",
     "reply_forest",
     "label_cascade",
+    "ann_ivf_topk",
+    "ann_lsh_topk",
     "dedup_simhash",
 ]
 
@@ -199,6 +295,46 @@ def test_connected_components_deep_chain_past_fast_probes(spark):
     assert comp == {i: 0 for i in range(13)}
     with pytest.warns(RuntimeWarning, match="fixpoint not confirmed"):
         dedup.connected_components(edges, nodes, max_iter=3).collect()
+
+
+def test_stratified_sample_deterministic_rates(spark, sf_dir):
+    """md5-coin sampling: reproducible decisions, per-stratum rates near
+    target, disjoint salts give different (independent) samples."""
+    from openreviewcrawler_spark.operators.textstats import stratified_sample_flag
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    flag = stratified_sample_flag(F.col("doc_id"), F.col("lang"), {"en": 0.5})
+    kept1 = {r["doc_id"] for r in docs.filter(flag).collect()}
+    kept2 = {r["doc_id"] for r in docs.filter(flag).collect()}
+    assert kept1 == kept2  # same coin every run
+    n_en = docs.filter(F.col("lang") == "en").count()
+    if n_en >= 50:
+        assert 0.35 <= len(kept1) / n_en <= 0.65  # ~50% of en, 0% of rest
+    assert docs.filter(flag & (F.col("lang") != "en")).count() == 0
+    other = stratified_sample_flag(
+        F.col("doc_id"), F.col("lang"), {"en": 0.5}, salt="samp2"
+    )
+    kept3 = {r["doc_id"] for r in docs.filter(other).collect()}
+    assert kept3 != kept1  # independent coin under a different salt
+
+
+def test_decontaminate_flags_eval_leaks(corpus, spark):
+    """Doc 1 (exact copy of eval doc 0) and doc 2 (near copy) must be
+    flagged; doc 3/4 (disjoint vocabulary) must not. The eval inverted
+    index is broadcast — plan must show a broadcast join, never a shuffle
+    of the train shingles toward the tiny eval side."""
+    ev = corpus.filter(F.col("doc_id") == 0).select(
+        F.col("doc_id").alias("eval_id"), "text"
+    )
+    train = corpus.filter(F.col("doc_id") != 0)
+    out = dedup.decontaminate_ngrams(train, ev, n=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    rows = {r["doc_id"]: r for r in out.collect()}
+    assert set(rows) == {1, 2}
+    # exact dup shares every shingle; the near dup all but the leading ones
+    assert rows[1]["n_hit_ngrams"] > rows[2]["n_hit_ngrams"] >= 1
+    assert rows[1]["n_eval_docs"] == rows[2]["n_eval_docs"] == 1
 
 
 def test_repetition_cols_values(spark):
@@ -275,6 +411,29 @@ def test_lsh_768d_configuration_end_to_end(spark):
     assert others < 20
 
 
+def test_embedding_qa_counts_planted_defects(spark):
+    from openreviewcrawler_spark.operators.similarity import embedding_qa
+
+    rows = [
+        (1, [3.0, 4.0], 0),          # norm 5
+        (2, [0.0, 0.0], 0),          # zero vector
+        (3, [1.0, float("nan")], 0), # NaN element
+        (4, [2.0], 1),               # ragged: dim 1
+        (5, [0.0, 2.0], 1),          # norm 2
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    by = {r["label"]: r for r in embedding_qa(df).collect()}
+    a = by[0]
+    assert (a["n_vectors"], a["min_dim"], a["max_dim"]) == (3, 2, 2)
+    assert (a["n_zero_norm"], a["n_nan"]) == (1, 1)
+    assert a["min_norm"] == 0.0  # NaN sorts greatest in Spark: min unaffected
+    b = by[1]
+    assert (b["n_vectors"], b["min_dim"], b["max_dim"]) == (2, 1, 2)
+    assert (b["min_norm"], b["max_norm"], b["mean_norm"]) == (2.0, 2.0, 2.0)
+
+
 def test_semantic_dedup_keeps_lowest_id_of_near_group(spark):
     from openreviewcrawler_spark.operators.similarity import semantic_dedup
 
@@ -292,6 +451,40 @@ def test_semantic_dedup_keeps_lowest_id_of_near_group(spark):
     assert by[2] is False
     assert by[3] is True
     assert by[4] is False
+
+
+def test_quantize_qa_error_bound_and_degenerate_vector(spark):
+    from openreviewcrawler_spark.operators.similarity import quantize_qa
+
+    rows = [
+        (1, [0.0, 0.5, 1.0]),
+        (2, [7.25, 7.25, 7.25]),          # constant: lossless via dummy scale
+        (3, [-2.0 + i / 16.0 for i in range(64)]),
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    out = {r["vec_id"]: r for r in quantize_qa(vecs).collect()}
+    # affine int8 bound: |err| <= scale/2 always
+    for vid in (1, 3):
+        assert out[vid]["max_abs_err"] <= out[vid]["scale"] / 2 + 1e-12
+        assert out[vid]["max_abs_err"] >= 0.0
+    assert out[2]["scale"] == 0.0
+    assert out[2]["max_abs_err"] == 0.0
+    assert out[2]["n_coarse"] == 0
+    # endpoints quantize exactly, so vec 1's worst error is the midpoint's
+    assert out[1]["max_abs_err"] > 0.0
+
+
+def test_quantize_qa_plan_is_shuffle_free(spark, sf_dir):
+    from openreviewcrawler_spark.catalog import q_embedding_quantize_qa
+
+    plan = (
+        q_embedding_quantize_qa(spark, sf_dir)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
 
 
 def test_sentence_cols_boundary_counting(spark):
@@ -327,6 +520,73 @@ def test_readability_counts_and_band(spark):
     assert r1["band"] == "very_easy"
     r2 = out[2]
     assert r2["n_sentences"] == 1 and r2["n_syllables"] == 0
+
+
+def test_centroid_drift_two_labels(spark):
+    import duckdb
+
+    from openreviewcrawler_spark.operators.similarity import (
+        SQL_CENTROID_DRIFT,
+        centroid_drift,
+    )
+
+    rows = [
+        (1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0),   # label 0 centroid (1,0)
+        (3, [0.0, 1.0], 1), (4, [0.0, 1.0], 1),   # label 1 centroid (0,1)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    got = {r["label"]: r for r in centroid_drift(df).collect()}
+    # global centroid (0.5, 0.5); drift each = sqrt(0.25+0.25)
+    import math
+    want_drift = math.floor(math.sqrt(0.5) * 1e6) / 1e6
+    assert got[0]["n_vectors"] == 2 and got[1]["n_vectors"] == 2
+    assert got[0]["drift_to_global"] == want_drift
+    assert got[0]["centroid_norm"] == 1.0
+    con = duckdb.connect()
+    import pandas as pd
+
+    con.register(
+        "embeddings",
+        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"]),
+    )
+    oracle = {r[0]: r for r in con.sql(SQL_CENTROID_DRIFT).fetchall()}
+    for lbl in (0, 1):
+        g = got[lbl]
+        assert (g["n_vectors"], g["centroid_norm"], g["drift_to_global"]) == (
+            oracle[lbl][1], oracle[lbl][2], oracle[lbl][3],
+        )
+
+
+def test_dim_stats_detects_dead_and_zero_dims(spark):
+    import duckdb
+    import pandas as pd
+
+    from openreviewcrawler_spark.operators.similarity import (
+        SQL_DIM_STATS,
+        dim_stats,
+    )
+
+    rows = [
+        (1, [0.5, 7.0, 0.0], 0),
+        (2, [-0.25, 7.0, 1.0], 0),
+        (3, [0.75, 7.0, 0.0], 1),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    got = {r["pos"]: r for r in dim_stats(df).collect()}
+    assert got[2]["is_dead"] and got[2]["vmin"] == 7.0
+    assert not got[1]["is_dead"] and got[1]["n"] == 3
+    assert got[3]["n_zero"] == 2
+    con = duckdb.connect()
+    con.register(
+        "embeddings", pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
+    )
+    want = {r[0]: r for r in con.sql(SQL_DIM_STATS).fetchall()}
+    for pos in (1, 2, 3):
+        g = got[pos]
+        assert (g["n"], g["vmin"], g["vmax"], g["mean"], g["n_zero"],
+                g["is_dead"]) == want[pos][1:]
 
 
 def test_unicode_profile_flags_mojibake_and_controls(spark):
